@@ -51,44 +51,12 @@ object Bench {
   private[graft] def jsonVal(v: Either[String, Double]): String =
     v.fold(_ => "\"failed\"", _.toString)
 
-  /** (isolated/prior ratio, verdict) for a flagged regression entry.
-    *
-    * The r16 lesson (judge item 5): the isolated re-runs execute at
-    * the END of the sweep in the same JVM, inherit residual page-cache
-    * /GC state, and stamped "real" on an untouched query whose judge
-    * re-run on an idle host sat inside its historical band. So a
-    * confirmed-in-isolation move is no longer enough to say "real":
-    *
-    *  - "noise"       — isolated lands back within 1.5× of the prior
-    *                    median (either direction): host contention.
-    *  - "noise_band"  — outside 1.5× of prior, but inside the query's
-    *                    own HISTORICAL band of round medians ×1.5
-    *                    (bench_prior's band_lo/band_hi sections, merged
-    *                    min/max across rounds) — the query has measured
-    *                    there before on unchanged code.
-    *  - "suspect"     — outside prior AND band this round, FIRST time.
-    *                    Recorded in `pending_real` (with the original
-    *                    prior) and re-checked next round.
-    *  - "real"        — outside prior AND band, AND the same query was
-    *                    already pending from the previous round: two
-    *                    consecutive rounds of independent isolated
-    *                    confirmation.
-    */
-  private[graft] def regressionVerdict(prior: Double, isolated: Double,
-                                       band: Option[(Double, Double)] = None,
-                                       priorPending: Boolean = false): (Double, String) = {
-    val ri = isolated / math.max(prior, 1e-9)
-    val withinPrior = ri < 1.5 && ri > 1.0 / 1.5
-    val withinBand = band.exists { case (lo, hi) =>
-      isolated <= hi * 1.5 && isolated >= lo / 1.5
-    }
-    val verdict =
-      if (withinPrior) "noise"
-      else if (withinBand) "noise_band"
-      else if (priorPending) "real"
-      else "suspect"
-    (ri, verdict)
-  }
+  /** Fixed-precision decimal for every number Bench formats itself:
+    * the output is a machine-read contract, so `.` is the separator
+    * whatever the JVM's default locale (a de_DE host would otherwise
+    * emit `1,235` and break every parser downstream). */
+  private[graft] def dec(v: Double, digits: Int): String =
+    s"%.${digits}f".formatLocal(java.util.Locale.ROOT, v)
 
   /** Extract one `"<key>": { "name": sec, ... }` section of a prior
     * bench line (machine-written by this same main — fixed shape; no
@@ -100,321 +68,95 @@ object Bench {
       .map(m => m.group(1) -> m.group(2).toDouble).toMap
   }
 
-  /** Flag >1.5× moves vs prior (either direction, above a noise
-    * floor) and — unless `attribute` is false — re-measure each
-    * flagged query isolated and stamp a verdict into the entry (see
-    * [[regressionVerdict]] for the four verdicts).
-    *
-    * The flag threshold MUST match [[regressionVerdict]]'s 1.5×
-    * noise bound: a wider trigger (the original 3×) left every
-    * 1.5–3× drift both un-isolated AND merged into the historical
-    * band — four 2–3× dedup-family regressions flowed through that
-    * hole in one round, each one's band_hi self-extending to its own
-    * regressed median, so no later round could ever flag it.
-    *
-    * Isolated re-runs take the MIN of their runs, not the median: the
-    * contamination they exist to rule out (residual page-cache/GC/JIT
-    * state from 120+ earlier gates in the same JVM) biases strictly
-    * UPWARD, so a single run at prior speed proves the code can still
-    * hit it — exactly the attribution question. A System.gc() hint
-    * runs before each re-run for the same reason.
-    *
-    * `pendingPrior` carries last round's "suspect" entries with their
-    * ORIGINAL prior medians: those queries are re-checked this round
-    * even when the sweep did not re-flag them (the refreshed prior
-    * median would otherwise absorb a real regression after one round
-    * and the two-round confirmation could never fire). Returns the
-    * JSON array, the NEW pending map to publish for next round, and
-    * the set of names that must be EXCLUDED from this round's band
-    * merge — every flagged or pending query, whatever its verdict: a
-    * suspect's regressed median entering band_hi would stamp next
-    * round's confirmation "noise_band" (the same absorption hole the
-    * pending mechanism closes on the prior median), and a noise
-    * verdict's 12× contention outlier would poison the band forever.
-    *
-    * `histMin` (r19) is min(last 3 rounds' medians) per query — the
-    * hist_window tripwire: a drift under 1.5× per round but over 1.5×
-    * vs that floor is flagged too, band-ignored on verdict (the band
-    * self-extended through each unflagged step). Hist-origin suspects
-    * carry in `pendingHistPrior` (NOT `pendingPrior`) and their
-    * rechecks ("pending_recheck_hist") also ignore the band — the
-    * crept value already merged into band_hi during the unflagged
-    * steps, so a band-consulting recheck would stamp the confirmation
-    * "noise_band" and the compound drift could never confirm `real`
-    * (review finding, r19).
-    *
-    * Returns (entries JSON, new sweep-origin pending, new hist-origin
-    * pending, band-exclusion set, CONFIRMED levels). The confirmed map
-    * (r20, judge item 2 + ADVICE) carries each `real`-verdicted
-    * query's isolated level: the caller re-seeds that query's band to
-    * it (a retired improvement's stale band_hi must not hide a later
-    * regression back to the old cost) and lifts its queries_h2/h3
-    * history carry to it (histMin would otherwise keep the
-    * pre-change median for 2 more rounds and re-flag the accepted
-    * change, violating the retirement invariant). The band-exclusion
-    * set is ALSO emitted as this round's `flagged` section and carried
-    * two rounds (`flagged_h2/h3`) so the band/hist windows can skip a
-    * flagged round's median — the sweep medians stay the ONE history
-    * estimator (substituting isolated minimums was tried and creates a
-    * permanent re-flag loop for any query whose steady-state sweep
-    * median exceeds 1.5× its isolated floor — review finding r20b),
-    * while a contention round's 12× outlier still never re-enters the
-    * band max after its one-round exclusion expires.
-    */
-  private[graft] def attributedRegressionsJson(
-      spark: SparkSession, dir: String,
-      results: Seq[(String, Either[String, Double])],
-      prior: Map[String, Double], floor: Double,
-      attribute: Boolean, isolatedRuns: Int,
-      band: Map[String, (Double, Double)] = Map.empty,
-      pendingPrior: Map[String, Double] = Map.empty,
-      histMin: Map[String, Double] = Map.empty,
-      pendingHistPrior: Map[String, Double] = Map.empty)
-      : (String, Map[String, Double], Map[String, Double], Set[String],
-         Map[String, Double]) = {
-    // pending names take PRECEDENCE over the sweep flag (review
-    // finding r19b): a pending that also trips the sweep used to ride
-    // the sweep entry — verdicted against the REFRESHED (already
-    // crept) prior with the band consulted — so one contention spike
-    // in the confirmation round retired the suspect on a noise verdict
-    // and its carried floor was lost. The recheck, with its original
-    // prior and origin-correct band policy, is the entry that matters.
-    val allPendingNames = pendingPrior.keySet ++ pendingHistPrior.keySet
-    val regs = results.collect {
-      case (name, Right(now)) if prior.contains(name)
-        && !allPendingNames.contains(name)
-        && math.max(now, prior(name)) >= floor =>
-        (name, prior(name), now, now / math.max(prior(name), 1e-9))
-    }.filter { case (_, _, _, ratio) => ratio > 1.5 || ratio < 1.0 / 1.5 }
-      .sortBy { case (_, _, _, ratio) => -math.max(ratio, 1.0 / ratio) }
-    val flaggedNames = regs.map(_._1).toSet
-    // pending re-checks ride the same entry shape, marked by source;
-    // their comparison point is the CARRIED original prior, and their
-    // in_sweep value is this round's sweep median (not >3×-flagged).
-    // The floor test mirrors the sweep flag's max(now, prior) — a
-    // sub-floor ORIGINAL prior that regressed past the floor must not
-    // silently drop its suspect from the recheck. A pending whose
-    // query did NOT measure this round (failed / deselected) has
-    // nothing to recheck and carries forward unresolved below — the
-    // getOrElse fallback must not let max(floor-sized prior, itself)
-    // quietly delete it (review finding r19b).
-    def checksOf(m: Map[String, Double], skip: Set[String]) =
-      m.toSeq.flatMap { case (n, origPrior) =>
-        results.collectFirst { case (`n`, Right(t)) => t } match {
-          case Some(now) if !skip.contains(n) && SparkEntry.queries.contains(n) &&
-              math.max(now, origPrior) >= floor =>
-            Some((n, origPrior, now, now / math.max(origPrior, 1e-9)))
-          case _ => None
-        }
-      }
-    val pendingChecks = checksOf(pendingPrior, Set.empty)
-    // a name somehow in both pending sets rechecks once, sweep-origin
-    val pendingHistChecks = checksOf(pendingHistPrior, pendingPrior.keySet)
-    // r19 (judge item 3): the sub-threshold COMPOUNDING hole — two
-    // consecutive 1.4× drifts multiply past 1.5× without either round
-    // flagging, because each round compares only to the immediately
-    // refreshed prior. `histMin` carries min(last 3 rounds' medians)
-    // (queries_h2/h3 riding bench.json → bench_prior); a query whose
-    // sweep ratio stayed under 1.5× but whose level vs that floor
-    // exceeds 1.5× is flagged with source "hist_window". Its verdict
-    // deliberately IGNORES the band: the band self-extended through
-    // each unflagged sub-threshold step, so consulting it would stamp
-    // the compound drift "noise_band" — the exact absorption hole this
-    // window exists to close. Sweep/pending flags take precedence
-    // (they carry more specific priors).
-    val pendingNames = pendingChecks.map(_._1).toSet ++ pendingHistChecks.map(_._1)
-    val histRegs = results.collect {
-      case (name, Right(now)) if !flaggedNames.contains(name)
-        && !pendingNames.contains(name) && histMin.contains(name)
-        && math.max(now, histMin(name)) >= floor
-        && now / math.max(histMin(name), 1e-9) > 1.5 =>
-        (name, histMin(name), now, now / math.max(histMin(name), 1e-9))
-    }.sortBy { case (_, _, _, ratio) => -ratio }
-    val newPending = collection.mutable.Map.empty[String, Double]
-    val newPendingHist = collection.mutable.Map.empty[String, Double]
-    val confirmed = collection.mutable.Map.empty[String, Double]
-    val histSources = Set("hist_window", "pending_recheck_hist")
-    val entries = (regs.map((_, "sweep")) ++ histRegs.map((_, "hist_window")) ++
-        pendingChecks.map((_, "pending_recheck")) ++
-        pendingHistChecks.map((_, "pending_recheck_hist"))).map {
-      case ((n, p, c, r), source) =>
-        val head = f""""query":"$n","prior":$p%.3f,"in_sweep":$c%.3f,"ratio":$r%.2f,"source":"$source""""
-        if (!attribute) s"{$head}"
-        else {
-          resetSessionState(spark)
-          System.gc()
-          timeQuery(spark, n, SparkEntry.queries(n), dir, isolatedRuns, pickMin = true) match {
-            case Right(iso) =>
-              val (ri, verdict) = regressionVerdict(p, iso,
-                if (histSources.contains(source)) None else band.get(n),
-                priorPending = pendingPrior.contains(n) || pendingHistPrior.contains(n))
-              // only "suspect" carries forward: a confirmed "real" is
-              // REPORTED and retired — without retirement an accepted
-              // runtime change would re-confirm "real" every round
-              // forever (pending keeps it band-excluded, the frozen
-              // band keeps re-confirming), and the band could never
-              // learn the new normal. After the report, next round's
-              // refreshed prior and un-excluded band absorb the level.
-              // Suspects keep their ORIGIN: a hist suspect's recheck
-              // must stay band-exempt or it could never confirm.
-              if (verdict == "suspect") {
-                if (histSources.contains(source)) newPendingHist(n) = p
-                else newPending(n) = p
-              }
-              // retirement must also RESET the history surfaces: the
-              // caller re-seeds this query's band to the confirmed
-              // level and lifts its h2/h3 carry, so neither the stale
-              // band nor histMin can re-litigate an accepted change
-              if (verdict == "real") confirmed(n) = iso
-              f"""{$head,"isolated":$iso%.3f,"ratio_isolated":$ri%.2f,"verdict":"$verdict"}"""
-            case Left(_) =>
-              // a query that fails in isolation is loud through the
-              // sweep's own failed count from here on — no pending
-              s"""{$head,"isolated":"failed","verdict":"real"}"""
-          }
-        }
-    }
-    // a pending whose query never measured this round (failed sweep
-    // entry / deselected run) was not rechecked — carry it forward
-    // unresolved; only an isolated measurement may clear a suspect.
-    // Unregistered names (renamed/deleted queries) do drop: nothing
-    // could ever recheck them.
-    def carryUnmeasured(m: Map[String, Double],
-                        into: collection.mutable.Map[String, Double]): Unit =
-      m.foreach { case (n, p) =>
-        val measured = results.exists { case (`n`, Right(_)) => true; case _ => false }
-        if (!measured && SparkEntry.queries.contains(n) && !into.contains(n)) into(n) = p
-      }
-    carryUnmeasured(pendingPrior, newPending)
-    // overlap carries sweep-side only (mirrors the recheck dedupe)
-    carryUnmeasured(pendingHistPrior.view.filterKeys(!pendingPrior.contains(_)).toMap,
-      newPendingHist)
-    // a pure-sweep run (attribute=false) must not LOSE the pending sets
-    // — it took a confirmed isolated measurement to create them, and
-    // only another one may clear them
-    (entries.mkString("[", ",", "]"),
-      if (attribute) newPending.toMap else pendingPrior,
-      if (attribute) newPendingHist.toMap else pendingHistPrior,
-      flaggedNames ++ histRegs.map(_._1) ++ pendingNames,
-      confirmed.toMap)
-  }
-
   /** Re-serialize a parsed medians section (the queries_h2/h3 history
-    * carry: this round's output must hand next round the two older
-    * medians maps so min(last 3 rounds) survives the prior refresh). */
+    * carry). */
   private[graft] def mapJson(m: Map[String, Double]): String =
-    m.toSeq.sortBy(_._1).map { case (k, v) => f""""$k":$v%.3f""" }
+    m.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":${dec(v, 3)}""" }
       .mkString("{", ",", "}")
 
-  /** min(last-3-rounds median) per query: the hist_window tripwire's
-    * comparison floor. Each round is (medians, names flagged THAT
-    * round) — a flagged round's value is skipped (r20b: an unexplained
-    * fast outlier that was flagged as a speedup suspect would
-    * otherwise deflate the floor and spray spurious hist flags). A
-    * query flagged in all three rounds has no floor and no hist flag. */
-  private[graft] def histMinOf(recent: Seq[(Map[String, Double], Set[String])])
-      : Map[String, Double] =
-    recent.flatMap(_._1.keySet).distinct.flatMap { k =>
-      val vals = recent.collect { case (m, fl) if m.contains(k) && !fl(k) => m(k) }
-      if (vals.isEmpty) None else Some(k -> vals.min)
-    }.toMap
+  /** min(last-3-rounds median) per query: the hist_window floor. */
+  private[graft] def histMinOf(recent: Seq[Map[String, Double]]): Map[String, Double] =
+    recent.flatMap(_.toSeq).groupMapReduce(_._1)(_._2)(math.min)
 
-  /** Historical per-query band of round medians — since r20 a ROLLING
-    * window (this round + the last 3 rounds' medians, the same
-    * queries/h2/h3 history the hist_window rides), not an all-time
-    * accumulation. The r19 judge finding: accumulated bands never
-    * re-seed, so after the r17 PQ-kernel speedups sf1 q_ann_pq sat at
-    * ~1.1 s with band [1.09, 9.38] — an 8× regression back to the
-    * pre-optimization cost would verdict `noise_band` forever. With a
-    * rolling window, "normal" means "measured in the last 3 rounds on
-    * committed code"; pre-change eras age out.
-    *
-    * `exclude` names (this round's flagged/pending queries) keep their
-    * PRIOR band unchanged — their current sweep median is either a
-    * contention outlier or an unconfirmed regression, and either one
-    * entering the band would make future verdicts lie. The same rule
-    * applies RETROACTIVELY through the window (r20b): each `recent`
-    * round carries the names flagged in that round, and their medians
-    * are skipped — without this, a contention round's 12× outlier
-    * re-enters the band max as soon as its one-round exclusion
-    * expires and rubber-stamps a later real regression `noise_band`.
-    * `reseed` names (this round's confirmed `real` verdicts — always
-    * also excluded) collapse to their confirmed isolated level
-    * IMMEDIATELY: the 3-round age-out still leaves a window where a
-    * regression back to the old cost would read noise_band, and a
-    * retirement should not leave any of the old era behind. */
-  private[graft] def mergedBands(results: Seq[(String, Either[String, Double])],
-                                 priorLo: Map[String, Double],
-                                 priorHi: Map[String, Double],
-                                 recent: Seq[(Map[String, Double], Set[String])],
-                                 exclude: Set[String] = Set.empty,
-                                 reseed: Map[String, Double] = Map.empty): Seq[(String, Double, Double)] =
-    results.flatMap { case (n, r) =>
-      val hist = recent.collect { case (m, fl) if m.contains(n) && !fl(n) => m(n) }
-      val seedLo = priorLo.get(n).orElse(hist.headOption)
-      val seedHi = priorHi.get(n).orElse(hist.headOption)
-      (r, reseed.get(n)) match {
-        case (_, Some(level)) =>
-          Some((n, level, level))
-        case (Right(now), _) if !exclude.contains(n) =>
-          val vals = now +: hist
-          Some((n, vals.min, vals.max))
-        case _ =>
-          // excluded (flagged/pending) or failed this round: the
-          // current value is unusable either way — keep the PRIOR band
-          // verbatim so the window's history survives one contention
-          // flag or one transient failure. Both sides must exist (an
-          // asymmetric/truncated prior file yields a lopsided band
-          // that could only mislead).
-          for (lo <- seedLo; hi <- seedHi) yield (n, lo, hi)
-      }
-    }
+  /** The one move bound: a sweep median flags beyond it, and an
+    * isolated re-run back inside it is `noise`. */
+  private val MoveBound = 1.5
 
-  private[graft] def bandJson(bands: Seq[(String, Double, Double)]): (String, String) = (
-    bands.map { case (n, lo, _) => f""""$n":$lo%.3f""" }.mkString("{", ",", "}"),
-    bands.map { case (n, _, hi) => f""""$n":$hi%.3f""" }.mkString("{", ",", "}"))
+  private def beyond(ratio: Double): Boolean = ratio > MoveBound || ratio < 1.0 / MoveBound
 
-  /** Extract a `"<key>": ["name", ...]` name-list section of a prior
-    * bench line (the flagged/flagged_h2/h3 carry). */
-  private[graft] def parsePriorNames(txt: String, key: String): Set[String] = {
-    val sec = ("\"" + java.util.regex.Pattern.quote(key) + "\"\\s*:\\s*\\[([^\\]]*)\\]").r
-      .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-    "\"([^\"]+)\"".r.findAllMatchIn(sec).map(_.group(1)).toSet
+  /** One flagged sweep median and the reference it moved against. */
+  private[graft] final case class Flag(query: String, reference: Double,
+                                       inSweep: Double, source: String) {
+    def ratio: Double = inSweep / math.max(reference, 1e-9)
   }
 
-  private[graft] def namesJson(names: Set[String]): String =
-    names.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+  /** The regression rule, the same for the sf0.1 and sf1 passes. A
+    * measured query flags when
+    *  - `sweep`: its median moved more than 1.5× against last round's
+    *    median (`prior`), in either direction — an unexplained speedup
+    *    is as likely a lost code path as a win; or
+    *  - `hist_window`: it is more than 1.5× slower than the minimum of
+    *    the last three rounds' medians (`histMin`), which catches
+    *    drifts that compound under 1.5× per round.
+    * Moves where both sides sit under `floor` are fixed-overhead noise
+    * and never flag. */
+  private[graft] def flagMoves(results: Seq[(String, Either[String, Double])],
+                               prior: Map[String, Double],
+                               histMin: Map[String, Double],
+                               floor: Double): Seq[Flag] = {
+    def over(ref: Double, now: Double) = math.max(ref, now) >= floor
+    val flags = results.collect { case (n, Right(now)) => (n, now) }.flatMap { case (n, now) =>
+      prior.get(n).filter(p => over(p, now) && beyond(now / math.max(p, 1e-9)))
+        .map(Flag(n, _, now, "sweep"))
+        .orElse(histMin.get(n).filter(h => over(h, now) && now / math.max(h, 1e-9) > MoveBound)
+          .map(Flag(n, _, now, "hist_window")))
+    }
+    flags.sortBy(f => -math.max(f.ratio, 1.0 / f.ratio))
+  }
 
-  /** The history-carry fragment, ONE spelling for the sf0.1
-    * (suffix "") and sf1 (suffix "_sf1") sections: this round's
-    * h2/h3 median shift (lifted by confirmed reals — ADVICE r19) and
-    * the flagged-name lists paired SLOT-FOR-SLOT with the medians
-    * they describe: next round's `queries{s}_h2` (= this `prior`)
-    * pairs with `flagged{s}_h2` (= this round's live `flagged` one
-    * shift earlier — i.e. the set that flagged when those medians
-    * were current). The r20b window skip depends entirely on this
-    * alignment, so it lives in one helper with an emit-then-reparse
-    * spec instead of two hand-maintained string assemblies. */
-  private[graft] def historyCarryJson(suffix: String,
-      prior: Map[String, Double], h2: Map[String, Double],
-      fl1: Set[String], fl2: Set[String],
-      flagged: Set[String], confirmed: Map[String, Double]): String =
-    s""","queries${suffix}_h2":${mapJson(prior ++ confirmed)}""" +
-      s""","queries${suffix}_h3":${mapJson(h2 ++ confirmed)}""" +
-      s""","flagged$suffix":${namesJson(flagged)}""" +
-      s""","flagged${suffix}_h2":${namesJson(fl1)}""" +
-      s""","flagged${suffix}_h3":${namesJson(fl2)}"""
+  /** One pass's `regressions` array plus the history carry handed to
+    * the next round: this round's prior becomes `queries{s}_h2` and its
+    * h2 becomes `queries{s}_h3`. Each flagged query is re-timed by
+    * `rerun` (absent: no attribution) and labelled `noise` when that
+    * isolated time is back within 1.5× of the reference (host
+    * contention), `moved` otherwise. Empty when the prior file has no
+    * `liveKey` section. */
+  private[graft] def regressionSection(results: Seq[(String, Either[String, Double])],
+      priorTxt: String, liveKey: String, suffix: String, floor: Double,
+      rerun: Option[String => Either[String, Double]]): String = {
+    val prior = parsePriorSection(priorTxt, liveKey)
+    if (prior.isEmpty) ""
+    else {
+      val h2 = parsePriorSection(priorTxt, s"queries${suffix}_h2")
+      val h3 = parsePriorSection(priorTxt, s"queries${suffix}_h3")
+      val entries = flagMoves(results, prior, histMinOf(Seq(prior, h2, h3)), floor).map { f =>
+        val head = s""""query":"${f.query}","reference":${dec(f.reference, 3)},""" +
+          s""""in_sweep":${dec(f.inSweep, 3)},"ratio":${dec(f.ratio, 2)},"source":"${f.source}""""
+        rerun.map(_(f.query)) match {
+          case None => s"{$head}"
+          case Some(Right(iso)) =>
+            val ri = iso / math.max(f.reference, 1e-9)
+            val verdict = if (beyond(ri)) "moved" else "noise"
+            s"""{$head,"isolated":${dec(iso, 3)},"ratio_isolated":${dec(ri, 2)},"verdict":"$verdict"}"""
+          case Some(Left(_)) => s"""{$head,"isolated":"failed","verdict":"moved"}"""
+        }
+      }
+      s""","regressions$suffix":${entries.mkString("[", ",", "]")}""" +
+        s""","queries${suffix}_h2":${mapJson(prior)},"queries${suffix}_h3":${mapJson(h2)}"""
+    }
+  }
 
-  /** Parse one history window (medians + that round's flagged names,
-    * slot-aligned) back out of a prior bench line — the inverse of
-    * [[historyCarryJson]] plus the live `queries` section. */
-  private[graft] def parseRecent(txt: String, suffix: String,
-      liveKey: String): Seq[(Map[String, Double], Set[String])] = Seq(
-    parsePriorSection(txt, liveKey) -> parsePriorNames(txt, s"flagged$suffix"),
-    parsePriorSection(txt, s"queries${suffix}_h2") ->
-      parsePriorNames(txt, s"flagged${suffix}_h2"),
-    parsePriorSection(txt, s"queries${suffix}_h3") ->
-      parsePriorNames(txt, s"flagged${suffix}_h3"))
+  /** Isolated re-timing of a flagged query at the end of the sweep:
+    * state reset and GC hinted first, then the MIN of `runs` — the
+    * residual page-cache/GC/JIT state of the earlier gates only ever
+    * slows a run down, so one run at the old speed answers whether the
+    * code can still reach it. */
+  private def isolatedRerun(spark: SparkSession, dir: String, runs: Int)
+      : String => Either[String, Double] = { name =>
+    resetSessionState(spark)
+    System.gc()
+    timeQuery(spark, name, SparkEntry.queries(name), dir, runs, pickMin = true)
+  }
 
   /** The sf1 (10× data) tracking subset — relational core + exact
     * dedup + ANN, PLUS the dedup/curation queries whose replicated
@@ -597,44 +339,14 @@ object Bench {
           // sf1 tripwire, self-attributing like the sf0.1 one: the
           // r15 round artifact's misleading entries were mostly sf1
           // in-sweep outliers (q_bm25_indexed 17.2 vs 6.9 isolated,
-          // q_freq_items 12.1 vs 2.8) that each cost a judge
-          // re-measurement. Floor 0.5 s — sf1 queries are
-          // seconds-scale; isolated re-runs are median-of-2 (the sf1
-          // pass convention).
-          val priorSf1 = parsePriorSection(priorTxt, "queries_sf1")
-          val loSf1 = parsePriorSection(priorTxt, "band_lo_sf1")
-          val hiSf1 = parsePriorSection(priorTxt, "band_hi_sf1")
-          val bandSf1 = loSf1.keySet.intersect(hiSf1.keySet)
-            .map(k => k -> (loSf1(k), hiSf1(k))).toMap
-          val pendingSf1 = parsePriorSection(priorTxt, "pending_real_sf1")
-          val pendingHistSf1 = parsePriorSection(priorTxt, "pending_real_hist_sf1")
-          // per-round flagged-name carry (r20b): a flagged round's
-          // median is excluded from the band/hist windows — the sweep
-          // medians stay the one history estimator, but a contention
-          // outlier can never re-enter the band max after its
-          // one-round live exclusion expires
-          val recentSf1 = parseRecent(priorTxt, "_sf1", "queries_sf1")
-          val (regs1, bandExclude1, confirmedSf1) =
-            if (priorSf1.isEmpty)
-              ("", Set.empty[String], Map.empty[String, Double])
-            else {
-              val (arr, newPending, newPendingHist, flagged, confirmed) =
-                attributedRegressionsJson(spark, outDir,
-                  sf1Results, priorSf1, floor = 0.5, attribute, isolatedRuns = 2,
-                  band = bandSf1, pendingPrior = pendingSf1,
-                  histMin = histMinOf(recentSf1),
-                  pendingHistPrior = pendingHistSf1)
-              (s""","regressions_sf1":$arr,"pending_real_sf1":${mapJson(newPending)}""" +
-                s""","pending_real_hist_sf1":${mapJson(newPendingHist)}""" +
-                historyCarryJson("_sf1", priorSf1, recentSf1(1)._1,
-                  recentSf1(0)._2, recentSf1(1)._2, flagged, confirmed),
-                flagged, confirmed)
-            }
+          // q_freq_items 12.1 vs 2.8). Floor 0.5 s — sf1 queries are
+          // seconds-scale; isolated re-runs are min-of-2 (the sf1 pass
+          // convention).
+          val regs1 = regressionSection(sf1Results, priorTxt, "queries_sf1", "_sf1",
+            floor = 0.5, Option.when(attribute)(isolatedRerun(spark, outDir, 2)))
           val qs1 = sf1Results.map { case (k, v) => s"\"" + k + "\":" + jsonVal(v) }
             .mkString("{", ",", "}")
-          val (bLo1, bHi1) = bandJson(mergedBands(sf1Results, loSf1, hiSf1,
-            recentSf1, bandExclude1, confirmedSf1))
-          s""","sf1_dir":"$outDir","sf1_gen_sec":$genSec,"queries_sf1":$qs1$regs1,"band_lo_sf1":$bLo1,"band_hi_sf1":$bHi1"""
+          s""","sf1_dir":"$outDir","sf1_gen_sec":$genSec,"queries_sf1":$qs1$regs1"""
         } catch {
           case e: Throwable =>
             System.err.println(s"[bench sf1] skipped: ${e.getMessage}")
@@ -748,66 +460,15 @@ object Bench {
     val totalJson = if (nFailed > 0) "null" else total.toString
     // regression tripwire (the r13 lesson: an unattributed 8× swing on
     // one query rode a green BENCH capture unnoticed): diff each sf0.1
-    // median against the committed prior round's median
-    // (bench_prior.json, refreshed at end of round) and surface every
-    // >3× move — in EITHER direction; an unexplained 5× "speedup" is
-    // just as likely a broken query or a lost code path — as a
-    // first-class "regressions" array in the output line.
-    // SELF-ATTRIBUTION (the r13–r15 lesson, three rounds running): a
-    // sweep on a loaded host flags phantom regressions on untouched
-    // queries, and every round artifact that shipped an unattributed
-    // `regressions` array cost a judge session to re-measure. So the
-    // tripwire attributes itself: each flagged query is re-run
-    // ISOLATED at the end of the sweep (state fully reset — the same
-    // measurement the SPARK_GRAFT_BENCH_ONLY attribution runs take)
-    // and both numbers ship in the entry, with a flagged move whose
-    // isolated median lands back within 1.5× of prior labeled noise
-    // in the JSON itself. SPARK_GRAFT_BENCH_ATTRIBUTE=0 skips
-    // (pure-sweep mode for timing experiments). Sub-100ms medians are
-    // fixed-overhead noise at sf0.1; a 3× swing there is not signal.
-    val regressionsJson: String = {
-      val prior = parsePriorSection(priorTxt, "queries")
-      val lo = parsePriorSection(priorTxt, "band_lo")
-      val hi = parsePriorSection(priorTxt, "band_hi")
-      val band = lo.keySet.intersect(hi.keySet).map(k => k -> (lo(k), hi(k))).toMap
-      val pending = parsePriorSection(priorTxt, "pending_real")
-      val pendingHist = parsePriorSection(priorTxt, "pending_real_hist")
-      // last-3-rounds median history (judge r18 item 3): prior's
-      // queries section is 1 round back, its queries_h2/h3 are 2 and 3
-      // back; this round re-emits the carry shifted by one. Each round
-      // also carries the names flagged THAT round (r20b): their
-      // medians are contention outliers or unconfirmed moves, and the
-      // band/hist windows skip them — sweep medians stay the one
-      // history estimator (an isolated-min substitute was tried and
-      // creates a permanent re-flag loop on persistently contended
-      // queries), but a flagged round's 12x outlier can never re-enter
-      // the band max once its live exclusion expires. Accepted cost of
-      // keeping the raw outlier in `queries`: it is also next round's
-      // ratio baseline, so the round AFTER an outlier pays one
-      // spurious "speedup" flag + its isolated re-measurement before
-      // the prior refreshes clean — a bounded, self-labeling round
-      // trip, unlike the unbounded loop the substitute created.
-      val recent = parseRecent(priorTxt, "", "queries")
-      if (prior.isEmpty) {
-        val (bLo, bHi) = bandJson(mergedBands(results.toSeq, lo, hi, recent))
-        s""","band_lo":$bLo,"band_hi":$bHi"""
-      } else {
-        val (arr, newPending, newPendingHist, flagged, confirmed) =
-          attributedRegressionsJson(spark, sfDir,
-            results.toSeq, prior, floor = 0.1, attribute, isolatedRuns = 3,
-            band = band, pendingPrior = pending, histMin = histMinOf(recent),
-            pendingHistPrior = pendingHist)
-        val (bLo, bHi) = bandJson(mergedBands(results.toSeq, lo, hi,
-          recent, flagged, confirmed))
-        s""","regressions":$arr,"pending_real":${mapJson(newPending)}""" +
-          s""","pending_real_hist":${mapJson(newPendingHist)}""" +
-          s""","band_lo":$bLo,"band_hi":$bHi""" +
-          historyCarryJson("", prior, recent(1)._1,
-            recent(0)._2, recent(1)._2, flagged, confirmed)
-      }
-    }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + jsonVal(v) }
-      .mkString("{", ",", "}")
+    // median against the committed prior round (bench_prior.json,
+    // refreshed at end of round) and its two carried older rounds, and
+    // surface every flag — self-attributed by an isolated re-run, see
+    // [[regressionSection]] — as a first-class "regressions" array.
+    // SPARK_GRAFT_BENCH_ATTRIBUTE=0 skips the re-runs (pure-sweep mode
+    // for timing experiments). Sub-100ms medians are fixed-overhead
+    // noise at sf0.1; a swing there is not signal.
+    val regressionsJson = regressionSection(results.toSeq, priorTxt, "queries", "",
+      floor = 0.1, Option.when(attribute)(isolatedRerun(spark, sfDir, 3)))
     // "value" is emitted LAST: the round capture channel keeps only the
     // TAIL of long stdout lines (BENCH_r10/r11 both lost the head,
     // total included), so the headline number rides the end — and the
@@ -820,7 +481,8 @@ object Bench {
         .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
       s""","codegen_failures":{"total":${CodegenMonitor.count},"queries":$per}"""
     }
-    val line = s"""{"metric":"total","unit":"sec","runs":$runs,"failed":$nFailed,"queries":$qs,"sf":"$sfDir"$sf1Json$sf10Json$regressionsJson$cgJson,"value":$totalJson}"""
+    val line = fullLine(results.toSeq, runs, nFailed, sfDir,
+      sf1Json + sf10Json + regressionsJson, cgJson, totalJson)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_JSON", "bench.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -833,7 +495,7 @@ object Bench {
     // fully-captured line failed to parse because sbt's default
     // LoggedOutput prefixed it with "[info] " (build.sbt now forks with
     // OutputStrategy.StdoutOutput so program stdout is unprefixed). The
-    // full line above — history carry, bands, sf1/sf10 sections — stays
+    // full line above — history carry, sf1/sf10 sections — stays
     // in bench.json only; stdout carries the LIVE sweep medians (the
     // r20 artifact trap was a tail whose only visible per-query map was
     // the queries_h3 history carry), "failed" so a broken query can't
@@ -850,8 +512,17 @@ object Bench {
                                  runs: Int, nFailed: Int, sfDir: String,
                                  cgJson: String, totalJson: String): String = {
     val qs = results.map { case (k, v) =>
-      "\"" + k + "\":" + v.fold(_ => "\"failed\"", t => f"$t%.3f")
+      "\"" + k + "\":" + v.fold(_ => "\"failed\"", dec(_, 3))
     }.mkString("{", ",", "}")
     s"""{"metric":"total","unit":"sec","runs":$runs,"failed":$nFailed,"sf":"$sfDir","queries":$qs$cgJson,"value":$totalJson}"""
+  }
+
+  /** The full bench.json line: full-precision live medians, then the
+    * sf1/sf10 passes and the regression/history `sections`. */
+  private[graft] def fullLine(results: Seq[(String, Either[String, Double])],
+                              runs: Int, nFailed: Int, sfDir: String, sections: String,
+                              cgJson: String, totalJson: String): String = {
+    val qs = results.map { case (k, v) => "\"" + k + "\":" + jsonVal(v) }.mkString("{", ",", "}")
+    s"""{"metric":"total","unit":"sec","runs":$runs,"failed":$nFailed,"queries":$qs,"sf":"$sfDir"$sections$cgJson,"value":$totalJson}"""
   }
 }

@@ -29,15 +29,14 @@ object SparkEntry {
    * real scale the scan has thousands of splits and this is a no-op:
    * no extra exchange in the plan. getNumPartitions only plans (no
    * job). */
-  private def docs(s: SparkSession, dir: String, min: Int = 16): DataFrame = {
-    val df = t(s, dir, "documents")
-    if (df.rdd.getNumPartitions >= min) df else df.repartition(2 * min)
-  }
+  private def docs(s: SparkSession, dir: String, min: Int = 16): DataFrame =
+    spreadIds(t(s, dir, "documents"), min)
 
-  /** The same scan-starvation protection for the id lists feeding the
-   * media gates' executor-side fixture synthesis: each id becomes a
-   * full encode (WAV DSP / JPEG / MJPEG AVI) plus the decode+DCT/FFT
-   * fingerprint downstream — minutes of single-core work when the
+  /** The one scan-starvation rule: [[docs]] applies it to the corpus,
+   * and the media gates to the id lists feeding their executor-side
+   * fixture synthesis: each id becomes a full encode (WAV DSP / JPEG /
+   * MJPEG AVI) plus the decode+DCT/FFT fingerprint downstream —
+   * minutes of single-core work when the
    * whole list rides the one split a small parquet scan produces
    * (measured r20: q_audio_dedup's synthesis+fingerprint pass was one
    * 3.6 s task at sf0.1 and 35 s of the sf1 sweep). The shuffle moves

@@ -122,13 +122,10 @@ final class DynamoDbClient(endpoint: String, region: String,
     * exists path let the second driver's first PutItem die with
     * ResourceNotFound (r17 review). One DescribeTable on the common
     * already-ACTIVE path. */
-  /** Returns true when THIS call created the table (a ResourceInUse
-    * race still counts as created-by-new-code — both racers run the
-    * same version, so "no pre-existing history" holds either way). */
   def ensureTableActive(table: String, hashKey: String,
-                        rangeKey: Option[String] = None): Boolean =
-    if (!tableExists(table)) { createTable(table, hashKey, rangeKey); true }
-    else { awaitActive(table); false }
+                        rangeKey: Option[String] = None): Unit =
+    if (!tableExists(table)) createTable(table, hashKey, rangeKey)
+    else awaitActive(table)
 
   def createTable(table: String, hashKey: String, rangeKey: Option[String] = None): Unit = {
     val keys = Seq(hashKey -> "HASH") ++ rangeKey.map(_ -> "RANGE")
@@ -473,11 +470,7 @@ final class TokenLockDynamo(client: DynamoDbClient, token: String,
  * range key makes `[from#000000, to#999999]` exactly the contract
  * window, so months of history never cross the wire (or consume read
  * units) for a one-night report. Registry items never surface
- * through `all`/`entries`. Mixed tables (pre-registry events from
- * writers that later registered) auto-migrate on the first window
- * read: one idempotent backfill scan, then a "__migrated__" marker
- * retires the scan for every future reader (new tables are marked at
- * creation and never scan).
+ * through `all`/`entries`.
  */
 object JournalDynamo {
   /** ONE writer identity per JVM (ADVICE r19: a fresh UUID per
@@ -491,10 +484,6 @@ object JournalDynamo {
   private[dynamo] val ProcessWriterId: String =
     java.util.UUID.randomUUID().toString.take(8)
   private[dynamo] val ProcessSeq = new java.util.concurrent.atomic.AtomicLong(0)
-  /** Registry marker recording that the one-time legacy backfill has
-    * completed (or was never needed): window reads skip the migration
-    * scan once any instance has written it. */
-  private[dynamo] val MigratedKey = "__migrated__"
 }
 
 final class JournalDynamo(client: DynamoDbClient,
@@ -502,25 +491,13 @@ final class JournalDynamo(client: DynamoDbClient,
                           writerIdOverride: Option[String] = None)
     extends graft.pipeline.TaskJournal {
   import graft.pipeline.TaskEvent
-  import JournalDynamo.MigratedKey
   private val table = s"${tablePrefix}_journal"
   private val writerId = writerIdOverride.getOrElse(JournalDynamo.ProcessWriterId)
   private val seq = JournalDynamo.ProcessSeq
   private val registered = new java.util.concurrent.atomic.AtomicBoolean(false)
   private val RegistryHash = "__writers__"
 
-  // a table THIS process created has no pre-registry history by
-  // construction: mark it migrated now so no window read ever pays
-  // the one-time backfill scan for it
-  if (client.ensureTableActive(table, "writerId", Some("eventKey")))
-    markMigrated()
-
-  private def markMigrated(): Unit = {
-    client.putItem(table, Map(
-      "writerId" -> ("S", RegistryHash),
-      "eventKey" -> ("S", MigratedKey)))
-    ()
-  }
+  client.ensureTableActive(table, "writerId", Some("eventKey"))
 
   override def append(e: TaskEvent): Unit = {
     // one registry item per writer, written before its first event:
@@ -571,90 +548,10 @@ final class JournalDynamo(client: DynamoDbClient,
     // seq past 999999 still sorts BELOW "#999999" at the same atMs
     // ('1' < '9' at the first digit), so the hi bound stays inclusive
     val hi = f"${math.max(toMs, 0L)}%013d#999999"
-    val regItems = client.query(table, "writerId = :t",
+    val writers = client.query(table, "writerId = :t",
       Map(":t" -> ("S", RegistryHash))).flatMap(_.get("eventKey")).map(_._2)
-    val writers = regItems.filterNot(_ == MigratedKey)
-    // LEGACY tables (events written before the registry existed) have
-    // no registry partition: fall back to the full-reload filter
-    // rather than silently answering an empty window. New-code tables
-    // always register BEFORE the first event, so a non-empty table
-    // with an empty registry can only be pre-registry history.
-    if (writers.isEmpty) super.entries(fromMs, toMs)
-    else {
-      // MIXED tables (r20, judge item 4 / ADVICE): once any writer had
-      // registered, windows used to silently exclude pre-registry
-      // events from writers that registered later — the idempotent
-      // backfill was a documented manual remedy nothing invoked. It
-      // now auto-runs on the FIRST window read of an unmigrated table
-      // (one scan per table lifetime — the migration marker, written
-      // at table creation for new tables, retires it for everyone).
-      if (regItems.contains(MigratedKey))
-        toEvents(writers.flatMap(w =>
-          client.query(table, "writerId = :t AND eventKey BETWEEN :lo AND :hi",
-            Map(":t" -> ("S", w), ":lo" -> ("S", lo), ":hi" -> ("S", hi)))))
-      else {
-        // an unmigrated table answers this read from ONE full scan
-        // (the r18 read shape — complete regardless of registry
-        // state), and the SAME scan feeds the best-effort migration:
-        // a read-only principal (Query/Scan but no PutItem) still
-        // gets the complete answer instead of an AccessDenied throw
-        // (review finding r20 — a pure read path must not require
-        // writes); the first writer-privileged reader migrates for
-        // everyone. The failure is logged, not silent: a chronically
-        // denied migration means every read re-pays this scan, and
-        // the operator should know why.
-        val items = client.scan(table)
-          .filterNot(_.get("writerId").exists(_._2 == RegistryHash))
-        val window = toEvents(items.filter { i =>
-          val at = i("atMs")._2.toLong
-          at >= fromMs && at <= toMs
-        })
-        try registerAndMark(items, writers.toSet)
-        catch {
-          case e: InterruptedException => Thread.currentThread().interrupt(); throw e
-          case e: Exception =>
-            System.err.println(s"[graft journal] $table migration deferred " +
-              s"(window reads stay scan-based until a writer-privileged " +
-              s"reader persists it): ${e.getMessage}")
-        }
-        window
-      }
-    }
-  }
-
-  /** One-time backfill for tables MIXING pre-registry history with
-    * registered writers: scans once, registers every writer that has
-    * events but no registry item, writes the migration marker, and
-    * returns how many writers it added. Auto-invoked by the first
-    * window read of an unmigrated table (r20 — the manual-only form
-    * silently excluded pre-registry events of registered writers from
-    * windows); still public for operators who want to pay the scan at
-    * a chosen time. Idempotent; new deployments never need it (the
-    * marker is written at table creation). Caveat: a writer still
-    * RUNNING pre-registry code after migration keeps appending
-    * invisible-to-window events — upgrade all writers first, the
-    * standard rolling-migration contract. */
-  def registerLegacyWriters(): Int = {
-    val registered = client.query(table, "writerId = :t",
-      Map(":t" -> ("S", RegistryHash))).flatMap(_.get("eventKey")).map(_._2).toSet
-    registerAndMark(client.scan(table), registered)
-  }
-
-  /** ONE registration rule for the auto path (entries' shared-scan
-    * migration) and the manual operator path ([[registerLegacyWriters]])
-    * — two copies of the register-missing + mark invariant could
-    * silently desynchronize. Takes scanned items and the known
-    * registry; registers every event-bearing writer the registry
-    * lacks, writes the migration marker, returns how many it added. */
-  private def registerAndMark(items: Seq[Map[String, (String, String)]],
-                              known: Set[String]): Int = {
-    val missing = items
-      .flatMap(_.get("writerId")).map(_._2).distinct
-      .filterNot(w => w == RegistryHash || known.contains(w))
-    missing.foreach(w => client.putItem(table, Map(
-      "writerId" -> ("S", RegistryHash),
-      "eventKey" -> ("S", w))))
-    markMigrated()
-    missing.size
+    toEvents(writers.flatMap(w =>
+      client.query(table, "writerId = :t AND eventKey BETWEEN :lo AND :hi",
+        Map(":t" -> ("S", w), ":lo" -> ("S", lo), ":hi" -> ("S", hi)))))
   }
 }

@@ -36,9 +36,9 @@ object ImageFloodProbe {
                           eligible: Int, found: Int, recall: Double,
                           truncatedBuckets: Long, droppedMembers: Long, sec: Double) {
     def json: String =
-      f"""{"n_images":$nImages,"distinct_hashes":$distinctHashes,"planted":$planted,""" +
-        f""""eligible_pairs":$eligible,"found_pairs":$found,"recall":$recall%.4f,""" +
-        f""""truncated_buckets":$truncatedBuckets,"dropped_members":$droppedMembers,"sec":$sec%.1f}"""
+      s"""{"n_images":$nImages,"distinct_hashes":$distinctHashes,"planted":$planted,""" +
+        s""""eligible_pairs":$eligible,"found_pairs":$found,"recall":${graft.Bench.dec(recall, 4)},""" +
+        s""""truncated_buckets":$truncatedBuckets,"dropped_members":$droppedMembers,"sec":${graft.Bench.dec(sec, 1)}}"""
   }
 
   private def splitmix(x0: Long): Long = {

@@ -285,20 +285,21 @@ final class OffsetManager(storePath: Option[String] = None) extends OffsetStore 
 
   storePath.foreach { p =>
     val dir = Paths.get(p)
-    def absorb(line: String): Unit = line.trim.split("\t") match {
-      case Array(table, tpe, value) =>
-        val v = OffsetValue.fromString(tpe, value)
-        OffsetValue.advance(committed.get(table), v).foreach(committed.put(table, _))
-      case _ =>
-    }
+    require(!Files.isRegularFile(dir),
+      s"offset store path $p is a regular file; the store is a directory of commit files")
     if (Files.isDirectory(dir)) {
-      Files.list(dir).iterator().asScala
+      val stream = Files.list(dir) // must close: holds a directory fd
+      try stream.iterator().asScala
         .filter(_.getFileName.toString.endsWith(".tsv"))
-        .foreach(f => absorb(new String(Files.readAllBytes(f), "UTF-8")))
-    } else if (Files.isRegularFile(dir)) {
-      // legacy single-append-file store: absorb lines; replaced by the
-      // directory layout on the first commit
-      Files.readAllLines(dir).asScala.filter(_.nonEmpty).foreach(absorb)
+        .foreach { f =>
+          new String(Files.readAllBytes(f), "UTF-8").trim.split("\t") match {
+            case Array(table, tpe, value) =>
+              val v = OffsetValue.fromString(tpe, value)
+              OffsetValue.advance(committed.get(table), v).foreach(committed.put(table, _))
+            case _ =>
+          }
+        }
+      finally stream.close()
     }
   }
 
@@ -333,16 +334,6 @@ final class OffsetManager(storePath: Option[String] = None) extends OffsetStore 
     toStore.foreach { stored =>
       storePath.foreach { p =>
         val dir = Paths.get(p)
-        if (Files.isRegularFile(dir)) synchronized {
-          // migrate a legacy append file: its offsets are already in
-          // memory (absorbed at load); re-persist them as record files
-          if (Files.isRegularFile(dir)) {
-            Files.delete(dir)
-            Files.createDirectories(dir)
-            committed.toSeq.filterNot(_._1 == table)
-              .foreach { case (t, v) => persist(dir, t, v) }
-          }
-        }
         Files.createDirectories(dir)
         persist(dir, table, stored)
       }

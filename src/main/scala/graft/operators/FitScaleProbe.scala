@@ -34,7 +34,7 @@ object FitScaleProbe {
   final case class FitPoint(rows: Long, sec: Double, modelEntries: Long,
                             modelBytes: Long) {
     def json: String =
-      f"""{"rows":$rows,"sec":$sec%.2f,"model_entries":$modelEntries,"model_bytes":$modelBytes}"""
+      s"""{"rows":$rows,"sec":${graft.Bench.dec(sec, 2)},"model_entries":$modelEntries,"model_bytes":$modelBytes}"""
   }
 
   final case class Result(k: Int, dim: Int, vocabCap: Int,
@@ -43,11 +43,11 @@ object FitScaleProbe {
     def kmeansGrowth: Double = kmeansBig.sec / math.max(kmeansSmall.sec, 1e-9)
     def clfGrowth: Double = clfBig.sec / math.max(clfSmall.sec, 1e-9)
     def json: String =
-      f"""{"k":$k,"dim":$dim,"vocab_cap":$vocabCap,""" +
-        f""""kmeans_small":${kmeansSmall.json},"kmeans_big":${kmeansBig.json},""" +
-        f""""kmeans_wall_growth_at_10x":$kmeansGrowth%.2f,""" +
-        f""""classifier_small":${clfSmall.json},"classifier_big":${clfBig.json},""" +
-        f""""classifier_wall_growth_at_10x":$clfGrowth%.2f}"""
+      s"""{"k":$k,"dim":$dim,"vocab_cap":$vocabCap,""" +
+        s""""kmeans_small":${kmeansSmall.json},"kmeans_big":${kmeansBig.json},""" +
+        s""""kmeans_wall_growth_at_10x":${graft.Bench.dec(kmeansGrowth, 2)},""" +
+        s""""classifier_small":${clfSmall.json},"classifier_big":${clfBig.json},""" +
+        s""""classifier_wall_growth_at_10x":${graft.Bench.dec(clfGrowth, 2)}}"""
   }
 
   /** Deterministic embeddings: dim sines keyed by (id, component). */

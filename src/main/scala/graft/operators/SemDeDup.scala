@@ -196,9 +196,13 @@ object SemDeDup {
       if (maxBroadcastIds == Long.MaxValue) true
       else if (maxBroadcastIds <= 0L) false
       else {
-        // copies = Σ(group size − 1) exactly; semantic drops < #groups
-        val b = keyed.groupBy(col("_k")).agg(count(lit(1)).as("_gn"))
-          .agg(coalesce(sum(col("_gn") - 1), lit(0L)), count(lit(1))).head()
+        // copies = Σ(group size − 1) exactly; semantic drops < #groups.
+        // A failed or cancelled gate job hands no stage to the caller,
+        // so nothing downstream would ever release `keyed`
+        val b =
+          try keyed.groupBy(col("_k")).agg(count(lit(1)).as("_gn"))
+            .agg(coalesce(sum(col("_gn") - 1), lit(0L)), count(lit(1))).head()
+          catch { case e: Throwable => keyed.unpersist(); throw e }
         b.getLong(0) + b.getLong(1) <= maxBroadcastIds
       }
     IdentityStage(keyed, reps, broadcastDrop)

@@ -121,6 +121,8 @@ final class Bookkeeper(journalPath: Option[String] = None) extends BookkeeperSto
 
   journalPath.foreach { p =>
     val dir = Paths.get(p)
+    require(!Files.isRegularFile(dir),
+      s"bookkeeping journal path $p is a regular file; the journal is a directory of record files")
     if (Files.isDirectory(dir)) {
       val stream = Files.list(dir) // must close: holds a directory fd
       val files =
@@ -132,12 +134,6 @@ final class Bookkeeper(journalPath: Option[String] = None) extends BookkeeperSto
         val line = new String(Files.readAllBytes(f), "UTF-8")
         parseLine(line).foreach(r => records.put((r.table, r.infoDate), r))
       }
-    } else if (Files.isRegularFile(dir)) {
-      // legacy single-append-file journal: absorb its lines; the file
-      // is replaced by the directory layout on the first write
-      Files.readAllLines(dir).asScala.filter(_.nonEmpty).foreach { line =>
-        parseLine(line).foreach(r => records.put((r.table, r.infoDate), r))
-      }
     }
   }
 
@@ -145,7 +141,6 @@ final class Bookkeeper(journalPath: Option[String] = None) extends BookkeeperSto
     records.put((r.table, r.infoDate), r)
     journalPath.foreach { p =>
       val dir = Paths.get(p)
-      if (Files.isRegularFile(dir)) migrateLegacy(dir)
       Files.createDirectories(dir)
       val json = s"""{"table":"${r.table}","infoDate":"${r.infoDate}","recordCount":${r.recordCount},"status":"${r.status}","startedAtMs":${r.startedAtMs},"finishedAtMs":${r.finishedAtMs}}"""
       val name = f"${r.finishedAtMs}%013d_${writerId}_${seq.getAndIncrement()}%06d.json"
@@ -154,16 +149,6 @@ final class Bookkeeper(journalPath: Option[String] = None) extends BookkeeperSto
         StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
       Files.move(tmp, dir.resolve(name),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
-  }
-
-  /** Replace a legacy append-file journal with the directory layout,
-    * re-persisting its (already loaded) records so none are lost. */
-  private def migrateLegacy(file: java.nio.file.Path): Unit = synchronized {
-    if (Files.isRegularFile(file)) {
-      Files.delete(file)
-      Files.createDirectories(file)
-      records.values.toSeq.sortBy(_.finishedAtMs).foreach(record)
     }
   }
 

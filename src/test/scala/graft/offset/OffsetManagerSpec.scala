@@ -37,18 +37,11 @@ class OffsetManagerSpec extends SparkSpec {
     assert(om2.getLatestOffset("b").contains(OffsetValue.StringValue("k9")))
   }
 
-  test("legacy single-file offset store migrates without losing offsets") {
-    val store = tmpDir("offm_") + "/offsets"
-    java.nio.file.Files.write(java.nio.file.Paths.get(store),
-      "a\tintegral\t7\nb\tstring\tk9\n".getBytes("UTF-8"))
-    val om = new OffsetManager(Some(store))
-    assert(om.getLatestOffset("a").contains(OffsetValue.IntegralValue(7)))
-    om.commit("c", OffsetValue.IntegralValue(1)) // triggers migration
-    assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(store)))
-    val fresh = new OffsetManager(Some(store))
-    assert(fresh.getLatestOffset("a").contains(OffsetValue.IntegralValue(7)))
-    assert(fresh.getLatestOffset("b").contains(OffsetValue.StringValue("k9")))
-    assert(fresh.getLatestOffset("c").contains(OffsetValue.IntegralValue(1)))
+  test("an offset store path that is a regular file fails at construction") {
+    val store = tmpDir("offf_") + "/offsets"
+    java.nio.file.Files.write(java.nio.file.Paths.get(store), "a\tintegral\t7\n".getBytes("UTF-8"))
+    val e = intercept[IllegalArgumentException](new OffsetManager(Some(store)))
+    assert(e.getMessage.contains(store), e.getMessage)
   }
 
   test("two concurrent offset writers on shared storage: no corruption, max wins") {

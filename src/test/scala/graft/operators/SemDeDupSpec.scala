@@ -200,4 +200,21 @@ class SemDeDupSpec extends SparkSpec {
     assert(kept == e.count() - seqDrop.size,
       "dedupWithFit must prune exactly the drop list")
   }
+
+  test("a failing size gate rethrows and leaves no persisted RDD behind") {
+    // the identity stage persists its keyed fingerprints before the
+    // size-gate action; an embedding column that throws at evaluation
+    // fails that action, and nothing downstream would ever release them
+    val boom = udf { (id: Long) =>
+      if (id >= 0L) throw new IllegalStateException("embedding decode failed")
+      Array(0f)
+    }
+    val e = spark.range(20).select(col("id").as("vec_id"), boom(col("id")).as("embedding"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val ex = intercept[Exception](SemDeDup.dropList(e, "embedding", "vec_id", centroids))
+    val causes = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(c => String.valueOf(c.getMessage).contains("embedding decode failed")), ex)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(leaked.isEmpty, s"the failed gate leaked persisted RDDs: $leaked")
+  }
 }

@@ -165,18 +165,11 @@ class OrchestratorSpec extends SparkSpec {
     assert(bk2.get("t", runDate).map(_.recordCount).contains(42L))
   }
 
-  test("legacy single-file journal migrates to the directory layout on first write") {
-    val path = tmpDir("bkm_") + "/journal"
-    // a journal written by the old append-file code
-    val legacy = s"""{"table":"t","infoDate":"$runDate","recordCount":5,"status":"succeeded","startedAtMs":1,"finishedAtMs":2}""" + "\n"
-    java.nio.file.Files.write(java.nio.file.Paths.get(path), legacy.getBytes("UTF-8"))
-    val bk = new Bookkeeper(Some(path))
-    assert(bk.isAlreadyRan("t", runDate), "legacy lines must be absorbed on load")
-    bk.record(RunRecord("u", runDate, 7, "succeeded", 3, 4)) // triggers migration
-    assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(path)))
-    val fresh = new Bookkeeper(Some(path))
-    assert(fresh.isAlreadyRan("t", runDate), "legacy record must survive migration")
-    assert(fresh.get("u", runDate).map(_.recordCount).contains(7L))
+  test("a bookkeeping journal path that is a regular file fails at construction") {
+    val path = tmpDir("bkf_") + "/journal"
+    java.nio.file.Files.write(java.nio.file.Paths.get(path), "not a journal\n".getBytes("UTF-8"))
+    val e = intercept[IllegalArgumentException](new Bookkeeper(Some(path)))
+    assert(e.getMessage.contains(path), e.getMessage)
   }
 
   test("two concurrent bookkeepers on shared storage lose no records") {

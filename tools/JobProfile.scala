@@ -27,7 +27,8 @@ object JobProfile {
     val jobs = mutable.LinkedHashMap.empty[Int, JobRec]
     // stageId -> jobId (ADVICE r20): tasks used to be attributed to the
     // newest unfinished job, which misreports exactly the overlapped
-    // (concurrent-job) operators this tool exists to profile
+    // (concurrent-job) operators this tool exists to profile. A stage
+    // shared by several jobs stays with the first job that announced it.
     val stageJob = mutable.HashMap.empty[Int, Int]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
@@ -35,7 +36,7 @@ object JobProfile {
           Option(p.getProperty("spark.job.description"))).getOrElse("")
         jobs.synchronized {
           jobs(e.jobId) = JobRec(e.jobId, e.time, desc = d)
-          e.stageIds.foreach(sid => stageJob(sid) = e.jobId)
+          e.stageIds.foreach(sid => stageJob.getOrElseUpdate(sid, e.jobId))
         }
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
