@@ -1594,11 +1594,7 @@ object SparkEntry {
         StructField("content", BinaryType, nullable = true)))
       val media = s.createDataFrame(ids.rdd.mapPartitions(_.flatMap { r =>
         val id = r.getLong(0)
-        def enc(fmt: String) = {
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(ImageHash.patternImage(96, 96, id), fmt, bos)
-          bos.toByteArray
-        }
+        def enc(fmt: String) = ImageHash.writeImage(ImageHash.patternImage(96, 96, id), fmt)
         Seq(Row(id, enc("png")), Row(id + 700000L, enc("jpg")))
       }), mediaSchema)
       ImageHash.nearDups(media, maxHamming = 2).select("id_a", "id_b")
@@ -2061,15 +2057,16 @@ object SparkEntry {
       // CCNet-style ppl cut at 30.5 trims the high-perplexity tail.
       // DuckDB replays every stage (all are deterministic heuristics
       // already hash-matched by their own gates) and the first-
-      // failing-stage attribution
+      // failing-stage attribution. The funnel runs CurationTransformer's
+      // own stage chain; every 3rd doc is the perplexity reference table
       val dd = docs(s, dir).select(col("doc_id"), col("text"))
       val corpus = dd.unionByName(dd.where(col("doc_id") % 15 === 0)
         .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
-      val lm = graft.operators.LmScore.fitUnigram(
-        dd.where(col("doc_id") % 3 === 0), "text")
-      graft.pipeline.CurationFunnel.report(corpus, "text", "doc_id",
-        qualityMin = 0.75, maxRepetition = 0.5,
-        perplexityLm = Some(lm), perplexityMax = Some(30.5))
+      graft.pipeline.CurationFunnel.report(corpus,
+        Map("quality.min" -> "0.75", "max.repetition" -> "0.5",
+          "perplexity.enabled" -> "true", "perplexity.reference.table" -> "ppl_ref",
+          "perplexity.max" -> "30.5"),
+        Map("ppl_ref" -> dd.where(col("doc_id") % 3 === 0)))
     }),
 
     "q_bpe" -> ((s, dir) => {

@@ -22,12 +22,6 @@ import org.apache.spark.sql.types._
  */
 object Avi {
 
-  // memory-backed ImageIO streams (see ImageHash — same rationale:
-  // the MJPEG encode/decode path round-trips thousands of tiny
-  // frames, and the default file-backed stream cache turns each into
-  // temp-file churn)
-  javax.imageio.ImageIO.setUseCache(false)
-
   private def u32le(b: Array[Byte], i: Int): Long =
     (b(i) & 0xFFL) | ((b(i + 1) & 0xFFL) << 8) | ((b(i + 2) & 0xFFL) << 16) | ((b(i + 3) & 0xFFL) << 24)
   private def fourcc(b: Array[Byte], i: Int): String =
@@ -164,11 +158,7 @@ object Avi {
     def list(listType: String, payload: Array[Byte]): Array[Byte] =
       chunk("LIST", listType.getBytes("US-ASCII") ++ payload)
 
-    val jpegs = framesRgb.map { img =>
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "jpg", bos)
-      bos.toByteArray
-    }
+    val jpegs = framesRgb.map(ImageHash.writeImage(_, "jpg"))
     val avih = le32(1000000L / fps) ++ le32(0) ++ le32(0) ++ le32(0) ++
       le32(jpegs.length) ++ le32(0) ++ le32(1) ++ le32(0) ++
       le32(w) ++ le32(h) ++ le32(0) ++ le32(0) ++ le32(0) ++ le32(0)

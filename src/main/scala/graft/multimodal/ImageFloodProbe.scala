@@ -83,11 +83,8 @@ object ImageFloodProbe {
     img
   }
 
-  private def png(img: java.awt.image.BufferedImage): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
-  }
+  private def png(img: java.awt.image.BufferedImage): Array[Byte] =
+    ImageHash.writeImage(img, "png")
 
   /** Run the flood at `maxBucket` and measure truncation + planted
     * recall together. Images are built executor-side (the probe is

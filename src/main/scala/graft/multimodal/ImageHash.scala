@@ -30,9 +30,26 @@ object ImageHash {
   // an in-memory image creates and deletes a temp file. The media
   // pipelines en/decode thousands of small frames per task (r20
   // profile: the per-clip syscall churn dominated the decode stage),
-  // so back the streams with memory instead — bit-identical codec
-  // output, process-wide, idempotent.
-  javax.imageio.ImageIO.setUseCache(false)
+  // so every codec call passes an explicit memory-backed stream — the
+  // JVM-wide `ImageIO.setUseCache` flag stays untouched.
+
+  /** Decodes encoded image bytes; null when no reader recognizes them. */
+  def readImage(bytes: Array[Byte]): java.awt.image.BufferedImage = {
+    val in = new javax.imageio.stream.MemoryCacheImageInputStream(
+      new java.io.ByteArrayInputStream(bytes))
+    // ImageIO.read closes the stream itself unless it returns null
+    val img = javax.imageio.ImageIO.read(in)
+    if (img == null) in.close()
+    img
+  }
+
+  /** Encodes `img` in `format` (any ImageIO writer format name). */
+  def writeImage(img: java.awt.image.RenderedImage, format: String): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
+    try javax.imageio.ImageIO.write(img, format, out) finally out.close()
+    bos.toByteArray
+  }
 
   private val Size = 32
   // DCT-II basis, precomputed once per JVM: C[u][x] = cos((2x+1)uπ/64)
@@ -46,7 +63,7 @@ object ImageHash {
   def phash64(bytes: Array[Byte]): java.lang.Long = {
     if (bytes == null || bytes.length < 8) return null
     try {
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+      val img = readImage(bytes)
       if (img == null) return null
       // progressive 2x halving before the final resize: one-shot
       // bilinear to 32x32 only READS a 2x2 neighborhood per output

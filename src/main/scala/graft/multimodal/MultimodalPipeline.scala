@@ -103,7 +103,7 @@ object MultimodalPipeline {
       payloads.map { bytes =>
         if (bytes == null || bytes.isEmpty) null
         else try {
-          val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+          val img = ImageHash.readImage(bytes)
           if (img == null) null
           else {
             val w = img.getWidth; val h = img.getHeight
@@ -696,10 +696,8 @@ object MultimodalPipeline {
           while (x < w) { img.setRGB(x, y, (x * 31 + y * 17 + i * 97) & 0xFFFFFF); x += 1 }
           y += 1
         }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
         Row(10000L + i, "image", "image/png",
-          Integer.valueOf(w), Integer.valueOf(h), null, bos.toByteArray)
+          Integer.valueOf(w), Integer.valueOf(h), null, ImageHash.writeImage(img, "png"))
       } else {
         val rate = 8000f
         val frames = 800 + (i % 5) * 200
@@ -826,7 +824,7 @@ object MultimodalPipeline {
       payloads.map { bytes =>
         if (bytes == null || bytes.isEmpty) bytes
         else try {
-          val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+          val img = ImageHash.readImage(bytes)
           if (img == null) bytes
           else {
             val out = new java.awt.image.BufferedImage(width, height,
@@ -836,9 +834,7 @@ object MultimodalPipeline {
               java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
             gph.drawImage(img, 0, 0, width, height, null)
             gph.dispose()
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(out, format, bos)
-            bos.toByteArray
+            ImageHash.writeImage(out, format)
           }
         } catch { case _: Exception => bytes }
       }

@@ -1010,6 +1010,11 @@ object Decontaminate {
                           suites: Seq[(String, DataFrame, String)],
                           shingleSize: Int = 8, minOverlap: Int = 1): DataFrame = {
     require(suites.nonEmpty, "contaminationReport needs at least one suite")
+    // suites are tagged by name: a shared name would merge their counts
+    val suiteNames = suites.map(_._1)
+    val dupNames = suiteNames.diff(suiteNames.distinct).distinct
+    require(dupNames.isEmpty,
+      s"contaminationReport suite names must be unique; duplicated: ${dupNames.mkString(", ")}")
     graft.expr.GraftFunctions.ensure(docs.sparkSession)
     def shingleHashes(df: DataFrame, c: String): DataFrame = df
       .select(explode(graft.expr.GraftFunctions.wordShingles(

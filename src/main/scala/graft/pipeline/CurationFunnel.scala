@@ -1,86 +1,52 @@
 package graft.pipeline
 
 import graft.functions.TextFunctions
-import graft.operators.LmScore
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
  * Curation FUNNEL accounting — "where did my data go": one row per
- * pipeline stage with how many documents (and tokens) that stage
- * drops, each document attributed to the FIRST stage that would drop
- * it, in the [[CurationTransformer]] stage order (exact dedup →
- * semantic dedup → quality → repetition → perplexity → kept). Every
- * production corpus pipeline publishes exactly this table; without it
- * a threshold change is a blind knob.
+ * stage with how many documents (and whitespace tokens) that stage
+ * dropped, each document attributed to the FIRST stage that dropped
+ * it, in [[CurationTransformer]] stage order, plus the `kept` row.
+ * Every production corpus pipeline publishes exactly this table;
+ * without it a threshold change is a blind knob.
  *
- * Scale shape: ONE labeled corpus pass. The exact-dup flag reuses the
- * minority-shuffle discipline of `Dedup.exact` — an ids-free
- * fingerprint aggregation (the shuffle carries (fp, fp2, min-id)
- * per GROUP, never rows) finds duplicate groups, which broadcast back
- * as (fingerprint → keeper id); every other stage is a row-local
- * column (quality/repetition heuristics, the native `unigram_ppl`
- * probe). The final aggregation groups by the stage LABEL — six rows.
- * Nothing here shuffles the corpus.
- *
- * The deterministic stages make the whole report SQL-replayable (the
- * funnel gate is a DuckDB hash match); the optional `semdedupDrops`
- * frame (from [[graft.operators.SemDeDup.dropList]]) plugs the one
- * non-SQL stage in as a precomputed id list.
+ * The funnel has no stage logic of its own: it runs
+ * [[CurationTransformer.curate]] with a mark that observes (row count,
+ * token sum) at every stage boundary, completes all boundaries with
+ * ONE count over the curated frame, and differences adjacent
+ * boundaries. So it reports every enabled stage, decided exactly as a
+ * pipeline run decides it.
  */
 object CurationFunnel {
 
-  def report(docs: DataFrame, textCol: String, idCol: String,
-             qualityMin: Double = 0.3, maxRepetition: Double = 0.5,
-             perplexityLm: Option[LmScore.UnigramLm] = None,
-             perplexityMax: Option[Double] = None,
-             semdedupDrops: Option[DataFrame] = None): DataFrame = {
-    val spark = docs.sparkSession
-    graft.expr.GraftFunctions.ensure(spark)
-    // duplicate groups: ids-free aggregate, (fp1, fp2, keeper) broadcast
-    val fp1 = xxhash64(col(textCol))
-    val fp2 = xxhash64(lit(0x9E3779B9L), col(textCol))
-    val dupKeepers = docs
-      .select(fp1.as("_f1"), fp2.as("_f2"), col(idCol).as("_did"))
-      .groupBy(col("_f1"), col("_f2"))
-      .agg(min(col("_did")).as("_keeper"), count(lit(1)).as("_n"))
-      .where(col("_n") > 1)
-      .select("_f1", "_f2", "_keeper")
-    var flagged = docs
-      .withColumn("_f1", fp1).withColumn("_f2", fp2)
-      .join(broadcast(dupKeepers), Seq("_f1", "_f2"), "left")
-      .withColumn("_is_dup",
-        col("_keeper").isNotNull && col(idCol) =!= col("_keeper"))
-    flagged = semdedupDrops match {
-      case Some(drops) =>
-        val d = drops.select(drops.columns.head).toDF("_sem_id")
-          .withColumn("_is_sem_src", lit(true))
-        flagged.join(broadcast(d), col(idCol) === col("_sem_id"), "left")
-          .withColumn("_is_sem", coalesce(col("_is_sem_src"), lit(false)))
-      case None => flagged.withColumn("_is_sem", lit(false))
+  /** `(stage, docs, tokens, doc_share)` for the stages that dropped at
+    * least one document (and `kept`, when anything survives), in stage
+    * order. `options` are the transformer's options (`input.table` is
+    * not read: `docs` is the input); `tables` resolves every other
+    * table they name. */
+  def report(docs: DataFrame, options: Map[String, String],
+             tables: String => DataFrame = Map.empty[String, DataFrame]): DataFrame = {
+    val tokens = TextFunctions.tokenCountWs(col(options.getOrElse("text.column", "text")))
+      .cast("long")
+    val labels = Seq.newBuilder[String]
+    val curated = CurationTransformer.curate(docs, tables, options, (label, df) => {
+      labels += label
+      df.observe(label, count(lit(1)).as("docs"), coalesce(sum(tokens), lit(0L)).as("tokens"))
+    })
+    val counted = curated.agg(count(lit(1)))
+    counted.collect()
+    val observed = counted.queryExecution.observedMetrics
+    // a boundary is absent only when the optimizer pruned an empty branch
+    val at = labels.result().map(l =>
+      l -> observed.get(l).fold((0L, 0L))(r => (r.getLong(0), r.getLong(1))))
+    val total = at.headOption.fold(0L)(_._2._1)
+    val rows = at.zip(at.drop(1).map(_._2) :+ ((0L, 0L))).collect {
+      case ((label, (d, t)), (nextD, nextT)) if d > nextD => (label, d - nextD, t - nextT)
     }
-    val ppl: org.apache.spark.sql.Column = perplexityLm match {
-      case Some(lm) => round(LmScore.perplexityCol(col(textCol), lm), 4)
-      case None => lit(null).cast("double")
-    }
-    val pplMax = perplexityMax.map(lit).getOrElse(lit(Double.MaxValue))
-    val labeled = flagged
-      .withColumn("_q", TextFunctions.qualityScore(col(textCol)))
-      .withColumn("_rep", round(TextFunctions.repetitionRatio(col(textCol)), 4))
-      .withColumn("_ppl", ppl)
-      .withColumn("stage",
-        when(col("_is_dup"), "dropped_exact_dup")
-          .when(col("_is_sem"), "dropped_semantic_dup")
-          .when(col("_q") < qualityMin, "dropped_quality")
-          .when(col("_rep") > maxRepetition, "dropped_repetition")
-          .when(col("_ppl").isNotNull && col("_ppl") > pplMax, "dropped_perplexity")
-          .otherwise("kept"))
-    val total = docs.agg(count(lit(1)).as("_total"))
-    labeled.groupBy(col("stage"))
-      .agg(count(lit(1)).as("docs"),
-        sum(TextFunctions.tokenCountWs(col(textCol)).cast("long")).as("tokens"))
-      .crossJoin(broadcast(total))
+    docs.sparkSession.createDataFrame(rows).toDF("stage", "docs", "tokens")
       .select(col("stage"), col("docs"), col("tokens"),
-        round(col("docs").cast("double") / col("_total"), 6).as("doc_share"))
+        round(col("docs").cast("double") / lit(total), 6).as("doc_share"))
   }
 }

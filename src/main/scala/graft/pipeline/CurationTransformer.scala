@@ -10,13 +10,14 @@ import java.time.LocalDate
 
 /**
  * End-to-end training-data curation as ONE config-runnable pipeline
- * stage: exact dedup → (optional) semantic dedup → quality filter →
- * language annotation → token accounting → (optional) perplexity
- * scoring → deterministic split labels. Composes the operator library
- * the way a production corpus pipeline would — each stage is a narrow
+ * stage: URL blocklist → domain cap → exact dedup → semantic dedup →
+ * quality → repetition → line rules → perplexity → DSIR → classifier →
+ * split labels (optional tiers only when enabled; survivors also get
+ * language, token and fingerprint columns). Each stage is a narrow
  * declarative transform; the optional stages are config-keyed so one
  * pipeline definition covers both the cheap daily run and the full
- * curation pass.
+ * curation pass. [[CurationFunnel]] runs the same chain to report
+ * what each stage dropped.
  *
  * Options:
  *   `input.table`   (required) metastore table with (id, text) columns
@@ -76,7 +77,7 @@ import java.time.LocalDate
  *                        deterministically by hash rank)
  *
  * Optional line-wise quality rules (L51, RefinedWeb/Gopher — applied
- * WITH the document-level quality filter):
+ * right after the document-level quality and repetition filters):
  *   `line.rules.enabled` default false
  *   `line.max.bullet`    default 0.9  — max share of bullet lines
  *   `line.max.ellipsis`  default 0.3  — max share of "..."-ended lines
@@ -112,6 +113,27 @@ final class CurationTransformer extends Transformer {
 
   override def run(ms: MetastoreReader, infoDate: LocalDate,
                    options: Map[String, String]): DataFrame = {
+    def table(name: String) = ms.getTable(name, Some(infoDate), Some(infoDate))
+    CurationTransformer.curate(table(options("input.table")), table, options,
+      (_, df) => df)
+  }
+}
+
+object CurationTransformer {
+
+  /** `mark(label, frame)` gets the frame ENTERING stage `label`
+    * (`dropped_<stage>`, or `kept` for the output) and returns the
+    * frame the chain continues with. */
+  type Mark = (String, DataFrame) => DataFrame
+
+  /** The stage chain over the input rows `read`; `table` resolves the
+    * other tables the options name. `mark` is applied at each enabled
+    * stage's boundary, in chain order, on the main chain only (the
+    * fits read the unmarked corpus). Stage inputs are deterministic
+    * (the [[Dedup.exact]] contract), so an observing mark counts the
+    * same rows whichever action completes it first. */
+  def curate(read: DataFrame, table: String => DataFrame,
+             options: Map[String, String], mark: Mark): DataFrame = {
     val idCol = options.getOrElse("id.column", "doc_id")
     val textCol = options.getOrElse("text.column", "text")
     val qualityMin = options.getOrElse("quality.min", "0.3").toDouble
@@ -119,24 +141,23 @@ final class CurationTransformer extends Transformer {
     val weights = options.getOrElse("split.weights", "0.9,0.05,0.05")
       .split(",").map(_.trim.toDouble).toSeq
 
-    val read = ms.getTable(options("input.table"), Some(infoDate), Some(infoDate))
-
     // URL tier first: a domain prune reads zero text bytes, so it runs
     // before anything that touches the (much wider) text column
-    val docs = options.get("url.column") match {
+    def urlTier(m: Mark): DataFrame = options.get("url.column") match {
       case None => read
       case Some(urlCol) =>
         val blocked = options.get("url.blocklist")
           .map(_.split(",").map(_.trim.toLowerCase).filter(_.nonEmpty).toSet)
           .getOrElse(Set.empty[String])
-        val unblocked =
-          graft.operators.UrlCuration.filterBlockedDomains(read, urlCol, blocked)
+        val unblocked = graft.operators.UrlCuration.filterBlockedDomains(
+          m("dropped_url_blocklist", read), urlCol, blocked)
         options.get("url.max.per.domain") match {
           case None => unblocked
-          case Some(cap) =>
-            graft.operators.UrlCuration.capPerDomain(unblocked, urlCol, idCol, cap.toInt)
+          case Some(cap) => graft.operators.UrlCuration.capPerDomain(
+            m("dropped_url_domain_cap", unblocked), urlCol, idCol, cap.toInt)
         }
     }
+    val docs = urlTier((_, df) => df)
     // ── r20 overlap (guide §2.6 "overlap independent jobs") ─────────
     // The pipeline's EAGER model constructions are chains of small
     // driver-blocking jobs and mutually independent: the semantic-dedup
@@ -158,16 +179,14 @@ final class CurationTransformer extends Transformer {
 
     val semInputs = if (!options.get("semdedup.enabled").contains("true")) None
       else Some((
-        ms.getTable(options("semdedup.table"), Some(infoDate), Some(infoDate)),
+        table(options("semdedup.table")),
         options.getOrElse("semdedup.embedding.column", "embedding"),
         options.getOrElse("semdedup.id.column", idCol),
         options.getOrElse("semdedup.clusters", "8").toInt,
         options.getOrElse("semdedup.threshold", "0.95").toDouble))
     val pplEnabled = options.get("perplexity.enabled").contains("true")
     val pplRef = if (!pplEnabled) None
-      else Some(options.get("perplexity.reference.table")
-        .map(t => ms.getTable(t, Some(infoDate), Some(infoDate)))
-        .getOrElse(docs))
+      else Some(options.get("perplexity.reference.table").map(table).getOrElse(docs))
     val groupSafe = options.get("split.group.safe").contains("true")
     // `overlap.timeout.seconds` bounds every block await (ADVICE r20:
     // a hung fit job used to stall the pipeline forever); default Inf
@@ -240,51 +259,51 @@ final class CurationTransformer extends Transformer {
 
     // composed AFTER every block has launched (the probe await must not
     // serialize in front of the sibling chains)
+    val main = mark("dropped_exact_dup", urlTier(mark))
     val deduped = probeFut match {
-      case None => Dedup.exact(docs, textCol, idCol)
+      case None => Dedup.exact(main, textCol, idCol)
       case Some(f) =>
-        Dedup.exactFromProbe(docs, textCol, idCol, Await.result(f, awaitDur))
+        Dedup.exactFromProbe(main, textCol, idCol, Await.result(f, awaitDur))
     }
     val semDeduped = semFut.fold(deduped)(f =>
-      deduped.join(Await.result(f, awaitDur),
+      mark("dropped_semantic_dup", deduped).join(Await.result(f, awaitDur),
         col(idCol) === col("_drop_id"), "left_anti"))
 
-    val lineKeep =
-      if (!options.get("line.rules.enabled").contains("true")) lit(true)
-      else TextFunctions.lineQualityKeep(col(textCol),
-        options.getOrElse("line.max.bullet", "0.9").toDouble,
-        options.getOrElse("line.max.ellipsis", "0.3").toDouble,
-        options.getOrElse("line.max.nonalpha", "0.5").toDouble)
-
-    val scored = semDeduped
+    // one filter per stage boundary; Catalyst combines unmarked ones
+    val qualityKept = mark("dropped_quality", semDeduped)
       .withColumn("quality", TextFunctions.qualityScore(col(textCol)))
+      .where(col("quality") >= qualityMin)
+    val repetitionKept = mark("dropped_repetition", qualityKept)
       .withColumn("repetition", round(TextFunctions.repetitionRatio(col(textCol)), 4))
-      .where(col("quality") >= qualityMin && col("repetition") <= maxRepetition &&
-        lineKeep)
+      .where(col("repetition") <= maxRepetition)
+    val lineKept =
+      if (!options.get("line.rules.enabled").contains("true")) repetitionKept
+      else mark("dropped_line_rules", repetitionKept).where(
+        TextFunctions.lineQualityKeep(col(textCol),
+          options.getOrElse("line.max.bullet", "0.9").toDouble,
+          options.getOrElse("line.max.ellipsis", "0.3").toDouble,
+          options.getOrElse("line.max.nonalpha", "0.5").toDouble))
+
+    val scored = lineKept
       .withColumn("lang_pred", TextFunctions.langId(col(textCol)))
       .withColumn("n_tokens", TextFunctions.tokenCountWs(col(textCol)))
       .withColumn("fingerprint", TextFunctions.fingerprint(col(textCol)))
 
     // perplexity tier: bounded fit (one token-count aggregation +
-    // capped vocab) on the reference, row-local native scoring, left
-    // join back so tokenless docs keep a null score instead of
-    // vanishing. The fit input default is the RAW read, not the
-    // curated frame: a trusted reference table is the production
-    // knob, and without one the fit must not RE-EXECUTE the dedup →
-    // semdedup DAG just to count tokens — at corpus scale that
-    // doubles the most expensive stages for a distribution estimate
-    // the raw scan approximates within the duplicates' weight shift.
-    // (The fit itself was launched on the overlap pool above.)
-    val withPpl = pplFut match {
+    // capped vocab) on the reference, row-local native scoring (no
+    // shuffle); tokenless docs score null and pass the cut. The fit
+    // input default is the RAW read, not the curated frame: a trusted
+    // reference table is the production knob, and without one the fit
+    // must not RE-EXECUTE the dedup → semdedup DAG just to count
+    // tokens — at corpus scale that doubles the most expensive stages
+    // for a distribution estimate the raw scan approximates within the
+    // duplicates' weight shift.
+    val pplLm = pplFut.map(Await.result(_, awaitDur))
+    val withPpl = pplLm match {
       case None => scored
-      case Some(f) =>
-        val lm = Await.result(f, awaitDur)
-        // row-local native scoring: no explode/join/shuffle, and no
-        // second evaluation of the `scored` subtree (the join
-        // formulation derived ppl FROM scored and joined it back —
-        // the whole upstream DAG ran twice)
+      case Some(lm) =>
         graft.expr.GraftFunctions.ensure(scored.sparkSession)
-        val withCol = scored.withColumn("perplexity",
+        val withCol = mark("dropped_perplexity", scored).withColumn("perplexity",
           round(LmScore.perplexityCol(col(textCol), lm), 4))
         options.get("perplexity.max").map(_.toDouble) match {
           case Some(maxPpl) =>
@@ -297,16 +316,16 @@ final class CurationTransformer extends Transformer {
     // fits are bounded (capped-vocab LM aggregates / sampled LBFGS)
     // and both SCORE row-locally through the native probe — adding
     // either tier adds zero shuffles to the corpus side
-    val dsirTarget = options.get("dsir.target.table")
-      .map(t => ms.getTable(t, Some(infoDate), Some(infoDate)))
+    val dsirTarget = options.get("dsir.target.table").map(table)
     val withDsir =
       if (!options.get("dsir.enabled").contains("true")) withPpl
       else {
-        val target = dsirTarget.get
-        val targetLm = LmScore.fitUnigram(target, textCol)
-        val rawLm = LmScore.fitUnigram(docs, textCol)
+        val targetLm = LmScore.fitUnigram(dsirTarget.get, textCol)
+        // the perplexity tier fit `docs` too unless given a reference
+        val rawLm = pplLm.filter(_ => !options.contains("perplexity.reference.table"))
+          .getOrElse(LmScore.fitUnigram(docs, textCol))
         graft.expr.GraftFunctions.ensure(withPpl.sparkSession)
-        val annotated = withPpl.withColumn("dsir_logw",
+        val annotated = mark("dropped_dsir", withPpl).withColumn("dsir_logw",
           round(graft.operators.Dsir.logWeightCol(col(textCol), targetLm, rawLm), 4))
         options.get("dsir.top.fraction").map(_.toDouble) match {
           case Some(frac) =>
@@ -320,7 +339,7 @@ final class CurationTransformer extends Transformer {
         val model = graft.operators.QualityClassifier.fit(
           positives = dsirTarget.get, negatives = docs, textCol = textCol)
         graft.expr.GraftFunctions.ensure(withDsir.sparkSession)
-        val annotated = withDsir.withColumn("clf_score",
+        val annotated = mark("dropped_classifier", withDsir).withColumn("clf_score",
           round(graft.operators.QualityClassifier.scoreCol(col(textCol), model), 4))
         options.get("classifier.min").map(_.toDouble) match {
           case Some(min) => annotated.where(col("clf_score") >= min)
@@ -342,7 +361,7 @@ final class CurationTransformer extends Transformer {
         case Some(other) => throw new IllegalArgumentException(
           s"split.bucket must be 'default' or 'replayable', got '$other'")
       }
-    groupsFut match {
+    val labelled = groupsFut match {
       case None =>
         Sampling.withSplitLabel(withClf, idCol, weights, Seq("train", "val", "test"),
           bucketCol = bucketOf.map(_(col(idCol))))
@@ -350,6 +369,7 @@ final class CurationTransformer extends Transformer {
         Sampling.withGroupSafeSplitLabel(withClf, idCol, Await.result(f, awaitDur),
           weights, Seq("train", "val", "test"), bucketOf = bucketOf)
     }
+    mark("kept", labelled)
 
     } catch { case e: Throwable =>
       // first failure (or await timeout) kills the SIBLING blocks'

@@ -19,6 +19,23 @@ class ImageHashSpec extends SparkSpec {
     javax.imageio.ImageIO.write(img, "jpg", bos); bos.toByteArray
   }
 
+  test("codec calls leave the JVM-wide ImageIO cache setting alone; hashes unchanged") {
+    val before = javax.imageio.ImageIO.getUseCache
+    val h = ImageHash.phash64(png(pattern(64, 64, 42)))
+    val avi = Avi.encodeMjpeg(Seq(ImageHash.patternImage(64, 48, 7L),
+      ImageHash.patternImage(64, 48, 8L)), fps = 5)
+    val meta = Avi.parse(avi)
+    val frames = (0 until 2).map(i => ImageHash.phash64(Avi.frameBytes(avi, meta, i)))
+    assert(javax.imageio.ImageIO.getUseCache == before,
+      "phash and the AVI frame round trip must not flip ImageIO's process-wide cache flag")
+    // values the file-cache-flag implementation produced for the same inputs
+    assert(h == -828668625686083495L, s"png phash moved: $h")
+    assert(frames == Seq(7202101541472926325L, 1913535434693342877L),
+      s"AVI frame phashes moved: $frames")
+    assert(avi.length == 2368 && java.util.Arrays.hashCode(avi) == 1678385016,
+      "MJPEG container bytes moved")
+  }
+
   test("identical bytes hash identically; determinism across calls") {
     val b = png(pattern(64, 64, 42))
     val h1 = ImageHash.phash64(b); val h2 = ImageHash.phash64(b.clone())

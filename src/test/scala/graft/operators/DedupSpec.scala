@@ -158,6 +158,18 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("L16c report rejects duplicate suite names, naming the duplicate") {
+    val corpus = Seq((1L, "the quick brown fox jumps over the lazy dog today"))
+      .toDF("doc_id", "text")
+    val suite = Seq("the quick brown fox jumps over the lazy dog").toDF("question")
+    val e = intercept[IllegalArgumentException] {
+      Decontaminate.contaminationReport(corpus, "text", "doc_id",
+        Seq(("qa", suite, "question"), ("other", suite, "question"), ("qa", suite, "question")),
+        shingleSize = 5)
+    }
+    assert(e.getMessage.contains("duplicated: qa"), e.getMessage)
+  }
+
   test("L16b bloom decontamination: identical result to the exact path on real data") {
     val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val bench = corpus.where(col("doc_id") % 40 === 0).select(col("text").as("q"))

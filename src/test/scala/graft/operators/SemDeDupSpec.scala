@@ -139,39 +139,49 @@ class SemDeDupSpec extends SparkSpec {
     val e = emb(1L -> Array(1f, 0f, 0f, 0f), 2L -> Array(2f, 0f, 0f, 0f))
     val assigned = Clustering.assign(e, "embedding", centroids)
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val queries = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
+      override def onOtherEvent(ev: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        ev match {
+          case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            queries.incrementAndGet()
+          case _ =>
+        }
     }
-    def countJobs(body: => Unit): Int = {
+    /** (Spark jobs, SQL executions) launched by `body`. */
+    def launched(body: => Unit): (Int, Int) = {
       spark.sparkContext.addSparkListener(listener)
-      try { jobs.set(0); body; Thread.sleep(500); jobs.get() }
+      try { jobs.set(0); queries.set(0); body; Thread.sleep(500); (jobs.get(), queries.get()) }
       finally spark.sparkContext.removeSparkListener(listener)
     }
     // the r9 verdict's ask: no dim probe when the caller knows dim
-    val pairJobs = countJobs {
+    val pairJobs = launched {
       SemDeDup.dupPairs(assigned, "embedding", "vec_id", threshold = 0.9, dim = 4)
-    }
+    }._1
     assert(pairJobs == 0, s"dupPairs with known dim must be lazy; launched $pairJobs job(s)")
     // dedup construction necessarily runs the connected-components
     // rounds (iterative, documented); the gate must be the ONLY
-    // difference between the skip paths and the gated path
-    val skipJobs = countJobs {
+    // difference between the skip paths and the gated path. Counted in
+    // SQL executions (one per action): AQE splits one action into a
+    // varying number of stage jobs from run to run
+    val skipQueries = launched {
       SemDeDup.dedup(e, "embedding", "vec_id", centroids, threshold = 0.9,
         maxBroadcastIds = Long.MaxValue)
-    }
-    val shuffleJobs = countJobs {
+    }._2
+    val shuffleQueries = launched {
       SemDeDup.dedup(e, "embedding", "vec_id", centroids, threshold = 0.9,
         maxBroadcastIds = 0L)
-    }
-    val gatedJobs = countJobs {
+    }._2
+    val gatedQueries = launched {
       SemDeDup.dedup(e, "embedding", "vec_id", centroids, threshold = 0.9,
         maxBroadcastIds = 5L)
-    }
-    assert(skipJobs == shuffleJobs,
-      s"both gate-skip paths must cost the same: $skipJobs vs $shuffleJobs")
-    assert(gatedJobs > skipJobs,
-      s"the enabled gate must add its aggregate job: gated=$gatedJobs skip=$skipJobs")
+    }._2
+    assert(skipQueries == shuffleQueries,
+      s"both gate-skip paths must cost the same: $skipQueries vs $shuffleQueries")
+    assert(gatedQueries > skipQueries,
+      s"the enabled gate must add its aggregate query: gated=$gatedQueries skip=$skipQueries")
   }
 
   test("real embeddings: dedup is idempotent and only removes grouped members") {
