@@ -4,7 +4,7 @@ import graft.functions.TextFunctions
 import graft.meta.{DataFormat, MetaTable, Metastore, PartitionScheme}
 import graft.offset.{OffsetInfo, OffsetManager, OffsetValue}
 import graft.operators.{AnnSearch, AsofJoin, Dedup, EmbedDedup, NgramJaccard, RangeJoin, Sessionize}
-import graft.pipeline.{IdentityTransformer, JobDef, Orchestrator, Transformer}
+import graft.pipeline.{IdentityTransformer, JobDef, Orchestrator, RunParams, Transformer}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -368,14 +368,14 @@ object SparkEntry {
       ms.register(MetaTable("cust_flt", metaPath("ident_out")))
       val d = LocalDate.parse("2024-03-01")
       ms.saveTable("cust_src", d, t(s, dir, "customer"))
-      val orch = new Orchestrator(ms, rerunSucceeded = true)
-      orch.run(Seq(JobDef(
+      val orch = new Orchestrator(ms)
+      orch.runWith(Seq(JobDef(
         name = "filter_customers", outputTable = "cust_flt",
         transformer = new IdentityTransformer, inputTables = Seq("cust_src"),
         infoDateExpr = "@runDate",
         options = Map("input.table" -> "cust_src",
           "columns" -> "c_custkey,c_mktsegment,c_acctbal",
-          "filter" -> "c_acctbal > 5000"))), d)
+          "filter" -> "c_acctbal > 5000"))), RunParams.Rerun(d))
       ms.getTable("cust_flt", Some(d), Some(d))
         .select("c_custkey", "c_mktsegment", "c_acctbal")
     }),
@@ -395,12 +395,12 @@ object SparkEntry {
         ms.saveTable("docs_py", d, docs(s, dir).select("doc_id", "n_chars"))
       }
       val script = pyClientScript("double_chars.py")
-      val orch = new Orchestrator(ms, rerunSucceeded = true)
-      val res = orch.run(Seq(JobDef(
+      val orch = new Orchestrator(ms)
+      val res = orch.runWith(Seq(JobDef(
         name = "py_double", outputTable = "docs_py_out",
         transformer = new graft.pipeline.ProcessTransformer(
           s"python3 $script @in @out @infoDate", metaPath("py_staging"), Seq("docs_py")),
-        inputTables = Seq("docs_py"), infoDateExpr = "@runDate")), d)
+        inputTables = Seq("docs_py"), infoDateExpr = "@runDate")), RunParams.Rerun(d))
       res.collectFirst { case f: graft.pipeline.TaskResult.Failed => throw f.error }
       ms.getTable("docs_py_out", Some(d), Some(d))
         .select("doc_id", "n_chars", "n2")
@@ -434,10 +434,10 @@ object SparkEntry {
         options = Map("input.table" -> "bf_src")))
       val orch = new Orchestrator(ms, bk)
       // seed: days 2 and 4 already ran
-      orch.runWith(jobs, graft.pipeline.RunParams.Rerun(days(1)))
-      orch.runWith(jobs, graft.pipeline.RunParams.Rerun(days(3)))
+      orch.runWith(jobs, RunParams.Rerun(days(1)))
+      orch.runWith(jobs, RunParams.Rerun(days(3)))
       // the backfill fills the gaps (days 1, 3, 5)
-      orch.runWith(jobs, graft.pipeline.RunParams.Historical(days.head, days.last))
+      orch.runWith(jobs, RunParams.Historical(days.head, days.last))
       ms.getTable("bf_out", Some(days.head), Some(days.last))
         .groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n"), dsum(col("c_acctbal")).as("bal_sum"))
@@ -1216,11 +1216,11 @@ object SparkEntry {
       ms.register(MetaTable("docs_cur", metaPath("cur_out")))
       val d = LocalDate.parse("2024-05-01")
       stageOnce(s"cur_src|$dir") { ms.saveTable("docs_raw", d, docs(s, dir)) }
-      new Orchestrator(ms, rerunSucceeded = true).run(Seq(JobDef(
+      new Orchestrator(ms).runWith(Seq(JobDef(
         "curate", "docs_cur", new graft.pipeline.CurationTransformer,
         Seq("docs_raw"), infoDateExpr = "@runDate",
         options = Map("input.table" -> "docs_raw", "quality.min" -> "0.2",
-          "split.bucket" -> "replayable"))), d)
+          "split.bucket" -> "replayable"))), RunParams.Rerun(d))
       ms.getTable("docs_cur", Some(d), Some(d))
         .groupBy("split", "lang_pred")
         .agg(count(lit(1)).as("n"), sum("n_tokens").as("total_tokens"))
@@ -1252,7 +1252,7 @@ object SparkEntry {
         ms.saveTable("emb_v2", d,
           withPlantedIdenticalDups(t(s, dir, "embeddings"), "vec_id", "embedding"))
       }
-      new Orchestrator(ms, rerunSucceeded = true).run(Seq(JobDef(
+      new Orchestrator(ms).runWith(Seq(JobDef(
         "curate_v2", "docs_cur_v2", new graft.pipeline.CurationTransformer,
         Seq("docs_raw_v2", "emb_v2"), infoDateExpr = "@runDate",
         options = Map(
@@ -1261,7 +1261,7 @@ object SparkEntry {
           "semdedup.id.column" -> "vec_id", "semdedup.threshold" -> "0.92",
           "perplexity.enabled" -> "true",
           "split.group.safe" -> "true",
-          "split.bucket" -> "replayable"))), d)
+          "split.bucket" -> "replayable"))), RunParams.Rerun(d))
       ms.getTable("docs_cur_v2", Some(d), Some(d))
         .groupBy("split", "lang_pred")
         .agg(count(lit(1)).as("n"), sum("n_tokens").as("total_tokens"),

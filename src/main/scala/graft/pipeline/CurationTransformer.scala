@@ -171,9 +171,15 @@ object CurationTransformer {
     // order — and every metastore read stays on the caller thread (the
     // reader's bookkeeping is not part of the overlap). Blocks that are
     // not enabled never submit; with one block the pool degenerates to
-    // the serial behavior. All blocks share one job group so a failure
-    // anywhere CANCELS the siblings' outstanding jobs (ADVICE r20)
-    // instead of letting them run to completion under a dead pipeline.
+    // the serial behavior. Measured keep (perfbench `curation`, seed 7,
+    // interleaved pairs, 4-core host): fully serial without the shared
+    // probe ran `run_s` 32.5 s against 28.3 s (slower in 5 of 6 pairs);
+    // the pool without the probe 28.0 s against 26.1 s (7 of 8 pairs).
+    // Pool threads are created by the caller's submits and inherit its
+    // local properties: the blocks run in the caller's job group (a
+    // task kill reaches them) and set only their job description. One
+    // job tag lets a failure anywhere CANCEL the siblings' outstanding
+    // jobs (ADVICE r20) instead of letting them run under a dead pipeline.
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
 
@@ -188,21 +194,14 @@ object CurationTransformer {
     val pplRef = if (!pplEnabled) None
       else Some(options.get("perplexity.reference.table").map(table).getOrElse(docs))
     val groupSafe = options.get("split.group.safe").contains("true")
-    // `overlap.timeout.seconds` bounds every block await (ADVICE r20:
-    // a hung fit job used to stall the pipeline forever); default Inf
-    // preserves the long-job posture of production batch runs.
-    val awaitDur = options.get("overlap.timeout.seconds")
-      .map(s => Duration(s.toLong, java.util.concurrent.TimeUnit.SECONDS))
-      .getOrElse(Duration.Inf)
     val nBlocks = Seq(semInputs.isDefined, pplRef.isDefined, groupSafe, groupSafe)
       .count(identity)
+    val sc = docs.sparkSession.sparkContext
     val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, nBlocks))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    val sc = docs.sparkSession.sparkContext
-    val jobGroup = s"curation-overlap-${java.util.UUID.randomUUID()}"
-    // setJobGroup is thread-local like the description; each block sets
-    // (group, label) itself (guide §1.5 — pool threads would otherwise
-    // carry whatever the orchestrator happened to set at pool spin-up)
+    // tagged BEFORE the first submit creates a pool thread
+    val siblings = s"curation-fits-${java.util.UUID.randomUUID()}"
+    sc.addJobTag(siblings)
     try {
 
     // r21 (guide §2.4 fewer passes + VERDICT item 1): exact dedup's
@@ -210,8 +209,7 @@ object CurationTransformer {
     // probe aggregate the SAME corpus hash — when both consumers are
     // enabled (group-safe split), ONE materialized probe feeds both.
     val probeFut = if (!groupSafe) None else Some(Future {
-      sc.setJobGroup(jobGroup, "curation: shared exact/minhash dup probe",
-        interruptOnCancel = true)
+      sc.setJobDescription("curation: shared exact/minhash dup probe")
       Dedup.dupProbe(docs, textCol, idCol)
     })
 
@@ -220,8 +218,7 @@ object CurationTransformer {
     // ids SemDeDup drops, via anti-join so embedding-less docs survive
     val semFut = semInputs.map { case (emb, embCol, embIdCol, k, thr) =>
       Future {
-        sc.setJobGroup(jobGroup, "curation: semdedup fit + drop list",
-          interruptOnCancel = true)
+        sc.setJobDescription("curation: semdedup fit + drop list")
         // SemDeDup builds the drop list internally; anti-join it
         // directly rather than re-deriving it from the survivor set
         // (which would run the whole SemDeDup DAG a second time).
@@ -235,13 +232,11 @@ object CurationTransformer {
     // contract) and the group-safe pair groups launch BEFORE the
     // semantic block is awaited, so all the chains overlap
     val pplFut = pplRef.map(ref => Future {
-      sc.setJobGroup(jobGroup, "curation: perplexity reference fit",
-        interruptOnCancel = true)
+      sc.setJobDescription("curation: perplexity reference fit")
       LmScore.fitUnigram(ref, textCol)
     })
     val groupsFut = if (!groupSafe) None else Some(Future {
-      sc.setJobGroup(jobGroup, "curation: near-dup pair groups",
-        interruptOnCancel = true)
+      sc.setJobDescription("curation: near-dup pair groups")
       val jThr = options.getOrElse("split.group.jaccard", "0.8").toDouble
       // near-dup pairs come from the RAW input projection, not the
       // curated frame: scoring them on withPpl would evaluate the
@@ -253,7 +248,7 @@ object CurationTransformer {
       // intermediate.
       val pairs = Dedup.minhashNearDups(
         docs.select(col(idCol), col(textCol)), textCol, idCol, threshold = jThr,
-        precomputed = probeFut.map(Await.result(_, awaitDur)))
+        precomputed = probeFut.map(Await.result(_, Duration.Inf)))
       DupGroups.connectedComponents(pairs, "id_a", "id_b")
     })
 
@@ -263,10 +258,10 @@ object CurationTransformer {
     val deduped = probeFut match {
       case None => Dedup.exact(main, textCol, idCol)
       case Some(f) =>
-        Dedup.exactFromProbe(main, textCol, idCol, Await.result(f, awaitDur))
+        Dedup.exactFromProbe(main, textCol, idCol, Await.result(f, Duration.Inf))
     }
     val semDeduped = semFut.fold(deduped)(f =>
-      mark("dropped_semantic_dup", deduped).join(Await.result(f, awaitDur),
+      mark("dropped_semantic_dup", deduped).join(Await.result(f, Duration.Inf),
         col(idCol) === col("_drop_id"), "left_anti"))
 
     // one filter per stage boundary; Catalyst combines unmarked ones
@@ -298,7 +293,7 @@ object CurationTransformer {
     // tokens — at corpus scale that doubles the most expensive stages
     // for a distribution estimate the raw scan approximates within the
     // duplicates' weight shift.
-    val pplLm = pplFut.map(Await.result(_, awaitDur))
+    val pplLm = pplFut.map(Await.result(_, Duration.Inf))
     val withPpl = pplLm match {
       case None => scored
       case Some(lm) =>
@@ -366,19 +361,20 @@ object CurationTransformer {
         Sampling.withSplitLabel(withClf, idCol, weights, Seq("train", "val", "test"),
           bucketCol = bucketOf.map(_(col(idCol))))
       case Some(f) =>
-        Sampling.withGroupSafeSplitLabel(withClf, idCol, Await.result(f, awaitDur),
+        Sampling.withGroupSafeSplitLabel(withClf, idCol, Await.result(f, Duration.Inf),
           weights, Seq("train", "val", "test"), bucketOf = bucketOf)
     }
     mark("kept", labelled)
 
     } catch { case e: Throwable =>
-      // first failure (or await timeout) kills the SIBLING blocks'
-      // outstanding jobs and interrupts the pool threads (ADVICE r20):
-      // without this, a failed semdedup fit left the minhash chain
-      // burning cluster time under a pipeline that could only rethrow
-      sc.cancelJobGroup(jobGroup)
+      // first failure (or an interrupted await) kills the SIBLING
+      // blocks' outstanding jobs and interrupts the pool threads
+      // (ADVICE r20): without this, a failed semdedup fit left the
+      // minhash chain burning cluster time under a pipeline that could
+      // only rethrow
+      sc.cancelJobsWithTag(siblings)
       pool.shutdownNow()
       throw e
-    } finally { pool.shutdown(); () }
+    } finally { sc.removeJobTag(siblings); pool.shutdown() }
   }
 }

@@ -248,6 +248,10 @@ object TaskResult {
  * (reference: pramen/core .../core/runner/orchestrator/OrchestratorImpl.scala,
  * core/runner/jobrunner/ConcurrentJobRunnerImpl.scala).
  *
+ * [[runWith]] is the one run surface: [[RunParams]] decide which info
+ * dates each job runs ([[ScheduleStrategy.daysToRun]]); [[run]] is the
+ * `RunParams.Normal(runDate, newOnly = true)` shorthand.
+ *
  * Topologically orders jobs by (outputTable -> inputTables) edges and
  * runs every job whose dependencies are satisfied concurrently (the
  * reference's parallel task runner). Already-succeeded (table,
@@ -260,7 +264,6 @@ final class Orchestrator(
     metastore: Metastore,
     bookkeeper: BookkeeperStore = new Bookkeeper(),
     parallelism: Int = 4,
-    rerunSucceeded: Boolean = false,
     notifiers: Seq[PipelineNotificationTarget] = Seq.empty,
     lockDir: Option[String] = None,
     offsetManager: Option[graft.offset.OffsetStore] = None,
@@ -328,14 +331,11 @@ final class Orchestrator(
     scheduled
   }
 
-  def run(jobs: Seq[JobDef], runDate: LocalDate): Seq[TaskResult] = {
-    val t0 = System.currentTimeMillis()
-    runTree(splitLazy(jobs), job => Seq(runOne(job, runDate)),
-      rs => {
-        state.foreach(_.pipelineCompleted()) // disarm the shutdown hook first
-        notifiers.foreach(_.onPipelineCompletedInfo(pipelineInfo(runDate, t0, rs), rs))
-      })
-  }
+  /** Today's slot only: shorthand for `runWith` under
+    * `RunParams.Normal(runDate, newOnly = true)`. A forced re-run of a
+    * completed date is `runWith(jobs, RunParams.Rerun(date))`. */
+  def run(jobs: Seq[JobDef], runDate: LocalDate): Seq[TaskResult] =
+    runWith(jobs, RunParams.Normal(runDate, newOnly = true))
 
   /**
    * Run under explicit run params — the daily-operations entry point
@@ -343,7 +343,8 @@ final class Orchestrator(
    *
    *  - `RunParams.Normal`: today's slot + automatic catch-up of missed
    *    slots (`Late`) + re-runs of dates whose inputs landed after the
-   *    output ran (`Update`, within each job's `trackDays`);
+   *    output ran (`Update`, within each job's `trackDays`); with
+   *    `newOnly` (what [[run]] passes) today's slot alone;
    *  - `RunParams.Rerun`: force one date;
    *  - `RunParams.Historical`: `--date-from/--date-to` backfill,
    *    fill-gaps or force-rerun.
@@ -353,8 +354,7 @@ final class Orchestrator(
    * order with independent branches in parallel, so a multi-day
    * backfill completes table-by-table for each date with parents
    * before children.
-   */
-  /**
+   *
    * @param dateParallelism how many of one job's dates run
    *        concurrently. Default 1 (sequential, date order) — always
    *        correct, required for cumulative tables whose day N reads
@@ -386,7 +386,7 @@ final class Orchestrator(
     def runTask(job: JobDef)(t: TaskPreDef): TaskResult = {
       val force = t.reason == RunReason.Rerun || t.reason == RunReason.Update
       val r =
-        if (!force && !rerunSucceeded && bookkeeper.isAlreadyRan(job.outputTable, t.infoDate))
+        if (!force && bookkeeper.isAlreadyRan(job.outputTable, t.infoDate))
           TaskResult.Skipped(job.name, s"already succeeded for ${t.infoDate}")
         else executeTask(job, t.infoDate, reason = t.reason.toString)
       notifiers.foreach(_.onTaskCompleted(r, asOf))
@@ -520,25 +520,9 @@ final class Orchestrator(
     }
   }
 
-  private def runOne(job: JobDef, runDate: LocalDate): TaskResult = {
-    val r = runOneInner(job, runDate)
-    notifiers.foreach(_.onTaskCompleted(r, runDate))
-    r
-  }
-
-  private def runOneInner(job: JobDef, runDate: LocalDate): TaskResult = {
-    if (!job.schedule.isEnabled(runDate))
-      return TaskResult.Skipped(job.name, s"not scheduled on $runDate")
-    val infoDate = DateExpr("runDate" -> runDate, "date" -> runDate).evalDate(job.infoDateExpr)
-    if (!rerunSucceeded && bookkeeper.isAlreadyRan(job.outputTable, infoDate))
-      return TaskResult.Skipped(job.name, s"already succeeded for $infoDate")
-    executeTask(job, infoDate)
-  }
-
   /** Run one (job, infoDate) task: validate, lock, retry, record.
     * Schedule/bookkeeping decisions happen in the caller. */
-  private def executeTask(job: JobDef, infoDate: LocalDate,
-                          reason: String = "New"): TaskResult = {
+  private def executeTask(job: JobDef, infoDate: LocalDate, reason: String): TaskResult = {
     val incCtx = offsetManager.map(om =>
       new graft.meta.MetastoreReader.IncrementalContext(job.outputTable, om))
     val reader = metastore.readerFor(

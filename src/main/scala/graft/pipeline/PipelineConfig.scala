@@ -1211,11 +1211,14 @@ object PipelineConfig {
     if (results.exists(_.isInstanceOf[TaskResult.Failed])) sys.exit(1)
   }
 
-  /** Shared prelude of both run surfaces: guards, hadoop conf, store
-    * resolution and table registration — a guard added here applies to
-    * BOTH `run` and `runParams` by construction. */
-  private def prepare(spark: SparkSession, parsed: Parsed,
-                      bookkeeper: BookkeeperStore): (ResolvedStores, Metastore) = {
+  /** Register the declared tables and run under explicit run params
+    * (normal/rerun/historical). */
+  def runParams(spark: SparkSession, parsed: Parsed, params: RunParams,
+                bookkeeper: BookkeeperStore = new Bookkeeper(),
+                notifiers: Seq[PipelineNotificationTarget] = Seq.empty,
+                lockDir: Option[String] = None,
+                dateParallelism: Int = 1,
+                state: Option[PipelineState] = None): Seq[TaskResult] = {
     // an empty job list is usually every job disabled by accident —
     // fail loudly unless the config says it's intentional (reference:
     // AppRunner.scala:401, pramen.allow.empty.pipeline)
@@ -1226,35 +1229,6 @@ object PipelineConfig {
     val stores = resolveStores(parsed, bookkeeper, Some(spark))
     val ms = new Metastore(spark, metadataStore = stores.metadata)
     parsed.tables.foreach(ms.register)
-    (stores, ms)
-  }
-
-  /** Register the declared tables and run the declared jobs (single
-    * run-date legacy surface). */
-  def run(spark: SparkSession, parsed: Parsed, runDate: LocalDate,
-          bookkeeper: BookkeeperStore = new Bookkeeper(),
-          notifiers: Seq[PipelineNotificationTarget] = Seq.empty,
-          lockDir: Option[String] = None,
-          rerunSucceeded: Boolean = false): Seq[TaskResult] = {
-    val (stores, ms) = prepare(spark, parsed, bookkeeper)
-    val allNotifiers = notifiers ++
-      stores.journal.map(new JournalNotifier(_, parsed.name)).toSeq
-    new Orchestrator(ms, stores.bookkeeper, notifiers = allNotifiers, lockDir = lockDir,
-      offsetManager = stores.offsets, lockFactory = stores.lockFactory,
-      rerunSucceeded = rerunSucceeded, pipelineName = parsed.name,
-      environment = parsed.environment,
-      enableMultipleJobsPerTable = parsed.multipleJobsPerTable).run(parsed.jobs, runDate)
-  }
-
-  /** Register the declared tables and run under explicit run params
-    * (normal/rerun/historical). */
-  def runParams(spark: SparkSession, parsed: Parsed, params: RunParams,
-                bookkeeper: BookkeeperStore = new Bookkeeper(),
-                notifiers: Seq[PipelineNotificationTarget] = Seq.empty,
-                lockDir: Option[String] = None,
-                dateParallelism: Int = 1,
-                state: Option[PipelineState] = None): Seq[TaskResult] = {
-    val (stores, ms) = prepare(spark, parsed, bookkeeper)
     val allNotifiers = notifiers ++
       stores.journal.map(new JournalNotifier(_, parsed.name)).toSeq
     new Orchestrator(ms, stores.bookkeeper, notifiers = allNotifiers, lockDir = lockDir,

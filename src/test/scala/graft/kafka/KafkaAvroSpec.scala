@@ -261,7 +261,8 @@ class KafkaAvroSpec extends SparkSpec {
       val d = java.time.LocalDate.of(2026, 8, 14)
       ms.saveTable("kout_src", d, Seq((9L, "bye")).toDF("id", "txt"))
       val before = (0 until 1).map(p => cluster.log("cfg", p).records.size).sum
-      val res = graft.pipeline.PipelineConfig.run(spark, parsedSink, d)
+      val res = graft.pipeline.PipelineConfig.runParams(spark, parsedSink,
+        graft.pipeline.RunParams.Normal(d, newOnly = true))
       assert(res.head.isInstanceOf[graft.pipeline.TaskResult.Succeeded], res.head.toString)
       val after = (0 until 1).map(p => cluster.log("cfg", p).records.size).sum
       assert(after == before + 1)

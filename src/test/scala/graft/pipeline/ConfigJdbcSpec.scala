@@ -71,9 +71,11 @@ class ConfigJdbcSpec extends SparkSpec {
     val base = java.nio.file.Files.createTempDirectory("cfg_jdbc_skip_").toString
     seed(base, 1 to 10, d.toString)
     // two SEPARATE parses = two driver processes; only the database is shared
-    val r1 = PipelineConfig.run(spark, PipelineConfig.parse(baseConfig(base)), d)
+    val r1 = PipelineConfig.runParams(spark, PipelineConfig.parse(baseConfig(base)),
+      RunParams.Normal(d, newOnly = true))
     assert(r1.head.isInstanceOf[TaskResult.Succeeded], r1.head.toString)
-    val r2 = PipelineConfig.run(spark, PipelineConfig.parse(baseConfig(base)), d)
+    val r2 = PipelineConfig.runParams(spark, PipelineConfig.parse(baseConfig(base)),
+      RunParams.Normal(d, newOnly = true))
     assert(r2.head.isInstanceOf[TaskResult.Skipped],
       s"second driver must see the first's bookkeeping row: ${r2.head}")
     // the coordination state genuinely lives in the shared database
@@ -89,12 +91,14 @@ class ConfigJdbcSpec extends SparkSpec {
     foreignDb.initialize()
     val foreign = new TokenLockJdbc(foreignDb, s"ev_out_$d")
     assert(foreign.tryAcquire())
-    PipelineConfig.run(spark, PipelineConfig.parse(baseConfig(base)), d).head match {
+    PipelineConfig.runParams(spark, PipelineConfig.parse(baseConfig(base)),
+      RunParams.Normal(d, newOnly = true)).head match {
       case TaskResult.Skipped(_, why) => assert(why.contains("locked"), why)
       case other => fail(s"held db lock must skip the task, got $other")
     }
     foreign.release()
-    val r = PipelineConfig.run(spark, PipelineConfig.parse(baseConfig(base)), d)
+    val r = PipelineConfig.runParams(spark, PipelineConfig.parse(baseConfig(base)),
+      RunParams.Normal(d, newOnly = true))
     assert(r.head.isInstanceOf[TaskResult.Succeeded], r.head.toString)
     assert(new TokenLockJdbc(foreignDb, s"ev_out_$d").tryAcquire(),
       "the run must release its own lock on completion")
@@ -105,12 +109,14 @@ class ConfigJdbcSpec extends SparkSpec {
     val base = java.nio.file.Files.createTempDirectory("cfg_jdbc_off_").toString
     seed(base, 1 to 10, "2024-06-01")
     val p1 = PipelineConfig.parse(baseConfig(base))
-    assert(PipelineConfig.run(spark, p1, LocalDate.parse("2024-06-01"))
+    assert(PipelineConfig.runParams(spark, p1,
+      RunParams.Normal(LocalDate.parse("2024-06-01"), newOnly = true))
       .head.isInstanceOf[TaskResult.Succeeded])
     seed(base, 11 to 15, "2024-06-02")
     // a fresh parse = a different driver; offsets come from the database
     val p2 = PipelineConfig.parse(baseConfig(base))
-    assert(PipelineConfig.run(spark, p2, LocalDate.parse("2024-06-02"))
+    assert(PipelineConfig.runParams(spark, p2,
+      RunParams.Normal(LocalDate.parse("2024-06-02"), newOnly = true))
       .head.isInstanceOf[TaskResult.Succeeded])
     val ms = new graft.meta.Metastore(spark)
     ms.register(graft.meta.MetaTable("ev_out", s"$base/out",
@@ -130,7 +136,8 @@ class ConfigJdbcSpec extends SparkSpec {
     seed(base, 1 to 3, d.toString)
     val cfg = baseConfig(base) +
       "bookkeeping.jdbc.dialect = mysql\nbookkeeping.jdbc.table.prefix = graft_\n"
-    assert(PipelineConfig.run(spark, PipelineConfig.parse(cfg), d)
+    assert(PipelineConfig.runParams(spark, PipelineConfig.parse(cfg),
+      RunParams.Normal(d, newOnly = true))
       .head.isInstanceOf[TaskResult.Succeeded])
     assert(fake.statements.exists(s =>
       s.startsWith("INSERT INTO `graft_bookkeeping`") && s.contains("`table_name`")),
@@ -151,7 +158,8 @@ class ConfigJdbcSpec extends SparkSpec {
     foreignDb.initialize()
     assert(new TokenLockJdbc(foreignDb, s"ev_out_$d").tryAcquire())
     seed(base, 1 to 3, d.toString)
-    assert(PipelineConfig.run(spark, parsed, d).head.isInstanceOf[TaskResult.Succeeded],
+    assert(PipelineConfig.runParams(spark, parsed,
+      RunParams.Normal(d, newOnly = true)).head.isInstanceOf[TaskResult.Succeeded],
       "locks=false must ignore database lock rows")
   }
 
@@ -232,8 +240,10 @@ class ConfigJdbcSpec extends SparkSpec {
     seed(base, 1 to 5, d.toString)
     // run 1 succeeds, run 2 skips (skip-if-done) — BOTH events must
     // journal: the audit log keeps every completion, not latest state
-    PipelineConfig.run(spark, PipelineConfig.parse(baseConfig(base)), d)
-    PipelineConfig.run(spark, PipelineConfig.parse(baseConfig(base)), d)
+    PipelineConfig.runParams(spark, PipelineConfig.parse(baseConfig(base)),
+      RunParams.Normal(d, newOnly = true))
+    PipelineConfig.runParams(spark, PipelineConfig.parse(baseConfig(base)),
+      RunParams.Normal(d, newOnly = true))
     assert(SharedDbFactory.current.statements.exists(_.startsWith("INSERT INTO \"journal\"")),
       "journal rows must land in the shared database")
     // a THIRD driver (fresh parse/resolve) reads the fleet's history

@@ -120,9 +120,9 @@ class CurationFunnelSpec extends SparkSpec {
       "dsir.enabled" -> "true", "dsir.target.table" -> "trusted", "dsir.top.fraction" -> "0.9",
       "classifier.enabled" -> "true",
       "split.group.safe" -> "true", "split.group.jaccard" -> "0.8")
-    val res = new Orchestrator(ms, rerunSucceeded = true).run(Seq(JobDef(
+    val res = new Orchestrator(ms).runWith(Seq(JobDef(
       "curate", "docs_curated", new CurationTransformer,
-      Seq("docs_raw", "doc_emb", "trusted"), options = opts)), d)
+      Seq("docs_raw", "doc_emb", "trusted"), options = opts)), RunParams.Rerun(d))
     res.head match {
       case TaskResult.Failed(_, e) => throw e
       case _: TaskResult.Succeeded => ()

@@ -47,7 +47,9 @@ class CurationSpec extends SparkSpec {
     assert(out.columns.contains("quality") && out.columns.contains("fingerprint"))
   }
 
-  test("v2 stages: semantic dedup, perplexity tiering and leakage-safe split, all config-keyed") {
+  /** The v2 corpus (semantic dedup + perplexity + group-safe split
+    * all enabled) in a fresh metastore: (metastore, job options). */
+  private def v2Fixture(): (Metastore, Map[String, String]) = {
     val s = "The quick brown fox jumps over the lazy dog near the river bank. "
     val near1 = s * 8
     val near2 = s * 7 + s.replace("lazy", "sleepy") // one-word edit in one repeat
@@ -86,10 +88,15 @@ class CurationSpec extends SparkSpec {
       "perplexity.enabled" -> "true",
       "split.group.safe" -> "true", "split.group.jaccard" -> "0.6",
       "split.weights" -> "0.5,0.25,0.25")
+    (ms, opts)
+  }
+
+  test("v2 stages: semantic dedup, perplexity tiering and leakage-safe split, all config-keyed") {
+    val (ms, opts) = v2Fixture()
     def runWith(extra: Map[String, String]): org.apache.spark.sql.DataFrame = {
-      val res = new Orchestrator(ms, rerunSucceeded = true).run(Seq(JobDef(
+      val res = new Orchestrator(ms).runWith(Seq(JobDef(
         "curate", "cur", new CurationTransformer, Seq("raw", "emb"),
-        options = opts ++ extra)), d)
+        options = opts ++ extra)), RunParams.Rerun(d))
       res.head match {
         case TaskResult.Failed(_, e) => throw e
         case _: TaskResult.Succeeded => ()
@@ -123,6 +130,50 @@ class CurationSpec extends SparkSpec {
     assert(!ids2.contains(50L) && ids2.contains(1L), s"perplexity.max should drop only the weird doc: $ids2")
   }
 
+  test("curation fit blocks run inside the caller's job group") {
+    val (ms, opts) = v2Fixture()
+    val sc = spark.sparkContext
+    def curated(): Seq[org.apache.spark.sql.Row] = new CurationTransformer()
+      .run(ms.readerFor(Some(Set("raw", "emb")), currentInfoDate = Some(d)), d, opts)
+      .orderBy("doc_id").collect().toSeq
+    val reference = curated()
+
+    // suites share the session: this run's jobs are told apart by a tag
+    // the pool threads inherit along with the group
+    val tag = s"cur-group-${java.util.UUID.randomUUID()}"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).map(_.getProperty(k)).orNull
+        if (Option(prop("spark.job.tags")).exists(_.split(",").contains(tag))) {
+          if (prop("spark.job.description") == tag) sentinel.countDown()
+          else groups.add(String.valueOf(prop("spark.jobGroup.id")))
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    val inGroup = try {
+      sc.setJobGroup("g", "caller task")
+      sc.addJobTag(tag)
+      val out = curated()
+      // listener events arrive in order: once this job is seen, every
+      // job the run started has been seen too
+      sc.setJobDescription(tag)
+      spark.range(1).count()
+      assert(sentinel.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      out
+    } finally {
+      sc.removeJobTag(tag)
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(!groups.isEmpty, "no job of the run was seen")
+    val foreign = groups.toArray.toSeq.filterNot(_ == "g").distinct
+    assert(foreign.isEmpty, s"jobs outside the caller's group: $foreign")
+    assert(inGroup == reference)
+  }
+
   test("v3 stages: DSIR importance tier and trained-classifier tier, config-keyed") {
     // target = prose in one vocabulary; pool = half prose-like,
     // half alien vocabulary — DSIR weights and classifier scores must
@@ -150,10 +201,10 @@ class CurationSpec extends SparkSpec {
     ms.saveTable("tgt", d, target)
 
     def runWith(extra: Map[String, String]): org.apache.spark.sql.DataFrame = {
-      val res = new Orchestrator(ms, rerunSucceeded = true).run(Seq(JobDef(
+      val res = new Orchestrator(ms).runWith(Seq(JobDef(
         "curate", "cur", new CurationTransformer, Seq("raw", "tgt"),
         options = Map("input.table" -> "raw", "quality.min" -> "0.0",
-          "max.repetition" -> "1.0", "dsir.target.table" -> "tgt") ++ extra)), d)
+          "max.repetition" -> "1.0", "dsir.target.table" -> "tgt") ++ extra)), RunParams.Rerun(d))
       res.head match {
         case TaskResult.Failed(_, e) => throw e
         case _: TaskResult.Succeeded => ()
@@ -216,11 +267,11 @@ class CurationSpec extends SparkSpec {
     ms.register(MetaTable("rawc", s"$base/rawc"))
     ms.register(MetaTable("curc", s"$base/curc"))
     ms.saveTable("rawc", d, docs)
-    new Orchestrator(ms, rerunSucceeded = true).run(Seq(JobDef(
+    new Orchestrator(ms).runWith(Seq(JobDef(
       "curate", "curc", new CurationTransformer, Seq("rawc"),
       options = Map(
         "input.table" -> "rawc", "quality.min" -> "0.8", "max.repetition" -> "1.0",
-        "split.group.safe" -> "true", "split.group.jaccard" -> "0.45"))), d)
+        "split.group.safe" -> "true", "split.group.jaccard" -> "0.45"))), RunParams.Rerun(d))
     val out = ms.getTable("curc", Some(d), Some(d))
     val ids = out.select("doc_id").as[Long].collect().toSet
     assert(ids == Set(41L, 43L, 60L), s"quality gate should drop only 42: $ids")

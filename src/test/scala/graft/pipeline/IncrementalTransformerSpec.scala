@@ -32,8 +32,9 @@ class IncrementalTransformerSpec extends SparkSpec {
     ms.register(MetaTable("delta_sums", s"$base/out", scheme = graft.meta.PartitionScheme.NotPartitioned))
     val om = new OffsetManager()
     val t = new DeltaSum
-    def runOnce(day: String) = new Orchestrator(ms, offsetManager = Some(om), rerunSucceeded = true)
-      .run(Seq(JobDef("delta", "delta_sums", t, Seq("events_in"))), LocalDate.parse(day))
+    def runOnce(day: String) = new Orchestrator(ms, offsetManager = Some(om))
+      .runWith(Seq(JobDef("delta", "delta_sums", t, Seq("events_in"))),
+        RunParams.Rerun(LocalDate.parse(day)))
 
     ms.saveTable("events_in", LocalDate.parse("2024-06-01"), (1L to 10L).map(i => (i, s"e$i")).toDF("event_id", "v"))
     assert(runOnce("2024-06-01").head.isInstanceOf[TaskResult.Succeeded])

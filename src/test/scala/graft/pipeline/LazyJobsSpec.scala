@@ -44,7 +44,7 @@ class LazyJobsSpec extends SparkSpec {
     assert(ms.getTable("final", Some(d), Some(d)).select("y").as[Long].collect().toSet
       == Set(21L, 41L))
     // materialize-once: a rerun re-reads the existing helper slot
-    new Orchestrator(ms, rerunSucceeded = true).run(Seq(lazyJob, readerJob), d)
+    new Orchestrator(ms).runWith(Seq(lazyJob, readerJob), RunParams.Rerun(d))
     assert(lazyRuns.get() == 1, "existing lazy output must be served, not recomputed")
   }
 
@@ -124,7 +124,7 @@ class LazyJobsSpec extends SparkSpec {
          |job.2.inputs = mid
          |""".stripMargin)
     assert(parsed.jobs.find(_.name == "mid_job").exists(_.isLazy))
-    val results = PipelineConfig.run(spark, parsed, d)
+    val results = PipelineConfig.runParams(spark, parsed, RunParams.Normal(d, newOnly = true))
     assert(results.map(_.asInstanceOf[TaskResult.Succeeded].job) == Seq("out_job"),
       results.toString)
     val ms = freshMs(base, "out_t")

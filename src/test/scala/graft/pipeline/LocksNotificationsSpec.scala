@@ -86,7 +86,7 @@ class LocksNotificationsSpec extends SparkSpec {
     foreign.release()
 
     // free -> runs and releases afterwards
-    val r2 = new Orchestrator(ms, lockDir = Some(lockDir), rerunSucceeded = true).run(jobs, d)
+    val r2 = new Orchestrator(ms, lockDir = Some(lockDir)).runWith(jobs, RunParams.Rerun(d))
     assert(r2.head.isInstanceOf[TaskResult.Succeeded])
     assert(!TokenLock.forPartition(lockDir, "out", d).isLocked)
   }

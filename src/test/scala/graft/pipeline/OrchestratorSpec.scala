@@ -98,8 +98,19 @@ class OrchestratorSpec extends SparkSpec {
     assert(log.size == 1)
     assert(bk.isAlreadyRan("seed", runDate))
     assert(bk.latestSuccess("seed").contains(runDate))
-    new Orchestrator(ms, bk, rerunSucceeded = true).run(jobs, runDate)
+    // a forced re-run of the completed date runs it again
+    new Orchestrator(ms, bk).runWith(jobs, RunParams.Rerun(runDate))
     assert(log.size == 2)
+  }
+
+  test("run honours expected.delay.days: it writes the runDate - delay slot") {
+    val ms = newMs("late")
+    val log = new ConcurrentLinkedQueue[String]()
+    val rs = new Orchestrator(ms).run(Seq(
+      JobDef("j", "late", new SeedTransformer(1, log, "j"), expectedDelayDays = 2)), runDate)
+    assert(rs.collect { case s: TaskResult.Succeeded => s.infoDate } == Seq(runDate.minusDays(2)),
+      rs.toString)
+    assert(ms.listAvailableDates("late") == Seq(runDate.minusDays(2)))
   }
 
   test("failed dependency causes dependent to be skipped, not run") {
@@ -134,7 +145,9 @@ class OrchestratorSpec extends SparkSpec {
     val r2 = new Orchestrator(ms).run(Seq(
       JobDef("j", "out", needsOpt, options = Map("k" -> "1"),
         schedule = Schedule.Weekly(Seq(java.time.DayOfWeek.MONDAY)))), runDate) // Saturday
-    assert(r2.head.isInstanceOf[TaskResult.Skipped] && log.isEmpty)
+    // a schedule-disabled day: exactly one Skipped, nothing written
+    assert(r2.size == 1 && r2.head.isInstanceOf[TaskResult.Skipped] && log.isEmpty, r2.toString)
+    assert(ms.listAvailableDates("out").isEmpty)
   }
 
   test("infoDateExpr derives the info date from @runDate") {

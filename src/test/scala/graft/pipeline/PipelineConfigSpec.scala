@@ -69,7 +69,7 @@ class PipelineConfigSpec extends SparkSpec {
     java.nio.file.Files.write(java.nio.file.Paths.get(path), conf.getBytes("UTF-8"))
 
     val parsed = PipelineConfig.load(path)
-    val results = PipelineConfig.run(spark, parsed, runDate)
+    val results = PipelineConfig.runParams(spark, parsed, RunParams.Normal(runDate, newOnly = true))
     assert(results.forall(_.isInstanceOf[TaskResult.Succeeded]), s"results: $results")
 
     val ms = new graft.meta.Metastore(spark)
@@ -105,7 +105,7 @@ class PipelineConfigSpec extends SparkSpec {
     java.nio.file.Files.write(java.nio.file.Paths.get(path), conf.getBytes("UTF-8"))
 
     val parsed = PipelineConfig.load(path)
-    val results = PipelineConfig.run(spark, parsed, runDate)
+    val results = PipelineConfig.runParams(spark, parsed, RunParams.Normal(runDate, newOnly = true))
     assert(results.forall(_.isInstanceOf[TaskResult.Succeeded]), s"results: $results")
 
     val ms = new graft.meta.Metastore(spark)
@@ -307,9 +307,10 @@ class PipelineConfigSpec extends SparkSpec {
         |job.1.output = t
         |""".stripMargin)
     assert(PipelineConfig.runParams(spark, allowed, RunParams.Normal(runDate)).isEmpty)
-    // the legacy run() surface applies the same guard (and hadoopConf)
+    // the new-only run (`Orchestrator.run`'s params) hits the same guard,
+    // and an allowed empty run still applies hadoopConf
     val e2 = intercept[IllegalArgumentException](
-      PipelineConfig.run(spark, none, runDate))
+      PipelineConfig.runParams(spark, none, RunParams.Normal(runDate, newOnly = true)))
     assert(e2.getMessage.contains("allow.empty.pipeline"))
     val withConf = PipelineConfig.parse(
       """pipeline.name = e
@@ -320,7 +321,8 @@ class PipelineConfigSpec extends SparkSpec {
         |job.1.transformer = identity
         |job.1.output = t
         |""".stripMargin)
-    assert(PipelineConfig.run(spark, withConf, runDate).isEmpty)
+    assert(PipelineConfig.runParams(spark, withConf,
+      RunParams.Normal(runDate, newOnly = true)).isEmpty)
     assert(spark.sparkContext.hadoopConfiguration.get("graft.test.legacy.run") == "applied")
   }
 
@@ -363,11 +365,11 @@ class PipelineConfigSpec extends SparkSpec {
     assertThrows[IllegalArgumentException](PipelineConfig.parse("just a line without equals"))
     assertThrows[IllegalArgumentException](PipelineConfig.parse(
       "table.t.format = parquet\njob.1.output = t\njob.1.transformer = identity"))
-    assertThrows[ClassNotFoundException](PipelineConfig.run(spark,
+    assertThrows[ClassNotFoundException](PipelineConfig.runParams(spark,
       PipelineConfig.parse(
         s"""table.t.path = ${tmpDir("plcerr_")}/t
            |job.1.output = t
            |job.1.transformer = com.nowhere.Missing
-           |""".stripMargin), runDate))
+           |""".stripMargin), RunParams.Normal(runDate, newOnly = true)))
   }
 }

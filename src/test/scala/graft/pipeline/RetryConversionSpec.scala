@@ -31,9 +31,9 @@ class RetryConversionSpec extends SparkSpec {
     assert(schema("qty").dataType.simpleString == "bigint")
 
     // validation gates
-    val r2 = new Orchestrator(ms, rerunSucceeded = true).run(Seq(JobDef(
+    val r2 = new Orchestrator(ms).runWith(Seq(JobDef(
       "conv2", "out", new ConversionTransformer, Seq("src"),
-      options = Map("input.table" -> "src"))), d)
+      options = Map("input.table" -> "src"))), RunParams.Rerun(d))
     assert(r2.head.isInstanceOf[TaskResult.NotReady])
   }
 

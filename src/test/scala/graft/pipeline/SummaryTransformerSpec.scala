@@ -26,11 +26,11 @@ class SummaryTransformerSpec extends SparkSpec {
       val rows = (di * 250 until di * 250 + 300)
         .map(u => (s"u$u", (u + 100 * di).toDouble, s"c${u % 3}"))
       ms.saveTable("ev", d, rows.toDF("user", "value", "cat"))
-      val res = new Orchestrator(ms, rerunSucceeded = true).run(Seq(JobDef(
+      val res = new Orchestrator(ms).runWith(Seq(JobDef(
         "summarize", "ev_summary", new SummaryTransformer, Seq("ev"),
         options = Map("input.table" -> "ev",
           "distinct.column" -> "user", "value.column" -> "value",
-          "item.column" -> "cat", "item.k" -> "3"))), d)
+          "item.column" -> "cat", "item.k" -> "3"))), RunParams.Rerun(d))
       assert(res.head.isInstanceOf[TaskResult.Succeeded], res.head.toString)
     }
 

@@ -55,12 +55,12 @@ class ValidationSpec extends SparkSpec {
     ms.register(MetaTable("ok", s"$base/ok"))
     ms.saveTable("raw", d, data)
     def run(opts: Map[String, String]): TaskResult =
-      new Orchestrator(ms, rerunSucceeded = true).run(Seq(JobDef(
+      new Orchestrator(ms).runWith(Seq(JobDef(
         "validate", "ok", new ValidationTransformer, Seq("raw"),
         options = opts ++ Map("input.table" -> "raw",
           "rule.has_id" -> "id IS NOT NULL",
           "rule.pos_amount" -> "amount > 0",
-          "rule.known_kind" -> "kind IN ('a','b')"))), d).head
+          "rule.known_kind" -> "kind IN ('a','b')"))), RunParams.Rerun(d)).head
 
     assert(run(Map("mode" -> "annotate")).isInstanceOf[TaskResult.Succeeded])
     assert(ms.getTable("ok", Some(d), Some(d)).columns.contains("violations"))

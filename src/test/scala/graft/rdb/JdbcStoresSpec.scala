@@ -500,9 +500,9 @@ class JdbcStoresSpec extends AnyFunSuite {
     // offsets live in the shared DATABASE: a second orchestrator (new
     // OffsetStoreJdbc over the same db) sees the first run's offset
     def runOnce(day: String) = new graft.pipeline.Orchestrator(ms,
-        offsetManager = Some(new OffsetStoreJdbc(db)), rerunSucceeded = true)
-      .run(Seq(graft.pipeline.JobDef("delta", "ev_out", tf, Seq("ev_in"))),
-        LocalDate.parse(day))
+        offsetManager = Some(new OffsetStoreJdbc(db)))
+      .runWith(Seq(graft.pipeline.JobDef("delta", "ev_out", tf, Seq("ev_in"))),
+        graft.pipeline.RunParams.Rerun(LocalDate.parse(day)))
 
     ms.saveTable("ev_in", LocalDate.parse("2024-06-01"),
       (1L to 10L).map(i => (i, s"e$i")).toDF("event_id", "v"))

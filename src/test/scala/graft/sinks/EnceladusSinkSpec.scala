@@ -157,7 +157,8 @@ class EnceladusSinkSpec extends SparkSpec {
     val ms = new graft.meta.Metastore(spark)
     parsed2.tables.foreach(ms.register)
     ms.saveTable("enc_src", d, Seq((1L, "x"), (2L, "y")).toDF("id", "v"))
-    val res = graft.pipeline.PipelineConfig.run(spark, parsed2, d)
+    val res = graft.pipeline.PipelineConfig.runParams(spark, parsed2,
+      graft.pipeline.RunParams.Normal(d, newOnly = true))
     assert(res.head.isInstanceOf[graft.pipeline.TaskResult.Succeeded], res.head.toString)
     val part = java.nio.file.Paths.get(s"$raw/2024/06/05/v1")
     assert(java.nio.file.Files.isDirectory(part))
