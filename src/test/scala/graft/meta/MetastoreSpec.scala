@@ -172,6 +172,107 @@ class MetastoreSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("M2b bounded ByDay read launches no listing job") {
+    val path = tmpDir("ms40_") + "/long"
+    val ms = new Metastore(spark)
+    ms.register(MetaTable("long", path))
+    // 40 day directories: a whole-table read passes more than Spark's
+    // 32-path threshold, so Spark would list them with a Spark job
+    val first = LocalDate.parse("2024-01-01")
+    def perDay(i: Int) = i % 3 + 1
+    val rows = (0 until 40).flatMap(i =>
+      (1 to perDay(i)).map(j => (i * 10L + j, java.sql.Date.valueOf(first.plusDays(i.toLong)))))
+    ms.appendTable("long", rows.toDF("id", "ev"), "ev")
+    val listings = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val desc = Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")
+        // suites share the session: count only this table's listings
+        if (desc.startsWith("Listing leaf files") && desc.contains(path)) listings.incrementAndGet()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val d = first.plusDays(17)
+      assert(ms.getTable("long", Some(d), Some(d)).count() == perDay(17))
+      assert(ms.getTable("long", Some(d), Some(d.plusDays(9))).count() == (17 to 26).map(perDay).sum)
+      assert(ms.getLatest("long", Some(d)).count() == perDay(17))
+      Thread.sleep(500)
+      assert(listings.get() == 0, s"short reads launched ${listings.get()} listing job(s)")
+      // all 40 directories are still more than 32 paths: Spark keeps its
+      // own parallel listing, which also proves the listener sees them
+      assert(ms.getTable("long", Some(first), Some(first.plusDays(39))).count() == (0 until 40).map(perDay).sum)
+      val deadline = System.nanoTime() + 10000000000L // the listener bus may lag under suite load
+      while (listings.get() == 0 && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(listings.get() > 0, "the 40-day read should list its directories with a Spark job")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private val e0 = LocalDate.parse("2024-03-01")
+  private val eqDays = Seq(0, 1, 2, 4, 6).map(i => e0.plusDays(i.toLong))
+  private val rangeShapes: Seq[(String, Option[LocalDate], Option[LocalDate])] = Seq(
+    ("single day", Some(eqDays(2)), Some(eqDays(2))),
+    ("interior window", Some(eqDays(1)), Some(eqDays(3))),
+    ("from only", Some(eqDays(3)), None),
+    ("to only", None, Some(eqDays(1))),
+    ("window with no partition", Some(e0.plusDays(5)), Some(e0.plusDays(5))),
+    ("window past both ends", Some(e0.minusDays(3)), Some(e0.plusDays(30))))
+
+  /** Rows as a multiset, binary cells compared by content. */
+  private def bag(df: org.apache.spark.sql.DataFrame): Map[Seq[Any], Int] =
+    df.collect().toSeq.map(_.toSeq.map { case b: Array[Byte] => b.toSeq; case v => v })
+      .groupBy(identity).map { case (k, v) => k -> v.size }
+
+  private def dayDirsRead(df: org.apache.spark.sql.DataFrame): Set[String] =
+    df.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getParent.getName).toSet
+
+  Seq("Parquet" -> DataFormat.Parquet, "ORC" -> DataFormat.Orc, "Raw" -> DataFormat.Raw).foreach {
+    case (label, format) =>
+      test(s"M2c bounded ByDay $label read equals the filtered whole-table read") {
+        val ms = new Metastore(spark)
+        val t = MetaTable("eq", tmpDir("mseq_") + "/eq", format = format)
+        ms.register(t)
+        eqDays.zipWithIndex.foreach { case (d, i) =>
+          ms.saveTable("eq", d,
+            if (format == DataFormat.Raw)
+              (0 to i).map(j => (s"/in/f$j.bin", Array.fill[Byte](j + 1)(i.toByte))).toDF("path", "content")
+            else data(s"day$i", i + 2))
+        }
+        def window(f: Option[LocalDate], u: Option[LocalDate]) = ms.getTable("eq")
+          .where(f.fold(lit(true))(x => col("info_date") >= java.sql.Date.valueOf(x)) &&
+            u.fold(lit(true))(x => col("info_date") <= java.sql.Date.valueOf(x)))
+        val expected = rangeShapes.map { case (_, f, u) => val w = window(f, u); (w.schema, bag(w)) }
+        // foreign entries under the root: a day listing must skip them
+        val fs = new org.apache.hadoop.fs.Path(t.path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        def touch(p: String) = fs.create(new org.apache.hadoop.fs.Path(s"${t.path}/$p")).close()
+        touch("info_date=not-a-date/part-0")
+        touch("_graft/junk/part-0")
+        touch(s"info_date=${e0.plusDays(5)}") // a file, not a directory
+        rangeShapes.zip(expected).foreach { case ((shape, f, u), (schema, rows)) =>
+          val got = ms.getTable("eq", f, u)
+          assert(got.schema == schema, s"$shape: ${got.schema.treeString} vs ${schema.treeString}")
+          assert(got.schema("info_date").dataType == org.apache.spark.sql.types.DateType, shape)
+          assert(bag(got) == rows, shape)
+          val hit = eqDays.filter(d => f.forall(x => !d.isBefore(x)) && u.forall(x => !d.isAfter(x)))
+          assert(dayDirsRead(got) == (if (hit.nonEmpty) hit else Seq(eqDays.last)).map(d => s"info_date=$d").toSet,
+            s"$shape must read only its in-range directories (the newest one when none is in range)")
+        }
+      }
+  }
+
+  test("M2d a bounded CSV read keeps the whole-table read") {
+    val ms = new Metastore(spark)
+    ms.register(MetaTable("csv", tmpDir("mscsv_") + "/csv", format = DataFormat.Csv()))
+    ms.saveTable("csv", d1, data("a", 2))
+    ms.saveTable("csv", d2, data("b", 3))
+    ms.saveTable("csv", d3, data("c", 4))
+    val got = ms.getTable("csv", Some(d2), Some(d2))
+    assert(got.count() == 3)
+    // CSV infers its schema from the files read, so every day is listed
+    assert(dayDirsRead(got) == Set(d1, d2, d3).map(d => s"info_date=$d"))
+  }
+
   test("M5b save stats come from the write job itself (no post-write re-scan)") {
     val (ms, _) = freshMs(name = "onescan")
     // count the jobs one save launches; the observe()-based stats path
@@ -295,6 +396,10 @@ class MetastoreSpec extends SparkSpec {
     assert(whole.count() == 5)
     assert(whole.where(col("extra").isNull).count() == 2, "old days read null for new columns")
     assert(whole.where(col("extra") === 7).count() == 3)
+    // a bounded read of an evolved table still merges every day's schema
+    val day1 = ms.getTable("evo", Some(d1), Some(d1))
+    assert(day1.columns.contains("extra"), s"bounded read lost the late column: ${day1.columns.toSeq}")
+    assert(day1.count() == 2 && day1.where(col("extra").isNull).count() == 2)
     // a fresh instance recovers the evolution flag from persisted history
     val ms2 = new Metastore(spark)
     ms2.register(MetaTable("evo", ms.getTableDef("evo").path))

@@ -55,6 +55,21 @@ class RawFormatSpec extends SparkSpec {
     assert(files == Set("y.bin"), s"old files must be replaced: $files")
   }
 
+  test("a raw day saved with no files reads back empty, bounded or latest") {
+    import spark.implicits._
+    val ms = new Metastore(spark)
+    ms.register(MetaTable("gap", tmpDir("rawgap_") + "/gap", format = DataFormat.Raw))
+    val d1 = LocalDate.parse("2024-06-01")
+    val d2 = LocalDate.parse("2024-06-02")
+    val s1 = tmpDir("gap1_"); Files.write(Paths.get(s"$s1/x.bin"), Array[Byte](1))
+    ms.saveTable("gap", d1, new RawFileSource(spark, s1).getData(d1, d1).df)
+    ms.saveTable("gap", d2, Seq.empty[(String, Array[Byte])].toDF("path", "content"))
+    assert(ms.listAvailableDates("gap") == Seq(d1, d2))
+    assert(ms.getTable("gap", Some(d2), Some(d2)).count() == 0)
+    assert(ms.getLatest("gap").count() == 0)
+    assert(ms.getTable("gap", Some(d1), Some(d2)).count() == 1)
+  }
+
   test("raw save rejects frames without path/content") {
     import spark.implicits._
     val ms = new Metastore(spark)
