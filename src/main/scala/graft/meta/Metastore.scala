@@ -26,6 +26,11 @@ import scala.collection.concurrent.TrieMap
  *    whose result could depend on the file subset keep the whole-table
  *    listing: cached tables, evolved Parquet/ORC (schema merging),
  *    CSV/JSON (schema inference), and the other formats and schemes.
+ *  - Such a read of an unevolved Parquet/ORC table infers its schema
+ *    once: later bounded reads pass the schema the first one inferred,
+ *    so they launch no footer-inference job. Whole-table reads keep
+ *    inference (a root listing can see foreign directories that change
+ *    the inferred partition type).
  *  - Writes use dynamic partition overwrite, so re-running a day
  *    replaces exactly that day (idempotent re-runs, late-data
  *    corrections) without touching other partitions.
@@ -777,6 +782,12 @@ final class Metastore(spark: SparkSession,
 
   private val cachedReads = TrieMap.empty[String, DataFrame]
 
+  /** Read schema of each unevolved Parquet/ORC table's day-directory
+    * loads, with the recorded schema version it was inferred under
+    * (see [[loadDayDirs]]). */
+  private val daySchemas = TrieMap.empty[MetaTable,
+    (org.apache.spark.sql.types.StructType, org.apache.spark.sql.types.StructType)]
+
   /** Session-scoped data of TransientEager tables, per (table, date). */
   private val transientStore = TrieMap.empty[(String, LocalDate), DataFrame]
 
@@ -804,7 +815,11 @@ final class Metastore(spark: SparkSession,
     * Parquet/ORC (merging a subset drops columns added on later days),
     * CSV/JSON (the inferred schema depends on which files are read),
     * catalog, transient and null formats (no day directories), and
-    * every scheme but ByDay. */
+    * every scheme but ByDay. Accepted Parquet/ORC tables reuse their
+    * first inferred read schema ([[loadDayDirs]]); [[readWhole]] keeps
+    * inference, because a root read can see foreign directories such
+    * as `info_date=not-a-date`, which change the inferred partition
+    * type. */
   private def readsDayDirs(t: MetaTable): Boolean =
     t.scheme == PartitionScheme.ByDay && t.effectiveCachePolicy == CachePolicy.NoCache && (t.format match {
       case DataFormat.Parquet | DataFormat.Orc => !evolved(t)
@@ -813,13 +828,39 @@ final class Metastore(spark: SparkSession,
     })
 
   /** Load exactly `dirs` (day directories of `t`). `basePath` keeps
-    * `info_date` a discovered DateType partition column. Directories
-    * without data files leave nothing to infer a schema or partition
-    * from, so such a read falls back to the whole table. */
-  private def loadDayDirs(t: MetaTable, dirs: Seq[org.apache.hadoop.fs.Path]): DataFrame =
-    scala.util.Try(reader(t).option("basePath", t.path).load(dirs.map(_.toString): _*)).toOption
-      .filter(_.columns.contains(t.infoDateColumn))
-      .getOrElse(readWhole(t))
+    * `info_date` a discovered DateType partition column.
+    *
+    * A Parquet/ORC table with exactly one recorded schema version
+    * infers its read schema on the first load only; later loads pass
+    * that schema to the reader, so Parquet launches no footer-inference
+    * job and ORC reads no footer on the driver. The result is exact:
+    * every file under an unevolved table's day directories carries the
+    * one recorded schema and every picked directory name is a
+    * well-formed date, so inference would return the same `StructType`
+    * (nullability, field metadata, `info_date: DateType` last) each
+    * time. A new version makes the table evolved, which [[readsDayDirs]]
+    * sends to the merging whole-table read, and the key is the whole
+    * table definition, so re-registering another path, format or read
+    * options infers afresh.
+    *
+    * Directories without data files leave nothing to infer a schema or
+    * partition from, so a cold read of them falls back to the whole
+    * table; with the schema known, the load itself returns no rows. */
+  private def loadDayDirs(t: MetaTable, dirs: Seq[org.apache.hadoop.fs.Path]): DataFrame = {
+    val paths = dirs.map(_.toString)
+    val version = loadedHistory(t.name).map(_._2).distinct match {
+      case Seq(v) if t.format == DataFormat.Parquet || t.format == DataFormat.Orc => Some(v)
+      case _ => None
+    }
+    version.flatMap(v => daySchemas.get(t).collect { case (`v`, s) => s }) match {
+      case Some(s) => reader(t).schema(s).option("basePath", t.path).load(paths: _*)
+      case None =>
+        scala.util.Try(reader(t).option("basePath", t.path).load(paths: _*)).toOption
+          .filter(_.columns.contains(t.infoDateColumn))
+          .map { df => version.foreach(v => daySchemas.put(t, (v, df.schema))); df }
+          .getOrElse(readWhole(t))
+    }
+  }
 
   private def readWhole(t: MetaTable): DataFrame = {
     def load: DataFrame = {

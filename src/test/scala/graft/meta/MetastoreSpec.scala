@@ -273,6 +273,122 @@ class MetastoreSpec extends SparkSpec {
     assert(dayDirsRead(got) == Set(d1, d2, d3).map(d => s"info_date=$d"))
   }
 
+  /** `body`'s result and the descriptions of the Spark jobs it
+    * launches on this thread, counted under a unique job tag. A tagged
+    * sentinel job runs last and is waited for, so every earlier tagged
+    * job has been seen. */
+  private def jobsOf[T](body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val tag = s"jobs-of-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val p = Option(js.properties)
+        if (p.flatMap(x => Option(x.getProperty("spark.job.tags"))).exists(_.split(",").contains(tag)))
+          seen.add(p.flatMap(x => Option(x.getProperty("spark.job.description"))).getOrElse(""))
+      }
+    }
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    val result = try {
+      val r = body
+      sc.setJobDescription(tag)
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 10000000000L // the listener bus may lag under suite load
+      while (!seen.contains(tag) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.contains(tag), "the listener never saw the sentinel job")
+      r
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    (result, seen.asScala.toSeq.filterNot(_ == tag))
+  }
+
+  test("M2e a warm bounded Parquet read plans with no Spark job") {
+    val ms = new Metastore(spark)
+    ms.register(MetaTable("warm", tmpDir("mswarm_") + "/warm"))
+    val first = LocalDate.parse("2024-05-01")
+    (0 until 10).foreach(i => ms.saveTable("warm", first.plusDays(i.toLong), data(s"d$i", i + 1)))
+    val d = first.plusDays(4)
+    assert(ms.getTable("warm", Some(d), Some(d)).count() == 5) // the cold read infers the schema
+    val (reads, jobs) = jobsOf {
+      Seq(ms.getTable("warm", Some(d), Some(d)), ms.getTable("warm", Some(d), Some(d.plusDays(3))),
+        ms.getLatest("warm", Some(d)))
+    }
+    assert(jobs.isEmpty, s"warm bounded reads launched jobs while planning: $jobs")
+    assert(reads.map(_.count()) == Seq(5L, 5L + 6 + 7 + 8, 5L))
+  }
+
+  /** A 5-day table whose `tag` column carries field metadata. */
+  private def savedEqTable(ms: Metastore, format: DataFormat): MetaTable = {
+    val t = MetaTable("weq", tmpDir("msweq_") + "/weq", format = format)
+    ms.register(t)
+    val meta = new org.apache.spark.sql.types.MetadataBuilder().putString("comment", "day tag").build()
+    eqDays.zipWithIndex.foreach { case (d, i) =>
+      ms.saveTable("weq", d, data(s"day$i", i + 2).withColumn("tag", col("tag").as("tag", meta)))
+    }
+    t
+  }
+
+  Seq("Parquet" -> DataFormat.Parquet, "ORC" -> DataFormat.Orc).foreach { case (label, format) =>
+    test(s"M2f a warm bounded $label read equals a cold one for every range shape") {
+      val warm = new Metastore(spark)
+      val t = savedEqTable(warm, format)
+      warm.getTable("weq", Some(eqDays(0)), Some(eqDays(0))).count()
+      rangeShapes.foreach { case (shape, f, u) =>
+        val cold = new Metastore(spark)
+        cold.register(t)
+        val (c, w) = (cold.getTable("weq", f, u), warm.getTable("weq", f, u))
+        assert(w.schema == c.schema, s"$shape: ${w.schema.prettyJson} vs ${c.schema.prettyJson}")
+        if (format == DataFormat.Parquet) // ORC files keep no Spark field metadata
+          assert(w.schema("tag").metadata.getString("comment") == "day tag", shape)
+        assert(bag(w) == bag(c), shape)
+      }
+    }
+  }
+
+  test("M2g a re-registered table does not reuse the old read schema") {
+    val ms = new Metastore(spark)
+    val t = MetaTable("rr", tmpDir("msrr_") + "/rr")
+    ms.register(t)
+    ms.saveTable("rr", d1, data("a", 2))
+    assert(ms.getTable("rr", Some(d1), Some(d1)).columns.toSeq == Seq("id", "tag", "info_date"))
+    // another path holding another single-version schema, written elsewhere
+    val other = t.copy(path = tmpDir("msrr2_") + "/rr")
+    val writer = new Metastore(spark)
+    writer.register(other)
+    writer.saveTable("rr", d1, data("b", 3).withColumn("extra", lit(9)))
+    ms.register(other)
+    val moved = ms.getTable("rr", Some(d1), Some(d1))
+    assert(moved.columns.toSeq == Seq("id", "tag", "extra", "info_date"))
+    assert(moved.where(col("extra") === 9).count() == 3)
+    // other read options: the first read infers again (one footer job)
+    ms.register(other.copy(readOptions = Map("pathGlobFilter" -> "*.parquet")))
+    val (reread, jobs) = jobsOf(ms.getTable("rr", Some(d1), Some(d1)))
+    assert(jobs.size == 1, s"expected one schema-inference job, saw $jobs")
+    assert(reread.count() == 3)
+  }
+
+  test("M2h a day directory without data files reads back empty, warm and cold") {
+    val warm = new Metastore(spark)
+    val t = savedEqTable(warm, DataFormat.Parquet)
+    val d = eqDays(2)
+    val schema = warm.getTable("weq", Some(d), Some(d)).schema // warms the read schema
+    val dir = new org.apache.hadoop.fs.Path(s"${t.path}/info_date=$d")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(dir).foreach(st => fs.delete(st.getPath, false))
+    val cold = new Metastore(spark)
+    cold.register(t)
+    Seq("warm" -> warm, "cold" -> cold).foreach { case (label, ms) =>
+      val got = ms.getTable("weq", Some(d), Some(d))
+      assert(got.schema == schema, s"$label: ${got.schema.treeString}")
+      assert(got.count() == 0, label)
+    }
+  }
+
   test("M5b save stats come from the write job itself (no post-write re-scan)") {
     val (ms, _) = freshMs(name = "onescan")
     // count the jobs one save launches; the observe()-based stats path
@@ -389,6 +505,7 @@ class MetastoreSpec extends SparkSpec {
   test("M6b evolved tables read with merged schema: late-added columns surface") {
     val (ms, _) = freshMs(name = "evo")
     ms.saveTable("evo", d1, data("a", 2))
+    assert(ms.getTable("evo", Some(d1), Some(d1)).count() == 2) // remembers the one-version read schema
     ms.saveTable("evo", d2, data("b", 3).withColumn("extra", lit(7)))
     val whole = ms.getTable("evo")
     assert(whole.columns.contains("extra"),
