@@ -54,7 +54,13 @@ final class Metastore(spark: SparkSession,
     * job-group cancellation of timed-out tasks). */
   private[graft] def session: SparkSession = spark
 
-  def register(table: MetaTable): Unit = tables.put(table.name, table)
+  /** Register (or re-register) a table definition. The name's cached
+    * schema history is dropped, so a name moved to another path is
+    * judged by the versions persisted under that path. */
+  def register(table: MetaTable): Unit = {
+    tables.put(table.name, table)
+    schemaHistories.remove(table.name)
+  }
 
   def getTableDef(name: String): MetaTable =
     tables.getOrElse(name, throw new NoSuchElementException(s"Table not registered in metastore: $name"))

@@ -22,7 +22,10 @@ import org.apache.spark.sql.functions._
  *    corpus, so compute is linear — but the driver-side work (the
  *    collect, the model) is CONSTANT, which at any fixed parallelism
  *    shows up as strongly sublinear wall growth. A ratio NEAR the
- *    data ratio would mean per-row driver work crept in.
+ *    data ratio would mean per-row driver work crept in. For the
+ *    classifier this holds above [[QualityClassifier.DriverFitMaxRows]]
+ *    labeled rows; a smaller sample is collected and fit on the
+ *    driver, so only points above the gate measure the distributed fit.
  *
  * Inputs are synthesized deterministically from ids (no RNG, no
  * files): embeddings as dim-`dim` float arrays of id-keyed sines;
@@ -107,7 +110,9 @@ object FitScaleProbe {
     kmeansPoint(math.max(small / 50, 100))
     val ks = kmeansPoint(small)
     val kb = kmeansPoint(big)
-    clfPoint(math.max(small / 50, 100))
+    // the classifier warm-up must clear the driver-fit gate, or the
+    // first timed distributed fit pays MLlib's first-use cost
+    clfPoint(math.max(small / 50, QualityClassifier.DriverFitMaxRows + 1L))
     val cs = clfPoint(small)
     val cb = clfPoint(big)
     Result(k, dim, vocabCap, ks, kb, cs, cb)

@@ -10,6 +10,40 @@ trait SparkSpec extends AnyFunSuite {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** `body`'s result and the descriptions of the Spark jobs it
+    * launches on this thread, counted under a unique job tag. A tagged
+    * sentinel job runs last and is waited for, so every earlier tagged
+    * job has been seen. */
+  def jobsOf[T](body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val tag = s"jobs-of-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val p = Option(js.properties)
+        if (p.flatMap(x => Option(x.getProperty("spark.job.tags"))).exists(_.split(",").contains(tag)))
+          seen.add(p.flatMap(x => Option(x.getProperty("spark.job.description"))).getOrElse(""))
+      }
+    }
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    val result = try {
+      val r = body
+      sc.setJobDescription(tag)
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 10000000000L // the listener bus may lag under suite load
+      while (!seen.contains(tag) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.contains(tag), "the listener never saw the sentinel job")
+      r
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    (result, seen.asScala.toSeq.filterNot(_ == tag))
+  }
+
   /** All file scans in an EXECUTED plan, descending through AQE
     * wrappers and materialized query stages (plain `.collect` on an
     * `AdaptiveSparkPlanExec` sees no children — stages are not tree

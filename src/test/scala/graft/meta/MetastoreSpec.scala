@@ -273,40 +273,6 @@ class MetastoreSpec extends SparkSpec {
     assert(dayDirsRead(got) == Set(d1, d2, d3).map(d => s"info_date=$d"))
   }
 
-  /** `body`'s result and the descriptions of the Spark jobs it
-    * launches on this thread, counted under a unique job tag. A tagged
-    * sentinel job runs last and is waited for, so every earlier tagged
-    * job has been seen. */
-  private def jobsOf[T](body: => T): (T, Seq[String]) = {
-    val sc = spark.sparkContext
-    val tag = s"jobs-of-${java.util.UUID.randomUUID()}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val p = Option(js.properties)
-        if (p.flatMap(x => Option(x.getProperty("spark.job.tags"))).exists(_.split(",").contains(tag)))
-          seen.add(p.flatMap(x => Option(x.getProperty("spark.job.description"))).getOrElse(""))
-      }
-    }
-    sc.addSparkListener(listener)
-    sc.addJobTag(tag)
-    val result = try {
-      val r = body
-      sc.setJobDescription(tag)
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 10000000000L // the listener bus may lag under suite load
-      while (!seen.contains(tag) && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(seen.contains(tag), "the listener never saw the sentinel job")
-      r
-    } finally {
-      sc.setJobDescription(null)
-      sc.removeJobTag(tag)
-      sc.removeSparkListener(listener)
-    }
-    import scala.jdk.CollectionConverters._
-    (result, seen.asScala.toSeq.filterNot(_ == tag))
-  }
-
   test("M2e a warm bounded Parquet read plans with no Spark job") {
     val ms = new Metastore(spark)
     ms.register(MetaTable("warm", tmpDir("mswarm_") + "/warm"))
@@ -370,6 +336,25 @@ class MetastoreSpec extends SparkSpec {
     val (reread, jobs) = jobsOf(ms.getTable("rr", Some(d1), Some(d1)))
     assert(jobs.size == 1, s"expected one schema-inference job, saw $jobs")
     assert(reread.count() == 3)
+  }
+
+  test("M2i a re-registered table is judged by its new path's schema history") {
+    val ms = new Metastore(spark)
+    ms.register(MetaTable("mv", tmpDir("msmv_") + "/mv"))
+    ms.saveTable("mv", d1, data("a", 2))
+    assert(ms.schemaHistory("mv").size == 1)
+    // another path whose table evolved: two versions, saved elsewhere
+    val moved = MetaTable("mv", tmpDir("msmv2_") + "/mv")
+    val writer = new Metastore(spark)
+    writer.register(moved)
+    writer.saveTable("mv", d1, data("b", 3))
+    writer.saveTable("mv", d2, data("c", 4).withColumn("extra", lit(7)))
+    ms.register(moved)
+    assert(ms.schemaHistory("mv") == writer.schemaHistory("mv"))
+    assert(ms.schemaHistory("mv").map(_._1) == Seq(d1, d2))
+    val older = ms.getTable("mv", Some(d1), Some(d1))
+    assert(older.columns.contains("extra"), s"the bounded read lost the added column: ${older.columns.toSeq}")
+    assert(older.count() == 3 && older.where(col("extra").isNull).count() == 3)
   }
 
   test("M2h a day directory without data files reads back empty, warm and cold") {

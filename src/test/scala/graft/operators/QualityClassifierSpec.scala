@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** L40: trainable bag-of-words quality classifier — separable toy
   * corpus learned exactly, native serving agrees with MLlib's own
-  * scoring, zero-shuffle serving plan. */
+  * scoring, zero-shuffle serving plan, and the driver-side fit
+  * reproduces MLlib's distributed fit. */
 class QualityClassifierSpec extends SparkSpec {
   import spark.implicits._
 
@@ -78,5 +79,70 @@ class QualityClassifierSpec extends SparkSpec {
       QualityClassifier.fit(Seq(" ").toDF("text"), Seq("  ").toDF("text"), "text")
     }
     assert(e.getMessage.contains("token-free"))
+  }
+
+  /** Driver path (the default gate) and MLlib reference path on one sample. */
+  private def bothPaths(pos: org.apache.spark.sql.DataFrame, neg: org.apache.spark.sql.DataFrame,
+                        vocabSize: Int, maxIter: Int) = {
+    def fitWith(gate: Int) = QualityClassifier.fitGated(pos, neg, "text", vocabSize, maxIter,
+      regParam = 1e-3, driverFitMaxRows = gate)
+    (fitWith(QualityClassifier.DriverFitMaxRows), fitWith(0))
+  }
+
+  private def assertSameModel(driver: QualityClassifier.LinearTextModel,
+                              mllib: QualityClassifier.LinearTextModel): Unit = {
+    assert(mllib.weights.nonEmpty && driver.weights.size == mllib.weights.size,
+      s"${driver.weights.size} driver weights vs ${mllib.weights.size} MLlib weights")
+    val worst = (driver.weights.keySet ++ mllib.weights.keySet).toSeq
+      .map(t => t -> math.abs(driver.weights.getOrElse(t, 0.0) - mllib.weights.getOrElse(t, 0.0)))
+      .maxBy(_._2)
+    assert(worst._2 < 1e-8, s"weight of '${worst._1}' differs by ${worst._2}")
+    assert(math.abs(driver.bias - mllib.bias) < 1e-8, s"bias: driver=${driver.bias} mllib=${mllib.bias}")
+  }
+
+  test("driver fit reproduces MLlib's fit on real documents (vocab 4096)") {
+    val real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val (driver, mllib) = bothPaths(real.where(col("doc_id") % 5 === 0),
+      real.where(col("doc_id") % 5 =!= 0), vocabSize = 4096, maxIter = 20)
+    assertSameModel(driver, mllib)
+  }
+
+  test("driver fit reproduces MLlib's fit over thousands of features") {
+    val docs = FitScaleProbe.documents(spark, 600)
+    val (driver, mllib) = bothPaths(docs.where(col("is_pos")), docs.where(!col("is_pos")),
+      vocabSize = 65536, maxIter = 20)
+    assert(mllib.weights.size > 1000, s"expected thousands of features, got ${mllib.weights.size}")
+    assertSameModel(driver, mllib)
+  }
+
+  test("one-class samples give MLlib's degenerate model on both paths") {
+    val docs = Seq("good clean prose", "clean good words").toDF("text")
+    val none = docs.where(lit(false))
+    val (posDriver, posMllib) = bothPaths(docs, none, vocabSize = 64, maxIter = 10)
+    assert(posDriver == posMllib && posDriver.weights.isEmpty && posDriver.bias == Double.PositiveInfinity,
+      s"positives only: driver=$posDriver mllib=$posMllib")
+    val (negDriver, negMllib) = bothPaths(none, docs, vocabSize = 64, maxIter = 10)
+    assert(negDriver == negMllib && negDriver.weights.isEmpty && negDriver.bias == Double.NegativeInfinity,
+      s"negatives only: driver=$negDriver mllib=$negMllib")
+  }
+
+  test("a sample-sized fit launches a handful of Spark jobs, not one per iteration") {
+    val docs = FitScaleProbe.documents(spark, 600)
+    val (model, jobs) = jobsOf(QualityClassifier.fit(docs.where(col("is_pos")),
+      docs.where(!col("is_pos")), "text", maxIter = 20))
+    assert(model.weights.contains("graftmarker"))
+    assert(jobs.size < 10, s"fit launched ${jobs.size} jobs: $jobs")
+  }
+
+  test("neither fit path leaves a persisted RDD behind, failed fits included") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val docs = FitScaleProbe.documents(spark, 200)
+    val before = persisted
+    bothPaths(docs.where(col("is_pos")), docs.where(!col("is_pos")), vocabSize = 256, maxIter = 5)
+    intercept[IllegalArgumentException] {
+      QualityClassifier.fit(Seq(" ").toDF("text"), Seq("  ").toDF("text"), "text")
+    }
+    val leaked = persisted -- before
+    assert(leaked.isEmpty, s"fits leaked persisted RDDs: $leaked")
   }
 }
