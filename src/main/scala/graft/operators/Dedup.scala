@@ -36,29 +36,24 @@ object Dedup {
    * full-corpus shuffle. The input must be DETERMINISTIC across
    * re-evaluations (a plain table read is; a `sample`/`limit` without
    * a prior materialization is not) — the three branches must see the
-   * same fingerprints. If duplicate GROUPS are expected to be too
-   * numerous to broadcast (hundreds of millions), set
-   * `broadcastDupSet = false` to fall back to the classic one-shot
-   * full-row window shuffle, which also lifts the determinism
-   * requirement (single evaluation).
+   * same fingerprints. If duplicate GROUPS may be too numerous to
+   * broadcast (mass-duplicated corpora), use [[exactFromProbe]]: its
+   * probe counts the groups and takes the classic one-window plan
+   * above [[MaxBroadcastDupGroups]].
    */
-  def exact(docs: DataFrame, textCol: String, idCol: String,
-            broadcastDupSet: Boolean = true): DataFrame = {
-    // both hash the RAW text (exactness contract) with independent seeds
-    val fp1 = xxhash64(col(textCol))
-    val fp2 = xxhash64(lit(0x9E3779B9L), col(textCol))
-    if (!broadcastDupSet) {
-      val w = Window.partitionBy(fp1, fp2).orderBy(col(idCol))
-      return docs.withColumn("_rn", row_number().over(w))
-        .where(col("_rn") === 1)
-        .drop("_rn")
-    }
-    val withFp = docs.withColumn("_fp1", fp1).withColumn("_fp2", fp2)
+  def exact(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
+    val withFp = withFingerprints(docs, textCol)
     val dupFps = withFp.groupBy("_fp1", "_fp2")
       .agg(count(lit(1)).as("_n")).where(col("_n") > 1)
       .select("_fp1", "_fp2")
     exactOverDupFps(withFp, idCol, dupFps)
   }
+
+  /** `docs` plus [[exact]]'s fingerprint columns `_fp1`, `_fp2`: both
+    * hash the RAW text (exactness contract) with independent seeds. */
+  private def withFingerprints(docs: DataFrame, textCol: String): DataFrame =
+    docs.withColumn("_fp1", xxhash64(col(textCol)))
+      .withColumn("_fp2", xxhash64(lit(0x9E3779B9L), col(textCol)))
 
   /** [[exact]]'s broadcast-plan tail over an already-derived duplicate
     * fingerprint set — shared with [[exactFromProbe]] so the two plans
@@ -116,12 +111,21 @@ object Dedup {
   def exactFromProbe(docs: DataFrame, textCol: String, idCol: String,
                      probe: DupProbe): DataFrame = {
     if (probe.nGroups > MaxBroadcastDupGroups)
-      return exact(docs, textCol, idCol, broadcastDupSet = false)
-    val fp1 = xxhash64(col(textCol))
-    val fp2 = xxhash64(lit(0x9E3779B9L), col(textCol))
-    val withFp = docs.withColumn("_fp1", fp1).withColumn("_fp2", fp2)
-    exactOverDupFps(withFp, idCol,
+      return exactWindow(docs, textCol, idCol)
+    exactOverDupFps(withFingerprints(docs, textCol), idCol,
       probe.dupGroups.select(col("_k1").as("_fp1"), col("_k2").as("_fp2")))
+  }
+
+  /** [[exact]]'s keep set by the classic one-shot full-row window
+    * shuffle: no broadcast, and one evaluation of `docs`, so it lifts
+    * the determinism requirement. */
+  private[operators] def exactWindow(docs: DataFrame, textCol: String,
+                                     idCol: String): DataFrame = {
+    val w = Window.partitionBy(xxhash64(col(textCol)), xxhash64(lit(0x9E3779B9L), col(textCol)))
+      .orderBy(col(idCol))
+    docs.withColumn("_rn", row_number().over(w))
+      .where(col("_rn") === 1)
+      .drop("_rn")
   }
 
   /** Exact-dedup summary: groups with duplicates (keeper id + count). */

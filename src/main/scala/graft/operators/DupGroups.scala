@@ -38,13 +38,6 @@ import org.apache.spark.sql.functions._
 object DupGroups {
 
   /**
-   * Label every node that appears in `pairs` with the smallest node id
-   * of its connected component. Returns (`id`, `group_id`). Nodes not
-   * mentioned in any pair are their own singleton groups and are NOT
-   * emitted — callers union them back if needed (see
-   * [[keepRepresentatives]], which does).
-   */
-  /**
    * Edge-count threshold below which the component labels are resolved
    * with a driver-side union-find instead of iterative Spark rounds.
    * Candidate pairs are the OUTPUT of LSH candidate generation — tiny
@@ -53,11 +46,27 @@ object DupGroups {
    * whole O(log L)-round job cascade collapses to one collect. Above
    * the threshold the distributed hook+compress path runs unchanged.
    */
-  val DriverResolveMaxEdges: Long = 2L * 1000 * 1000
+  val DriverResolveMaxEdges: Int = 2 * 1000 * 1000
 
+  /**
+   * Label every node that appears in `pairs` with the smallest node id
+   * of its connected component. Returns (`id`, `group_id`). Nodes not
+   * mentioned in any pair are their own singleton groups and are NOT
+   * emitted — callers union them back if needed (see
+   * [[keepRepresentatives]], which does). A driver-resolved result is a
+   * local relation, so Spark knows its exact size when planning joins
+   * against it.
+   */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 50,
-                          driverResolveMaxEdges: Long = DriverResolveMaxEdges): DataFrame = {
+                          maxIter: Int = 50): DataFrame =
+    connectedComponentsBounded(pairs, aCol, bCol, maxIter, DriverResolveMaxEdges)
+
+  /** [[connectedComponents]] with the driver-path edge bound as a
+    * parameter; a negative bound forces the distributed rounds, so
+    * specs check both paths against each other. */
+  private[operators] def connectedComponentsBounded(pairs: DataFrame, aCol: String,
+                                                    bCol: String, maxIter: Int,
+                                                    driverResolveMaxEdges: Int): DataFrame = {
     // small-graph fast path FIRST (r21, guide §1.2 fewer driver
     // round-trips): candidate pairs are the small end of the funnel in
     // every production composition, and the old shape paid THREE
@@ -74,12 +83,11 @@ object DupGroups {
     val bType = pairs.schema(bCol).dataType
     val integral = Set[org.apache.spark.sql.types.DataType](
       org.apache.spark.sql.types.LongType, org.apache.spark.sql.types.IntegerType)
-    if (integral(aType) && integral(bType) &&
-        driverResolveMaxEdges <= Int.MaxValue - 1) {
+    if (integral(aType) && integral(bType) && driverResolveMaxEdges >= 0) {
       val raw = pairs
         .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
         .where(col("src") =!= col("dst"))
-        .limit(driverResolveMaxEdges.toInt + 1).collect()
+        .limit(driverResolveMaxEdges + 1).collect()
       if (raw.length <= driverResolveMaxEdges) {
         val spark = pairs.sparkSession
         val labels = unionFindLabels(raw.map(r => (r.getLong(0), r.getLong(1))))
@@ -190,39 +198,20 @@ object DupGroups {
   /**
    * The dedup ending: keep exactly one document per duplicate group —
    * the group's minimum id — and every document that is in no group.
-   * One broadcast-friendly anti join against the (small) set of
-   * non-representative members; the corpus itself is never shuffled.
+   * One anti join against the set of non-representative members; the
+   * corpus itself is never shuffled when that set broadcasts. The drop
+   * side carries no broadcast hint: a driver-resolved group table is a
+   * local relation Spark sizes exactly, so the planner broadcasts it
+   * when it fits, and a mass-duplicated corpus's O(corpus) drop set is
+   * never forced onto the driver (AQE may still broadcast it from its
+   * actual size).
    */
   def keepRepresentatives(corpus: DataFrame, idCol: String,
                           pairs: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 50,
-                          /** FORCE-broadcast cap for the drop set
-                            * (the SemDeDup maxBroadcastIds gate, r17
-                            * review): on a heavily-duplicated corpus
-                            * |drop| scales with the duplicate count —
-                            * billions of ids would blow the 8 GB
-                            * broadcast limit or OOM the driver. Bounded
-                            * by the distinct endpoint count of `pairs`
-                            * (each drop id appears in ≥ 1 pair), read
-                            * off one ids-only aggregate; above the cap
-                            * the anti join falls back to a shuffle
-                            * join (AQE may still pick broadcast from
-                            * the ACTUAL size). <= 0 always shuffles;
-                            * Long.MaxValue skips the gate job. */
-                          maxBroadcastIds: Long = 10000000L): DataFrame = {
+                          maxIter: Int = 50): DataFrame = {
     val drop = connectedComponents(pairs, aCol, bCol, maxIter)
       .where(col("id") =!= col("group_id"))
       .select(col("id").as("_drop_id"))
-    val hint =
-      if (maxBroadcastIds == Long.MaxValue) true
-      else if (maxBroadcastIds <= 0L) false
-      else {
-        val bound = pairs.select(col(aCol).as("_e"))
-          .unionByName(pairs.select(col(bCol).as("_e")))
-          .agg(count_distinct(col("_e"))).head().getLong(0)
-        bound <= maxBroadcastIds
-      }
-    corpus.join(if (hint) broadcast(drop) else drop,
-      col(idCol) === col("_drop_id"), "left_anti")
+    corpus.join(drop, col(idCol) === col("_drop_id"), "left_anti")
   }
 }

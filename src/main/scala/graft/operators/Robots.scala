@@ -10,12 +10,10 @@ import org.apache.spark.sql.functions._
  *
  * Scale shape: the robots side is ONE compiled row per host — bounded
  * by the host count (millions), tiny next to the URL corpus
- * (billions) — so the join broadcasts by default; past broadcast scale
- * it degrades to a host-keyed shuffle join that AQE can still convert
- * when the compiled table turns out small. `robots_compile` runs once
- * per host; the per-URL side is a row-local first-match walk inside
- * whole-stage codegen. A host with no robots row is ALLOWED (the RFC
- * default for an absent robots.txt).
+ * (billions) — so the join always broadcasts it. `robots_compile`
+ * runs once per host; the per-URL side is a row-local first-match walk
+ * inside whole-stage codegen. A host with no robots row is ALLOWED
+ * (the RFC default for an absent robots.txt).
  */
 object Robots {
 
@@ -34,16 +32,14 @@ object Robots {
   def annotate(urls: DataFrame, urlCol: String,
                robots: DataFrame, hostCol: String, txtCol: String,
                agent: String,
-               outCol: String = "robots_allowed",
-               broadcastRobots: Boolean = true): DataFrame = {
+               outCol: String = "robots_allowed"): DataFrame = {
     GraftFunctions.ensure(urls.sparkSession)
     val compiled = robots.select(
       lower(col(hostCol)).as("__r_host"),
       GraftFunctions.robotsCompile(col(txtCol), agent).as("__r_rules"))
-    val side = if (broadcastRobots) broadcast(compiled) else compiled
     urls
       .withColumn("__u_host", UrlCuration.urlHost(col(urlCol)))
-      .join(side, col("__u_host") === col("__r_host"), "left")
+      .join(broadcast(compiled), col("__u_host") === col("__r_host"), "left")
       .withColumn(outCol, coalesce(
         GraftFunctions.robotsAllowed(urlPathQuery(col(urlCol)), col("__r_rules")),
         lit(true)))
@@ -53,9 +49,7 @@ object Robots {
   /** Keep only the URLs the agent may fetch. */
   def filterAllowed(urls: DataFrame, urlCol: String,
                     robots: DataFrame, hostCol: String, txtCol: String,
-                    agent: String,
-                    broadcastRobots: Boolean = true): DataFrame =
-    annotate(urls, urlCol, robots, hostCol, txtCol, agent,
-      outCol = "__allowed", broadcastRobots = broadcastRobots)
+                    agent: String): DataFrame =
+    annotate(urls, urlCol, robots, hostCol, txtCol, agent, outCol = "__allowed")
       .where(col("__allowed")).drop("__allowed")
 }

@@ -69,22 +69,19 @@ object Sampling {
    * table is bounded by the duplicate count, and the split stays
    * deterministic across re-runs like every other split here.
    *
-   * `broadcastGroups` is the [[Dedup.exact]] `broadcastDupSet`
-   * discipline: the default `true` broadcasts the group table so the
-   * corpus never shuffles — right for the common case where
-   * duplicates are a small fraction. On a MASS-duplicated corpus the
-   * group table is O(corpus); forcing it through `broadcast()` is a
-   * driver-OOM job-killer, so callers there pass `false` and take a
-   * plain shuffle left join instead (AQE may still pick broadcast at
-   * runtime from the table's actual size — `false` only removes the
-   * forced hint). A caller-set flag, not a count gate, because
-   * `groups` is typically an UNMATERIALIZED connected-components
-   * frame — counting it here would re-run the whole CC iteration.
+   * The group join carries no broadcast hint: the plan choice is left
+   * to Spark's planner and AQE, which know the group table's size.
+   * Groups resolved on the driver ([[DupGroups.connectedComponents]]'s
+   * small-graph path) are a local relation of exact, known size, so a
+   * small table broadcasts and the corpus never shuffles. On a
+   * MASS-duplicated corpus the groups come from the distributed rounds
+   * and are O(corpus); forcing them through `broadcast()` would be a
+   * driver-OOM job-killer, so they take a plain shuffle left join
+   * unless AQE sees they fit.
    */
   def withGroupSafeSplitLabel(df: DataFrame, idCol: String, groups: DataFrame,
                               weights: Seq[Double], names: Seq[String],
                               seed: Long = 42L,
-                              broadcastGroups: Boolean = true,
                               /** Bucket expression builder applied to the
                                 * GROUP key (the representative id, or the
                                 * doc's own id outside any group) — the
@@ -93,9 +90,8 @@ object Sampling {
                                 * [[withSplitLabel]]'s `bucketCol`. */
                               bucketOf: Option[Column => Column] = None): DataFrame = {
     val g = groups.select(col("id").as("_gs_id"), col("group_id").as("_gs_group"))
-    val gSide = if (broadcastGroups) broadcast(g) else g
     val keyed = df
-      .join(gSide, col(idCol) === col("_gs_id"), "left")
+      .join(g, col(idCol) === col("_gs_id"), "left")
       .withColumn("_gs_key", coalesce(col("_gs_group"), col(idCol)))
     withSplitLabel(keyed, "_gs_key", weights, names, seed,
         bucketCol = bucketOf.map(_(col("_gs_key"))))

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /**
  * SemDeDup — semantic deduplication by cluster-then-prune (Abbas,
@@ -26,10 +27,11 @@ import org.apache.spark.sql.functions._
  * identical — pairs across sub-bucket boundaries are the documented
  * recall trade, the same as EmbedDedup's maxBucket). Duplicate
  * groups resolve via [[DupGroups.connectedComponents]] ((id, label)
- * rounds only), and the final drop list broadcasts into the anti
- * join ONLY when a count gate says it fits (see [[dedup]]) — under
- * mass duplication the drop list is O(corpus), and an unconditional
- * broadcast would be a driver-OOM job-killer, not a slowdown.
+ * rounds only), and the final drop list is force-broadcast into the
+ * anti join ONLY when its exact, already-counted size fits (see
+ * [[dedup]]) — under mass duplication the drop list is O(corpus), and
+ * an unconditional broadcast would be a driver-OOM job-killer, not a
+ * slowdown.
  */
 object SemDeDup {
 
@@ -112,173 +114,112 @@ object SemDeDup {
     * fingerprint collision trade (2⁻⁶⁴/pair mislabel) is the same one
     * exact dedup and EmbedDedup document.
     *
-    * Broadcast gate (the [[Dedup.exact]] `broadcastDupSet` discipline,
-    * made automatic): on exactly the corpus SemDeDup targets —
+    * Broadcast rule: on exactly the corpus SemDeDup targets —
     * mass-replicated crawl data — identity copies make the drop list
     * O(corpus), and force-broadcasting billions of ids is a driver
-    * OOM / 8 GB broadcast-limit job-killer. The drop list is therefore
-    * only hinted `broadcast` when an UPPER BOUND on its size fits
-    * `maxBroadcastIds`: |drop| = |identity copies| + |semantic drops|,
-    * the first term exact and the second bounded by the identity-group
-    * count, both read off one scalar aggregate over the same
-    * fingerprint keying the pre-grouping already computes. Above the
-    * cap the anti join falls back to a plain shuffle join — AQE may
-    * still choose broadcast at runtime from the drop list's ACTUAL
-    * size; the gate only removes the forced hint. The gate costs one
-    * ids-only aggregate job at construction (a column-pruned scan
-    * shuffling 16 bytes per distinct vector). `maxBroadcastIds =
-    * Long.MaxValue` skips the gate job and always broadcasts — safe
-    * only when the caller KNOWS duplication is bounded; `<= 0` always
-    * takes the shuffle path (also no gate job).
+    * OOM / 8 GB broadcast-limit job-killer. The drop list is
+    * materialized anyway (see [[dropList]]), and the same action counts
+    * it (`observe`), so the anti join is hinted `broadcast` only when
+    * that EXACT size fits [[MaxBroadcastDropIds]]. Above it the anti
+    * join is left to the planner — AQE may still choose broadcast at
+    * runtime from the drop list's actual size. The count costs no job.
     *
     * Construction is NOT fully lazy and cannot be: resolving duplicate
     * GROUPS is iterative ([[DupGroups.connectedComponents]] hooks +
     * compresses until a fixpoint), so those rounds necessarily run as
-    * jobs when `dedup` is called — a documented, load-bearing
-    * computation, not a surprise probe. Everything else obeys the BM25
-    * laziness rule: [[dupPairs]] with a known `dim` builds its plan
-    * with zero jobs, and the gate aggregate is the only job `dedup`
-    * adds beyond the group resolution. */
+    * jobs when `dedup` is called, followed by the drop list's one
+    * materializing action — a documented, load-bearing computation,
+    * not a surprise probe. Everything else obeys the BM25 laziness
+    * rule: [[dupPairs]] with a known `dim` builds its plan with zero
+    * jobs. */
   def dedup(embeddings: DataFrame, vecCol: String, idCol: String,
             centroids: Array[Array[Double]], threshold: Double = 0.95,
-            maxClusterSize: Int = 20000, seed: Long = 42L,
-            maxBroadcastIds: Long = 10000000L): DataFrame =
+            maxClusterSize: Int = 20000, seed: Long = 42L): DataFrame =
     embeddings.join(
-      dropList(embeddings, vecCol, idCol, centroids, threshold, maxClusterSize,
-        seed, maxBroadcastIds),
+      dropList(embeddings, vecCol, idCol, centroids, threshold, maxClusterSize, seed),
       col(idCol) === col("_drop_id"), "left_anti")
 
+  /** Force-broadcast ceiling for the drop list, in ids (8 bytes each,
+    * so ~80 MB of broadcast at the ceiling). */
+  private[operators] val MaxBroadcastDropIds: Long = 10000000L
+
   /** The drop list [[dedup]] anti-joins: one `_drop_id` column holding
-    * every identity copy and semantic duplicate, broadcast-hinted iff
-    * the size gate documented on [[dedup]] says it fits. Exposed so
-    * consumers that need the DROPPED side (e.g. curation pruning a
-    * text table by embedding-table drops) anti-join this directly
-    * instead of re-deriving it by double negation — which would
-    * evaluate the whole SemDeDup DAG twice plus two extra
-    * embedding-table scans. */
+    * every identity copy and semantic duplicate, materialized
+    * (localCheckpoint) and broadcast-hinted iff its exact size fits
+    * [[MaxBroadcastDropIds]]. Exposed so consumers that need the
+    * DROPPED side (e.g. curation pruning a text table by
+    * embedding-table drops) anti-join this directly instead of
+    * re-deriving it by double negation — which would evaluate the
+    * whole SemDeDup DAG twice plus two extra embedding-table scans. */
   def dropList(embeddings: DataFrame, vecCol: String, idCol: String,
                centroids: Array[Array[Double]], threshold: Double = 0.95,
-               maxClusterSize: Int = 20000, seed: Long = 42L,
-               maxBroadcastIds: Long = 10000000L): DataFrame = {
-    val st = identityStage(embeddings, vecCol, idCol, maxBroadcastIds)
-    semanticStage(embeddings, vecCol, idCol, centroids, threshold,
-      maxClusterSize, seed, st)
-  }
+               maxClusterSize: Int = 20000, seed: Long = 42L): DataFrame =
+    dropListGated(embeddings, vecCol, idCol, centroids, threshold,
+      maxClusterSize, seed, MaxBroadcastDropIds)
 
-  /** The centroid-independent half of [[dropList]]: identity
-    * pre-grouping (keyed fingerprints, per-group representatives) and
-    * the broadcast size gate. Split out (r21) so callers that also FIT
-    * the centroids can run this stage CONCURRENTLY with the fit
-    * ([[fitAndDropList]]) — the two touch disjoint columns and the
-    * fit's 1+iters driver collects otherwise serialize in front of it.
-    * `keyed` is left PERSISTED; [[semanticStage]] releases it. */
-  private[operators] final case class IdentityStage(
-      keyed: DataFrame, reps: DataFrame, broadcastDrop: Boolean)
-
-  private[operators] def identityStage(embeddings: DataFrame, vecCol: String,
-                                       idCol: String,
-                                       maxBroadcastIds: Long): IdentityStage = {
-    // The drop-list DAG reads its two hot intermediates MANY times —
-    // (id, hash) feeds the rep groupBy, the size gate and the copies
-    // join; the assigned reps feed BOTH sides of the pair self-join,
-    // the distance lookup in dropIds, and connectedComponents' two
-    // evaluations of the pair frame. Lazy, every one of those re-ran
-    // the full upstream (corpus scan + the k×dim nearest-centroid
-    // expression); measured 24 s warm at the 22k-row sf1 gate vs 8 s
-    // cached. Both frames are the SMALL end: keyed is 16 bytes/row,
-    // assigned is one row per DISTINCT vector. Persist → materialize
-    // the drop list eagerly → release (the CheckpointDiscipline
-    // shape, so a long-lived session keeps only the drop ids).
-    val keyed = embeddings.select(col(idCol).as("_sd_id"), xxhash64(col(vecCol)).as("_k"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val reps = keyed.groupBy(col("_k")).agg(min(col("_sd_id")).as("_rep"))
-    val broadcastDrop =
-      if (maxBroadcastIds == Long.MaxValue) true
-      else if (maxBroadcastIds <= 0L) false
-      else {
-        // copies = Σ(group size − 1) exactly; semantic drops < #groups.
-        // A failed or cancelled gate job hands no stage to the caller,
-        // so nothing downstream would ever release `keyed`
-        val b =
-          try keyed.groupBy(col("_k")).agg(count(lit(1)).as("_gn"))
-            .agg(coalesce(sum(col("_gn") - 1), lit(0L)), count(lit(1))).head()
-          catch { case e: Throwable => keyed.unpersist(); throw e }
-        b.getLong(0) + b.getLong(1) <= maxBroadcastIds
-      }
-    IdentityStage(keyed, reps, broadcastDrop)
-  }
-
-  private[operators] def semanticStage(embeddings: DataFrame, vecCol: String,
+  /** [[dropList]] with the broadcast ceiling as a parameter, so specs
+    * reach both sides of the gate on a small fixture. */
+  private[operators] def dropListGated(embeddings: DataFrame, vecCol: String,
                                        idCol: String,
                                        centroids: Array[Array[Double]],
                                        threshold: Double, maxClusterSize: Int,
-                                       seed: Long, st: IdentityStage): DataFrame = {
+                                       seed: Long, maxBroadcast: Long): DataFrame = {
     require(centroids.nonEmpty, "centroids must be non-empty")
     val dim = centroids(0).length
-    val repRows = embeddings.join(
-      st.reps.select(col("_rep")), col(idCol) === col("_rep"), "left_semi")
-    val assigned = Clustering.assign(repRows, vecCol, centroids)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // The drop-list DAG reads its two hot intermediates MANY times —
+    // (id, hash) feeds the rep groupBy and the copies join; the
+    // assigned reps feed BOTH sides of the pair self-join, the distance
+    // lookup in dropIds, and connectedComponents' two evaluations of
+    // the pair frame. Lazy, every one of those re-ran the full upstream
+    // (corpus scan + the k×dim nearest-centroid expression); measured
+    // 24 s warm at the 22k-row sf1 gate vs 8 s cached. Both frames are
+    // the SMALL end: keyed is 16 bytes/row, assigned is one row per
+    // DISTINCT vector. Persist → materialize the drop list eagerly →
+    // release (the CheckpointDiscipline shape, so a long-lived session
+    // keeps only the drop ids). Both are built before either is
+    // persisted, so a plan that fails analysis leaves nothing cached;
+    // `keyed` is persisted first so the plan cached for `assigned`
+    // reads it.
+    val keyed = embeddings.select(col(idCol).as("_sd_id"), xxhash64(col(vecCol)).as("_k"))
+    val reps = keyed.groupBy(col("_k")).agg(min(col("_sd_id")).as("_rep"))
+    val assigned = Clustering.assign(
+      embeddings.join(reps.select(col("_rep")), col(idCol) === col("_rep"), "left_semi"),
+      vecCol, centroids)
+    keyed.persist(StorageLevel.MEMORY_AND_DISK)
+    assigned.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // identity copies: every non-representative member of an identity
       // group — dropped unconditionally (cosine exactly 1 to its rep)
-      val copies = st.keyed.join(st.reps, "_k").where(col("_sd_id") =!= col("_rep"))
+      val copies = keyed.join(reps, "_k").where(col("_sd_id") =!= col("_rep"))
         .select(col("_sd_id").as("_drop_id"))
       val pairs = dupPairs(assigned, vecCol, idCol, threshold, maxClusterSize, seed, dim)
       val semantic = dropIds(assigned, pairs, idCol).select(col("id").as("_drop_id"))
-      val drop = copies.unionByName(semantic).distinct().localCheckpoint(true)
-      if (st.broadcastDrop) broadcast(drop) else drop
-    } finally { st.keyed.unpersist(); assigned.unpersist(); () }
+      val obs = Observation()
+      val drop = copies.unionByName(semantic).distinct()
+        .observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
+      if (obs.get("n").asInstanceOf[Long] <= maxBroadcast) broadcast(drop) else drop
+    } finally { keyed.unpersist(); assigned.unpersist(); () }
   }
 
   /** [[dedup]] composed over [[fitAndDropList]]: fit + prune in one
-    * call with the fit and the identity stage overlapped. Identical
-    * results to `dedup(emb, …, Clustering.fit(emb, …), …)`. */
+    * call. Identical results to
+    * `dedup(emb, …, Clustering.fit(emb, …), …)`. */
   def dedupWithFit(embeddings: DataFrame, vecCol: String, idCol: String,
                    k: Int, iters: Int = 5, fitSeed: Long = 42L,
                    threshold: Double = 0.95, maxClusterSize: Int = 20000,
-                   seed: Long = 42L,
-                   maxBroadcastIds: Long = 10000000L): DataFrame =
+                   seed: Long = 42L): DataFrame =
     embeddings.join(
       fitAndDropList(embeddings, vecCol, idCol, k, iters, fitSeed, threshold,
-        maxClusterSize, seed, maxBroadcastIds)._2,
+        maxClusterSize, seed)._2,
       col(idCol) === col("_drop_id"), "left_anti")
 
-  /** [[Clustering.fit]] + [[dropList]] with the identity stage run
-    * CONCURRENTLY with the fit (guide §2.6 — the two are independent:
-    * the fit reads only the vector column, the identity stage only
-    * (id, xxhash64(vector))), composing to bit-identical results. The
-    * r21 q_curation_v2 profile measured the semdedup chain as the
-    * pipeline's critical path, ~40 serial driver-blocking jobs of
-    * which the fit's 1+iters collects and the identity gate aggregate
-    * have no ordering dependency at all. */
+  /** [[Clustering.fit]] followed by [[dropList]]: the fitted centroids
+    * and the drop list they produce. */
   def fitAndDropList(embeddings: DataFrame, vecCol: String, idCol: String,
                      k: Int, iters: Int = 5, fitSeed: Long = 42L,
                      threshold: Double = 0.95, maxClusterSize: Int = 20000,
-                     seed: Long = 42L,
-                     maxBroadcastIds: Long = 10000000L): (Array[Array[Double]], DataFrame) = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val sc = embeddings.sparkSession.sparkContext
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      val idFut = Future {
-        sc.setJobDescription("semdedup: identity pre-group + size gate")
-        identityStage(embeddings, vecCol, idCol, maxBroadcastIds)
-      }
-      val cents =
-        try Clustering.fit(embeddings, vecCol, k, iters, fitSeed)
-        catch { case e: Throwable =>
-          // the identity stage left `keyed` persisted; a fit failure
-          // must not leak it for the session's lifetime
-          try Await.result(idFut, Duration.Inf).keyed.unpersist()
-          catch { case _: Throwable => () }
-          throw e
-        }
-      val st = Await.result(idFut, Duration.Inf)
-      (cents, semanticStage(embeddings, vecCol, idCol, cents, threshold,
-        maxClusterSize, seed, st))
-    } finally { pool.shutdown(); () }
+                     seed: Long = 42L): (Array[Array[Double]], DataFrame) = {
+    val cents = Clustering.fit(embeddings, vecCol, k, iters, fitSeed)
+    (cents, dropList(embeddings, vecCol, idCol, cents, threshold, maxClusterSize, seed))
   }
 }

@@ -174,21 +174,17 @@ object UrlCuration {
    * Scale shape: ONE groupBy on the domain carrying (double sum, long
    * count) — never text; the resulting per-domain table (one row per
    * registered domain — web-scale is tens of millions of rows, far
-   * smaller than the corpus) joins back on the domain key. The join
-   * broadcasts when the domain table fits (`broadcastPriors`,
-   * default), else it is a standard shuffle join on the key.
+   * smaller than the corpus) broadcasts back on the domain key.
    * Null-domain docs keep null priors.
    */
-  def withDomainPrior(df: DataFrame, urlCol: String, scoreCol: String,
-                      broadcastPriors: Boolean = true): DataFrame = {
+  def withDomainPrior(df: DataFrame, urlCol: String, scoreCol: String): DataFrame = {
     val withDom = df.withColumn("_dom", registeredDomain(urlHost(col(urlCol))))
     val priors = withDom.where(col("_dom").isNotNull)
       .groupBy("_dom")
       .agg(avg(col(scoreCol)).as("domain_prior"),
         count(lit(1)).as("domain_docs"))
       .withColumnRenamed("_dom", "_pdom")
-    val p = if (broadcastPriors) broadcast(priors) else priors
-    withDom.join(p, col("_dom") === col("_pdom"), "left")
+    withDom.join(broadcast(priors), col("_dom") === col("_pdom"), "left")
       .drop("_dom", "_pdom")
   }
 

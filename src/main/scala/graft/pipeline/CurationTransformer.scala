@@ -222,8 +222,6 @@ object CurationTransformer {
         // SemDeDup builds the drop list internally; anti-join it
         // directly rather than re-deriving it from the survivor set
         // (which would run the whole SemDeDup DAG a second time).
-        // fitAndDropList (r21) additionally overlaps the k-means fit
-        // with the identity pre-group — same centroids, same list.
         SemDeDup.fitAndDropList(emb, embCol, embIdCol, k, iters = 3,
           threshold = thr)._2
       }

@@ -15,14 +15,33 @@ trait SparkSpec extends AnyFunSuite {
     * sentinel job runs last and is waited for, so every earlier tagged
     * job has been seen. */
   def jobsOf[T](body: => T): (T, Seq[String]) = {
+    val (r, jobs, _) = tagged(body)
+    (r, jobs)
+  }
+
+  /** `body`'s result and the number of SQL executions (one per action)
+    * it starts on this thread — steadier than a job count, since AQE
+    * splits one action into a varying number of stage jobs. */
+  def queriesOf[T](body: => T): (T, Int) = {
+    val (r, _, queries) = tagged(body)
+    (r, queries)
+  }
+
+  private def tagged[T](body: => T): (T, Seq[String], Int) = {
     val sc = spark.sparkContext
     val tag = s"jobs-of-${java.util.UUID.randomUUID()}"
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val queries = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         val p = Option(js.properties)
         if (p.flatMap(x => Option(x.getProperty("spark.job.tags"))).exists(_.split(",").contains(tag)))
           seen.add(p.flatMap(x => Option(x.getProperty("spark.job.description"))).getOrElse(""))
+      }
+      override def onOtherEvent(ev: org.apache.spark.scheduler.SparkListenerEvent): Unit = ev match {
+        case q: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+            if q.jobTags.contains(tag) => queries.incrementAndGet()
+        case _ =>
       }
     }
     sc.addSparkListener(listener)
@@ -41,7 +60,7 @@ trait SparkSpec extends AnyFunSuite {
       sc.removeSparkListener(listener)
     }
     import scala.jdk.CollectionConverters._
-    (result, seen.asScala.toSeq.filterNot(_ == tag))
+    (result, seen.asScala.toSeq.filterNot(_ == tag), queries.get())
   }
 
   /** All file scans in an EXECUTED plan, descending through AQE

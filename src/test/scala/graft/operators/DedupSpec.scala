@@ -34,7 +34,7 @@ class DedupSpec extends SparkSpec {
     assert("LeftAnti".r.findAllIn(plan).size >= 1, s"unique majority must pass via anti join:\n$plan")
     assert("Window \\[".r.findAllIn(plan).size == 1, s"exactly one window (dup minority only):\n$plan")
     // behavior parity with the classic full-shuffle plan
-    val classic = Dedup.exact(docs, "text", "doc_id", broadcastDupSet = false)
+    val classic = Dedup.exactWindow(docs, "text", "doc_id")
       .select("doc_id").as[Long].collect().sorted.toSeq
     val minority = out.select("doc_id").as[Long].collect().sorted.toSeq
     assert(classic == minority && minority == Seq(1L, 3L, 4L, 5L))

@@ -12,8 +12,8 @@ class DupGroupsSpec extends SparkSpec {
   private def components(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
     val fast = DupGroups.connectedComponents(pairs.toDF("a", "b"), "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dist = DupGroups.connectedComponents(pairs.toDF("a", "b"), "a", "b",
-        driverResolveMaxEdges = -1L)
+    val dist = DupGroups.connectedComponentsBounded(pairs.toDF("a", "b"), "a", "b",
+        maxIter = 50, driverResolveMaxEdges = -1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fast == dist, "driver fast path and distributed path disagree")
     fast
@@ -82,8 +82,8 @@ class DupGroupsSpec extends SparkSpec {
   test("maxIter exhaustion raises instead of returning partial labels") {
     val pairs = (1L until 40L).map(i => (i, i + 1))
     intercept[IllegalStateException] {
-      DupGroups.connectedComponents(pairs.toDF("a", "b"), "a", "b", maxIter = 1,
-          driverResolveMaxEdges = -1L)
+      DupGroups.connectedComponentsBounded(pairs.toDF("a", "b"), "a", "b", maxIter = 1,
+          driverResolveMaxEdges = -1)
         .collect()
     }
   }
@@ -94,5 +94,31 @@ class DupGroupsSpec extends SparkSpec {
     val kept = DupGroups.keepRepresentatives(corpus, "doc_id", pairs, "a", "b")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept == Set(1L, 2L, 5L, 6L, 8L, 9L, 10L))
+  }
+
+  test("keepRepresentatives: no forced broadcast, same keep set") {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val corpus = (1L to 100L).map(i => (i, s"doc$i")).toDF("doc_id", "text")
+    val pairs = Seq((2L, 3L), (3L, 4L), (6L, 7L)).toDF("a", "b")
+    /** (anti join carries a hint, executed plan has a broadcast join, kept ids) */
+    def run(): (Boolean, Boolean, Set[Long]) = {
+      val out = DupGroups.keepRepresentatives(corpus, "doc_id", pairs, "a", "b")
+      val hinted = out.queryExecution.optimizedPlan.collect {
+        case j: Join if j.joinType == LeftAnti => j.hint.rightHint.exists(_.strategy.isDefined)
+      }.exists(identity)
+      val kept = out.select("doc_id").collect().map(_.getLong(0)).toSet
+      (hinted, out.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"), kept)
+    }
+    val (hinted, broadcasts, kept) = run()
+    assert(!hinted, "the drop side must carry no forced broadcast hint")
+    assert(broadcasts, "a driver-resolved drop set must broadcast from its known size")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    val (_, shuffled, keptShuffled) =
+      try run() finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(!shuffled, "with broadcast disabled the anti join must not broadcast")
+    assert(keptShuffled == kept && kept == (1L to 100L).toSet -- Set(3L, 4L, 7L))
   }
 }

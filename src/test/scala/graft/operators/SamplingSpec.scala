@@ -128,29 +128,36 @@ class SamplingSpec extends SparkSpec {
     assert(labeled.columns.toSeq == Seq("doc_id", "text", "split"))
   }
 
-  test("group-safe split: broadcastGroups=false takes the shuffle path with identical labels") {
+  test("group-safe split: unhinted join, same labels on both plans") {
     import org.apache.spark.sql.catalyst.plans.logical.Join
     val docs = (1L to 100L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("a", "b")
     val groups = DupGroups.connectedComponents(pairs, "a", "b")
-    val hinted = Sampling.withGroupSafeSplitLabel(docs, "doc_id", groups,
-      Seq(0.5, 0.5), Seq("train", "test"))
-    val plain = Sampling.withGroupSafeSplitLabel(docs, "doc_id", groups,
-      Seq(0.5, 0.5), Seq("train", "test"), broadcastGroups = false)
-    // the mass-dup fallback: NO forced broadcast hint on the group join
-    def groupJoinHints(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.optimizedPlan.collect {
+    /** (group join carries a hint, executed plan has a broadcast join, labels) */
+    def run(): (Boolean, Boolean, Map[Long, String]) = {
+      val labeled = Sampling.withGroupSafeSplitLabel(docs, "doc_id", groups,
+        Seq(0.5, 0.5), Seq("train", "test"))
+      val hinted = labeled.queryExecution.optimizedPlan.collect {
         case j: Join if j.condition.exists(_.references.exists(_.name == "_gs_id")) =>
-          j.hint.rightHint
-      }
-    assert(groupJoinHints(hinted).exists(_.exists(_.strategy.isDefined)),
-      "default path must carry the broadcast hint")
-    assert(groupJoinHints(plain).forall(_.forall(_.strategy.isEmpty)),
-      "broadcastGroups=false must not force a broadcast")
+          j.hint.rightHint.exists(_.strategy.isDefined)
+      }.exists(identity)
+      val labels = labeled.select("doc_id", "split").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      (hinted, labeled.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"), labels)
+    }
+    val (hinted, broadcasts, labels) = run()
+    assert(!hinted, "the group join must carry no forced broadcast hint")
+    assert(broadcasts, "driver-resolved groups must broadcast from their known size")
+    // the mass-dup case: a group table Spark will not broadcast takes
+    // the shuffle left join
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    val (_, shuffled, shuffledLabels) =
+      try run() finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(!shuffled, "with broadcast disabled the group join must not broadcast")
     // and the labels are bit-identical either way
-    val a = hinted.select("doc_id", "split").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val b = plain.select("doc_id", "split").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(a == b, "plan choice must never change the split")
+    assert(shuffledLabels == labels && labels.size == 100, "plan choice must never change the split")
   }
 
   test("globalShuffle: reproducible permutation, partitioning-independent, content-preserving") {

@@ -113,75 +113,52 @@ class SemDeDupSpec extends SparkSpec {
   test("broadcast gate: above the cap the drop list takes the shuffle path with identical survivors") {
     import org.apache.spark.sql.catalyst.plans.logical.Join
     import org.apache.spark.sql.catalyst.plans.LeftAnti
-    // the mass-replicated fixture: 10 ids, 2 identity groups → drop
-    // bound = 8 copies + 2 reps = 10
+    // the mass-replicated fixture: 10 ids, 2 identity groups → 8 copies
+    // + 1 semantic drop = 9 drops, counted by the materializing action
     val e = emb(
       ((1L to 5L).map(i => i -> Array(1f, 0f, 0f, 0f)) ++
         (6L to 10L).map(i => i -> Array(2f, 0f, 0f, 0f))): _*)
+    def pruned(maxBroadcast: Long) =
+      e.join(SemDeDup.dropListGated(e, "embedding", "vec_id", centroids, threshold = 0.99,
+          maxClusterSize = 20000, seed = 42L, maxBroadcast = maxBroadcast),
+        col("vec_id") === col("_drop_id"), "left_anti")
     def antiHint(df: org.apache.spark.sql.DataFrame) =
       df.queryExecution.optimizedPlan.collect {
         case j: Join if j.joinType == LeftAnti => j.hint.rightHint
       }
-    val over = SemDeDup.dedup(e, "embedding", "vec_id", centroids,
-      threshold = 0.99, maxBroadcastIds = 9L) // bound 10 > 9 → fallback
+    val over = pruned(8L) // 9 drops > 8 → no hint
     assert(antiHint(over).forall(_.forall(_.strategy.isEmpty)),
       "above the cap the anti join must not force a broadcast")
     assert(over.select("vec_id").as[Long].collect().toSeq == Seq(6L),
       "fallback plan must keep the same survivors")
-    val under = SemDeDup.dedup(e, "embedding", "vec_id", centroids,
-      threshold = 0.99, maxBroadcastIds = 10L) // bound 10 <= 10 → broadcast
+    val under = pruned(9L) // 9 drops <= 9 → broadcast
     assert(antiHint(under).exists(_.exists(_.strategy.isDefined)),
       "within the cap the drop list must carry the broadcast hint")
     assert(under.select("vec_id").as[Long].collect().toSeq == Seq(6L))
   }
 
-  test("laziness: dupPairs with known dim launches ZERO jobs; the gate aggregate only runs when enabled") {
+  test("laziness: known-dim dupPairs is lazy; the gate adds no query") {
     val e = emb(1L -> Array(1f, 0f, 0f, 0f), 2L -> Array(2f, 0f, 0f, 0f))
     val assigned = Clustering.assign(e, "embedding", centroids)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val queries = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onOtherEvent(ev: org.apache.spark.scheduler.SparkListenerEvent): Unit =
-        ev match {
-          case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-            queries.incrementAndGet()
-          case _ =>
-        }
-    }
-    /** (Spark jobs, SQL executions) launched by `body`. */
-    def launched(body: => Unit): (Int, Int) = {
-      spark.sparkContext.addSparkListener(listener)
-      try { jobs.set(0); queries.set(0); body; Thread.sleep(500); (jobs.get(), queries.get()) }
-      finally spark.sparkContext.removeSparkListener(listener)
-    }
     // the r9 verdict's ask: no dim probe when the caller knows dim
-    val pairJobs = launched {
+    val pairJobs = jobsOf {
       SemDeDup.dupPairs(assigned, "embedding", "vec_id", threshold = 0.9, dim = 4)
-    }._1
+    }._2.size
     assert(pairJobs == 0, s"dupPairs with known dim must be lazy; launched $pairJobs job(s)")
-    // dedup construction necessarily runs the connected-components
-    // rounds (iterative, documented); the gate must be the ONLY
-    // difference between the skip paths and the gated path. Counted in
-    // SQL executions (one per action): AQE splits one action into a
-    // varying number of stage jobs from run to run
-    val skipQueries = launched {
-      SemDeDup.dedup(e, "embedding", "vec_id", centroids, threshold = 0.9,
-        maxBroadcastIds = Long.MaxValue)
+    // drop-list construction necessarily runs the connected-components
+    // rounds (iterative, documented) and its one materializing action;
+    // the broadcast gate reads the count that action observes, so the
+    // gated list costs exactly the queries of a never-hinted one
+    val gatedQueries = queriesOf {
+      SemDeDup.dropList(e, "embedding", "vec_id", centroids, threshold = 0.9)
     }._2
-    val shuffleQueries = launched {
-      SemDeDup.dedup(e, "embedding", "vec_id", centroids, threshold = 0.9,
-        maxBroadcastIds = 0L)
+    val unhintedQueries = queriesOf {
+      SemDeDup.dropListGated(e, "embedding", "vec_id", centroids, threshold = 0.9,
+        maxClusterSize = 20000, seed = 42L, maxBroadcast = -1L)
     }._2
-    val gatedQueries = launched {
-      SemDeDup.dedup(e, "embedding", "vec_id", centroids, threshold = 0.9,
-        maxBroadcastIds = 5L)
-    }._2
-    assert(skipQueries == shuffleQueries,
-      s"both gate-skip paths must cost the same: $skipQueries vs $shuffleQueries")
-    assert(gatedQueries > skipQueries,
-      s"the enabled gate must add its aggregate query: gated=$gatedQueries skip=$skipQueries")
+    assert(gatedQueries > 0, "drop-list construction must be counted")
+    assert(gatedQueries == unhintedQueries,
+      s"the gate must add no query: gated=$gatedQueries unhinted=$unhintedQueries")
   }
 
   test("real embeddings: dedup is idempotent and only removes grouped members") {
@@ -194,7 +171,7 @@ class SemDeDupSpec extends SparkSpec {
     assert(twice.count() == n1, "second pass must remove nothing new")
   }
 
-  test("fitAndDropList: overlapped fit+identity composes to the sequential result (r21)") {
+  test("fitAndDropList equals fit then dropList") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val cents = Clustering.fit(e, "embedding", k = 4, iters = 3)
     val seqDrop = SemDeDup.dropList(e, "embedding", "vec_id", cents, threshold = 0.995)
@@ -202,19 +179,20 @@ class SemDeDupSpec extends SparkSpec {
     val (cents2, drop2) = SemDeDup.fitAndDropList(e, "embedding", "vec_id",
       k = 4, iters = 3, threshold = 0.995)
     assert(cents2.map(_.toSeq).toSeq == cents.map(_.toSeq).toSeq,
-      "the overlapped fit must produce bit-identical centroids")
+      "the composed fit must produce bit-identical centroids")
     assert(drop2.as[Long].collect().toSet == seqDrop,
-      "the overlapped drop list must equal the sequential one")
+      "the composed drop list must equal the sequential one")
     val kept = SemDeDup.dedupWithFit(e, "embedding", "vec_id",
       k = 4, iters = 3, threshold = 0.995).count()
     assert(kept == e.count() - seqDrop.size,
       "dedupWithFit must prune exactly the drop list")
   }
 
-  test("a failing size gate rethrows and leaves no persisted RDD behind") {
-    // the identity stage persists its keyed fingerprints before the
-    // size-gate action; an embedding column that throws at evaluation
-    // fails that action, and nothing downstream would ever release them
+  test("a failing drop-list action leaks no persisted RDD") {
+    // the drop list persists its keyed fingerprints and assigned
+    // representatives before its first action; an embedding column that
+    // throws at evaluation fails that action, and nothing downstream
+    // would ever release them
     val boom = udf { (id: Long) =>
       if (id >= 0L) throw new IllegalStateException("embedding decode failed")
       Array(0f)
@@ -225,6 +203,15 @@ class SemDeDupSpec extends SparkSpec {
     val causes = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
     assert(causes.exists(c => String.valueOf(c.getMessage).contains("embedding decode failed")), ex)
     val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
-    assert(leaked.isEmpty, s"the failed gate leaked persisted RDDs: $leaked")
+    assert(leaked.isEmpty, s"the failed action leaked persisted RDDs: $leaked")
+  }
+
+  test("empty centroids fail before anything is persisted") {
+    val e = emb(1L -> Array(1f, 0f, 0f, 0f), 2L -> Array(2f, 0f, 0f, 0f))
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    intercept[IllegalArgumentException](
+      SemDeDup.dropList(e, "embedding", "vec_id", Array.empty[Array[Double]]))
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(leaked.isEmpty, s"empty centroids leaked persisted RDDs: $leaked")
   }
 }
