@@ -2024,9 +2024,9 @@ object SparkEntry {
       // cosine in the synthetic embeddings is ~0.51.
       val emb = withPlantedNearDups(t(s, dir, "embeddings"), "vec_id", "embedding",
         eps = 0.1)
-      // dedupWithFit == Clustering.fit + SemDeDup.dedup composed, with
-      // the fit's driver collects overlapped against the identity
-      // pre-group (r21, guide §2.6) — bit-identical centroids/survivors
+      // dedupWithFit == Clustering.fit + SemDeDup.dedup composed
+      // (bit-identical centroids/survivors); at this size one collect
+      // feeds both the fit and the drop list on the driver
       graft.operators.SemDeDup.dedupWithFit(emb, "embedding", "vec_id",
           k = 8, iters = 3, threshold = 0.92)
         .select((col("vec_id") % 1000000L).as("pair_key"))

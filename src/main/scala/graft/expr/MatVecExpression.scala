@@ -160,37 +160,17 @@ case class NearestCentroid(child: Expression, matrixBytes: Array[Byte])
 
   def nearest(arr: ArrayData): org.apache.spark.sql.catalyst.InternalRow = {
     val d = centroids(0).length
-    if (arr.numElements() != d)
-      throw new IllegalArgumentException(
-        s"nearest_centroid: input vector has ${arr.numElements()} dims, " +
-          s"centroids have $d")
+    NearestCentroid.checkDim(arr.numElements(), d)
     // read the vector once into a scratch array (k centroid loops
     // then hit primitive doubles, not per-element ArrayData decoding)
     val x = new Array[Double](d)
     var i = 0
     while (i < d) {
-      if (arr.isNullAt(i))
-        throw new IllegalArgumentException(
-          s"nearest_centroid: input vector has a null element at $i — " +
-            "malformed embedding, refusing to assign a cluster from garbage")
+      if (arr.isNullAt(i)) throw NearestCentroid.nullElement(i)
       x(i) = if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
       i += 1
     }
-    var bestD = 0.0
-    var bestI = 0
-    var c = 0
-    while (c < centroids.length) {
-      val row = centroids(c)
-      var acc = 0.0
-      var j = 0
-      while (j < d) { val t = x(j) - row(j); acc += t * t; j += 1 }
-      // Double.compare orders NaN greatest, matching Spark's
-      // array_min; strict < keeps the lowest index on ties
-      if (c == 0 || java.lang.Double.compare(acc, bestD) < 0) {
-        bestD = acc; bestI = c
-      }
-      c += 1
-    }
+    val (bestD, bestI) = NearestCentroid.closest(x, centroids)
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](bestD, bestI))
   }
@@ -222,6 +202,43 @@ case class NearestCentroid(child: Expression, matrixBytes: Array[Byte])
 }
 
 object NearestCentroid {
+
+  /** The centroid nearest to `x` in squared L2, as (distance, index):
+    * the loop behind the expression and the driver-side k-means and
+    * SemDeDup paths, so both decide every assignment identically.
+    * Float inputs are promoted to double before the call; each
+    * distance accumulates sequentially over the elements; a strict
+    * `<` under `Double.compare` keeps the lowest index on ties and
+    * orders NaN greatest, matching Spark's `array_min`. */
+  def closest(x: Array[Double], centroids: Array[Array[Double]]): (Double, Int) = {
+    val d = centroids(0).length
+    checkDim(x.length, d)
+    var bestD = 0.0
+    var bestI = 0
+    var c = 0
+    while (c < centroids.length) {
+      val row = centroids(c)
+      var acc = 0.0
+      var j = 0
+      while (j < d) { val t = x(j) - row(j); acc += t * t; j += 1 }
+      if (c == 0 || java.lang.Double.compare(acc, bestD) < 0) {
+        bestD = acc; bestI = c
+      }
+      c += 1
+    }
+    (bestD, bestI)
+  }
+
+  def checkDim(n: Int, d: Int): Unit =
+    if (n != d)
+      throw new IllegalArgumentException(
+        s"nearest_centroid: input vector has $n dims, centroids have $d")
+
+  def nullElement(i: Int): IllegalArgumentException =
+    new IllegalArgumentException(
+      s"nearest_centroid: input vector has a null element at $i — " +
+        "malformed embedding, refusing to assign a cluster from garbage")
+
   def serialize(centroids: Array[Array[Double]]): Array[Byte] = {
     require(centroids.nonEmpty, "nearest_centroid: empty centroid matrix")
     val d = centroids(0).length

@@ -42,51 +42,41 @@ case class CosineSimilarity(left: Expression, right: Expression) extends BinaryE
   @transient private lazy val rightIsFloat =
     right.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(l: Any, r: Any): Any =
+    CosineSimilarity.cosine(l.asInstanceOf[ArrayData], leftIsFloat,
+      r.asInstanceOf[ArrayData], rightIsFloat)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.expr.CosineSimilarity$$.MODULE$$.cosine(" +
+        s"$a, $leftIsFloat, $b, $rightIsFloat);")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+
+  override def prettyName: String = "cosine_sim"
+}
+
+object CosineSimilarity {
+
+  /** The cosine loop behind the expression (interpreted and generated
+    * code alike) and SemDeDup's driver-side pair loop: sequential
+    * dot/norm accumulation in double over the common prefix, zero
+    * norm → 0.0. The element-type flags are loop-invariant, so the JIT
+    * hoists them out of the loop. */
+  def cosine(a: ArrayData, aFloat: Boolean, b: ArrayData, bFloat: Boolean): Double = {
     val n = math.min(a.numElements(), b.numElements())
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     while (i < n) {
-      val x = if (leftIsFloat) a.getFloat(i).toDouble else a.getDouble(i)
-      val y = if (rightIsFloat) b.getFloat(i).toDouble else b.getDouble(i)
+      val x = if (aFloat) a.getFloat(i).toDouble else a.getDouble(i)
+      val y = if (bFloat) b.getFloat(i).toDouble else b.getDouble(i)
       dot += x * y; na += x * x; nb += y * y
       i += 1
     }
     val den = math.sqrt(na) * math.sqrt(nb)
     if (den == 0.0) 0.0 else dot / den
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      val den = ctx.freshName("den")
-      val getX = if (leftIsFloat) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      val getY = if (rightIsFloat) s"(double) $b.getFloat($i)" else s"$b.getDouble($i)"
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0, $na = 0.0, $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = $getX;
-         |  double $y = $getY;
-         |  $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |}
-         |double $den = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
-         |${ev.value} = ($den == 0.0) ? 0.0 : $dot / $den;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "cosine_sim"
 }
 
 /**

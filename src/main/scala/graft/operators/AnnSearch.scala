@@ -184,21 +184,113 @@ object AnnSearch {
    * K-means coarse quantizer (Lloyd's, few iterations). Centroids are
    * the only driver-side state (k × dim doubles) — assignments stay
    * distributed; each iteration is one map + one groupBy shuffle.
+   *
+   * At or below [[DriverFitMaxRows]] non-null vectors the fit runs on
+   * the driver instead: one limit-guarded collect fetches the vectors
+   * with the same Spark-computed seeding hashes, and [[kmeansLocal]]
+   * runs the same seeding and Lloyd rounds there. At curation sizes
+   * the distributed fit is 2 + iters Spark jobs whose per-job latency,
+   * not the data, sets its wall time.
    */
   def kmeansCentroids(embeddings: DataFrame, vecCol: String,
-                      k: Int, iters: Int = 5, seed: Long = 42L): Array[Array[Double]] = {
+                      k: Int, iters: Int = 5, seed: Long = 42L): Array[Array[Double]] =
+    kmeansGated(embeddings, vecCol, k, iters, seed, DriverFitMaxRows)
+
+  /** Non-null vectors at or below which [[kmeansCentroids]] fits on the
+    * driver. The driver then holds at most 10k vectors as double
+    * arrays: 1.3 MB at dim 16, 82 MB at dim 1024, plus k × dim sums
+    * per round. */
+  val DriverFitMaxRows: Int = 10000
+
+  /** [[kmeansCentroids]] with the driver-fit gate as an argument; a
+    * negative gate always runs the distributed fit, the reference the
+    * driver path must reproduce. */
+  private[operators] def kmeansGated(embeddings: DataFrame, vecCol: String, k: Int,
+                                     iters: Int, seed: Long,
+                                     driverFitMaxRows: Int): Array[Array[Double]] = {
     graft.expr.GraftFunctions.ensure(embeddings.sparkSession)
-    // The fit scans its input 1 + iters times (seed selection, then
-    // one assignment-aggregate per round). Cache the PROJECTED vector
-    // column for the fit's lifetime (MEMORY_AND_DISK — at corpus
-    // scale the overflow spills instead of evicting), the MLlib
-    // KMeans discipline: without it every round re-runs whatever
-    // upstream produced the embeddings (a decode, a projection, a
-    // union), which turns an O(iters) fit into O(iters × upstream).
-    val vecs = embeddings.select(col(vecCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try kmeansOnCached(vecs, vecCol, k, iters, seed)
-    finally { vecs.unpersist(); () }
+    collectHashed(embeddings, vecCol, None, seed, driverFitMaxRows) match {
+      case Some(rows) => kmeansLocal(rows, k, iters)
+      case None =>
+        // The fit scans its input 1 + iters times (seed selection, then
+        // one assignment-aggregate per round). Cache the PROJECTED
+        // vector column for the fit's lifetime (MEMORY_AND_DISK — at
+        // corpus scale the overflow spills instead of evicting), the
+        // MLlib KMeans discipline: without it every round re-runs
+        // whatever upstream produced the embeddings (a decode, a
+        // projection, a union), which turns an O(iters) fit into
+        // O(iters × upstream).
+        val vecs = embeddings.select(col(vecCol))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try kmeansOnCached(vecs, vecCol, k, iters, seed)
+        finally { vecs.unpersist(); () }
+    }
+  }
+
+  /** One non-null embedding row as the driver-side fits see it: the
+    * optional integral id (as a long), the vector promoted to double,
+    * the 1-based position of its first null element (0 if none; the
+    * element itself decodes as 0.0), and the two hashes Spark computes
+    * for the distributed fit — `h = xxhash64(vec)` (identity) and
+    * `ord = xxhash64(cast(vec AS string), seed)` (seeding order). */
+  private[operators] final case class HashedVec(id: Option[Long], vec: Array[Double],
+                                                firstNull: Int, h: Long, ord: Long) {
+    /** The vector, failing where `nearest_centroid` would on a null
+      * element. */
+    def checked: Array[Double] =
+      if (firstNull == 0) vec else throw graft.expr.NearestCentroid.nullElement(firstNull - 1)
+  }
+
+  /** The non-null vectors of `embeddings` as [[HashedVec]]s in one
+    * limit-guarded collect, or None above `maxRows`. `idCol` must be
+    * integral when given. */
+  private[operators] def collectHashed(embeddings: DataFrame, vecCol: String,
+                                       idCol: Option[String], seed: Long,
+                                       maxRows: Int): Option[Array[HashedVec]] = {
+    val spark = embeddings.sparkSession
+    import spark.implicits._
+    val v = col(vecCol)
+    DriverCollect.collectAtMost(
+      embeddings.where(v.isNotNull).select(
+        idCol.fold(lit(null).cast("long"))(c => col(c).cast("long")).as("id"),
+        transform(v.cast("array<double>"), x => coalesce(x, lit(0.0d))).as("vec"),
+        array_position(transform(v, _.isNull), true).cast("int").as("firstNull"),
+        xxhash64(v).as("h"),
+        xxhash64(v.cast("string"), lit(seed)).as("ord")).as[HashedVec],
+      maxRows)
+  }
+
+  /** The distributed fit computed on the driver from collected rows:
+    * the same seeds (per identity hash `h` its least `ord`, then the k
+    * smallest by (ord, h)) and the same Lloyd rounds, assigning through
+    * [[graft.expr.NearestCentroid.closest]]; an empty cluster keeps its
+    * centroid. Centroids differ from the distributed sums only in the
+    * order of the floating-point additions. Shared by
+    * [[kmeansCentroids]], [[Clustering.fit]] and [[SemDeDup]]. */
+  private[operators] def kmeansLocal(rows: Array[HashedVec], k: Int,
+                                     iters: Int): Array[Array[Double]] = {
+    val seedOf = scala.collection.mutable.LongMap.empty[HashedVec]
+    rows.foreach { r =>
+      if (seedOf.get(r.h).forall(_.ord > r.ord)) seedOf(r.h) = r
+    }
+    var centroids = seedOf.values.toArray.sortBy(r => (r.ord, r.h)).take(k).map(_.vec)
+    for (_ <- 1 to iters) {
+      require(centroids.nonEmpty, "nearest_centroid: empty centroid matrix")
+      val d = centroids(0).length
+      val sums = Array.fill(centroids.length)(new Array[Double](d))
+      val counts = new Array[Long](centroids.length)
+      rows.foreach { r =>
+        val c = graft.expr.NearestCentroid.closest(r.checked, centroids)._2
+        val s = sums(c)
+        var j = 0
+        while (j < d) { s(j) += r.vec(j); j += 1 }
+        counts(c) += 1
+      }
+      centroids = Array.tabulate(centroids.length) { c =>
+        if (counts(c) > 0) sums(c).map(_ / counts(c)) else centroids(c)
+      }
+    }
+    centroids
   }
 
   private def kmeansOnCached(embeddings0: DataFrame, vecCol: String,

@@ -10,11 +10,13 @@ import org.apache.spark.sql.functions._
  * operator): topic-ish bucketing for stratified sampling, corpus
  * composition reports, and cluster-balanced mixing of training data.
  *
- * Scale story: fitting collects only k×dim centroid doubles per
- * iteration (AnnSearch.kmeansCentroids — one map + one groupBy per
- * round); assignment is a single scan with the centroid matrix as ONE
- * literal (no join, no shuffle); per-cluster stats are one ids-only
- * aggregation. Nothing driver-side ever holds rows.
+ * Scale story: fitting ([[AnnSearch.kmeansCentroids]]) collects the
+ * vectors once and runs k-means on the driver when there are at most
+ * [[AnnSearch.DriverFitMaxRows]] of them; above that it collects only
+ * k×dim centroid doubles per iteration (one map + one groupBy per
+ * round) and never holds rows. Assignment is a single scan with the
+ * centroid matrix as ONE literal (no join, no shuffle); per-cluster
+ * stats are one ids-only aggregation.
  */
 object Clustering {
 

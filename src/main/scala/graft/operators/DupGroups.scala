@@ -81,28 +81,26 @@ object DupGroups {
     // take the distributed path below.
     val aType = pairs.schema(aCol).dataType
     val bType = pairs.schema(bCol).dataType
-    val integral = Set[org.apache.spark.sql.types.DataType](
-      org.apache.spark.sql.types.LongType, org.apache.spark.sql.types.IntegerType)
-    if (integral(aType) && integral(bType) && driverResolveMaxEdges >= 0) {
-      val raw = pairs
-        .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-        .where(col("src") =!= col("dst"))
-        .limit(driverResolveMaxEdges + 1).collect()
-      if (raw.length <= driverResolveMaxEdges) {
-        val spark = pairs.sparkSession
-        val labels = unionFindLabels(raw.map(r => (r.getLong(0), r.getLong(1))))
-        import spark.implicits._
-        val out = labels.toSeq.toDF("id", "group_id")
-        // both-int inputs keep int labels (the union in the distributed
-        // path coerces mixed int/long to long; mirror that here)
-        return if (aType == org.apache.spark.sql.types.IntegerType &&
-            bType == org.apache.spark.sql.types.IntegerType)
-          out.select(col("id").cast("int").as("id"),
-            col("group_id").cast("int").as("group_id"))
-        else out
+    if (integralId(aType) && integralId(bType)) {
+      DriverCollect.collectAtMost(pairs
+          .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
+          .where(col("src") =!= col("dst")), driverResolveMaxEdges) match {
+        case Some(edges) =>
+          val spark = pairs.sparkSession
+          val labels = unionFindLabels(edges.map(r => (r.getLong(0), r.getLong(1))))
+          import spark.implicits._
+          val out = labels.toSeq.toDF("id", "group_id")
+          // both-int inputs keep int labels (the union in the distributed
+          // path coerces mixed int/long to long; mirror that here)
+          return if (aType == org.apache.spark.sql.types.IntegerType &&
+              bType == org.apache.spark.sql.types.IntegerType)
+            out.select(col("id").cast("int").as("id"),
+              col("group_id").cast("int").as("group_id"))
+          else out
+        case None =>
+          // over the driver bound: fall through to the distributed rounds
+          // (the one oversized collect is the documented price of probing)
       }
-      // over the driver bound: fall through to the distributed rounds
-      // (the one oversized collect is the documented price of probing)
     }
 
     // undirected adjacency: both orientations, self-loops dropped,
@@ -177,9 +175,14 @@ object DupGroups {
     labels.select(col("id"), col("comp").as("group_id"))
   }
 
+  /** Id types the driver-side paths resolve (as longs); other key
+    * types take the distributed rounds. */
+  private[operators] def integralId(t: org.apache.spark.sql.types.DataType): Boolean =
+    t == org.apache.spark.sql.types.LongType || t == org.apache.spark.sql.types.IntegerType
+
   /** Path-compressing union-find, labels normalized to the component
     * minimum id — the same contract as the distributed path. */
-  private def unionFindLabels(edges: Array[(Long, Long)]): Map[Long, Long] = {
+  private[operators] def unionFindLabels(edges: Array[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.LongMap.empty[Long]
     def find(x: Long): Long = {
       var r = x

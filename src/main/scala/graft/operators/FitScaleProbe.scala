@@ -22,10 +22,12 @@ import org.apache.spark.sql.functions._
  *    corpus, so compute is linear — but the driver-side work (the
  *    collect, the model) is CONSTANT, which at any fixed parallelism
  *    shows up as strongly sublinear wall growth. A ratio NEAR the
- *    data ratio would mean per-row driver work crept in. For the
- *    classifier this holds above [[QualityClassifier.DriverFitMaxRows]]
- *    labeled rows; a smaller sample is collected and fit on the
- *    driver, so only points above the gate measure the distributed fit.
+ *    data ratio would mean per-row driver work crept in. This holds
+ *    above each fit's driver-fit gate
+ *    ([[AnnSearch.DriverFitMaxRows]] vectors,
+ *    [[QualityClassifier.DriverFitMaxRows]] labeled rows); a smaller
+ *    input is collected and fit on the driver, so only points above
+ *    the gate (the defaults are) measure the distributed fit.
  *
  * Inputs are synthesized deterministically from ids (no RNG, no
  * files): embeddings as dim-`dim` float arrays of id-keyed sines;
@@ -106,12 +108,12 @@ object FitScaleProbe {
     // running small-first WITHOUT a warm-up inflates the denominator
     // with JIT/codegen start-up cost, which UNDERSTATES the growth
     // ratio — the opposite of conservative for the per-row-driver-work
-    // regression this probe exists to surface)
-    kmeansPoint(math.max(small / 50, 100))
+    // regression this probe exists to surface). Each warm-up must
+    // clear its fit's driver-fit gate, or the first timed distributed
+    // fit pays the distributed path's first-use cost.
+    kmeansPoint(math.max(small / 50, AnnSearch.DriverFitMaxRows + 1L))
     val ks = kmeansPoint(small)
     val kb = kmeansPoint(big)
-    // the classifier warm-up must clear the driver-fit gate, or the
-    // first timed distributed fit pays MLlib's first-use cost
     clfPoint(math.max(small / 50, QualityClassifier.DriverFitMaxRows + 1L))
     val cs = clfPoint(small)
     val cb = clfPoint(big)

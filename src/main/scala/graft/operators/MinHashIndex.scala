@@ -153,12 +153,12 @@ object MinHashIndex {
     // the checkpoint on failure: a long-lived session probing
     // oversized batches must not accumulate orphaned blocks.
     val buckets = try {
-      val bs = b.select(explode(col("_bh")).as("h")).distinct()
-        .limit(maxBatchBuckets + 1).collect().map(_.getLong(0))
-      require(bs.length <= maxBatchBuckets,
+      val bs = DriverCollect.collectAtMost(
+        b.select(explode(col("_bh")).as("h")).distinct(), maxBatchBuckets)
+      require(bs.isDefined,
         s"batch bucket set exceeds maxBatchBuckets=$maxBatchBuckets — this path is for " +
           "incremental slices; dedup corpus-vs-corpus with Dedup.minhashCandidates")
-      bs
+      bs.get.map(_.getLong(0))
     } catch {
       case e: Throwable => CheckpointDiscipline.freeLocalCheckpoint(b); throw e
     }

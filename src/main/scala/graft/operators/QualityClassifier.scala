@@ -101,10 +101,8 @@ object QualityClassifier {
       // one limit-guarded collect decides the path and fetches the
       // sample together (the DupGroups fast-path shape); an oversized
       // sample costs this one bounded collect before the distributed fit
-      val sample =
-        if (driverFitMaxRows <= 0) None
-        else Some(featured.select("_label", "_features").limit(driverFitMaxRows + 1).collect())
-          .filter(_.length <= driverFitMaxRows)
+      val sample = DriverCollect.collectAtMost(featured.select("_label", "_features"),
+        driverFitMaxRows)
       val (coefs, intercept) = sample match {
         case Some(rows) =>
           driverFit(rows.map(r => (r.getDouble(0), r.getAs[Vector](1).toSparse)),

@@ -410,14 +410,15 @@ object Sampling {
     // rejoin can never match them), so counting them would over-weight
     // null-heavy keys and leave their stolen quota silently unfilled,
     // and a size the key can't deliver would mis-cap / mis-replicate.
-    val counts = df.where(col(keyCol).isNotNull && col(idCol).isNotNull)
-      .groupBy(col(keyCol).cast("string").as("_ts_k"))
-      .agg(count(lit(1)).as("_ts_n"))
-      .limit(maxDriverKeys + 1)
-      .collect().map(r => r.getString(0) -> r.getLong(1))
-    require(counts.length <= maxDriverKeys,
+    val collected = DriverCollect.collectAtMost(
+      df.where(col(keyCol).isNotNull && col(idCol).isNotNull)
+        .groupBy(col(keyCol).cast("string").as("_ts_k"))
+        .agg(count(lit(1)).as("_ts_n")),
+      maxDriverKeys)
+    require(collected.isDefined,
       s"$op: over $maxDriverKeys distinct keys — temperature " +
         "mixing apportions per SOURCE; a key this fine-grained is the wrong column")
+    val counts = collected.get.map(r => r.getString(0) -> r.getLong(1))
     val sorted = counts.sortBy(_._1)
     val wts = sorted.map { case (k, n) =>
       (k, n, if (alpha == 0.5) math.sqrt(n.toDouble) else math.pow(n.toDouble, alpha))

@@ -32,6 +32,23 @@ import org.apache.spark.storage.StorageLevel
  * [[dedup]]) — under mass duplication the drop list is O(corpus), and
  * an unconditional broadcast would be a driver-OOM job-killer, not a
  * slowdown.
+ *
+ * Small inputs skip all of that: at or below [[DriverFitMaxRows]]
+ * non-null embeddings with integral ids, [[dropList]] and
+ * [[fitAndDropList]] fetch the rows in ONE limit-guarded collect
+ * (ids, vectors and the Spark-computed hashes the distributed plan
+ * groups and seeds by) and compute the same fit and drop list on the
+ * driver, through the same k-means ([[AnnSearch.kmeansLocal]]), the
+ * same nearest-centroid and cosine kernels and the same union-find
+ * [[DupGroups]] uses. The distributed path costs dozens of small Spark
+ * jobs (k-means rounds, the identity and pair joins, the component
+ * collect, the checkpoint) whose latency, not the data, sets its wall
+ * time at that size. The driver
+ * path falls back to the distributed drop list when a cluster exceeds
+ * `maxClusterSize` (the sub-bucket split stays distributed).
+ *
+ * Embeddings that are null are never compared, grouped or dropped:
+ * docs without an embedding are kept.
  */
 object SemDeDup {
 
@@ -45,8 +62,7 @@ object SemDeDup {
   def dupPairs(assigned: DataFrame, vecCol: String, idCol: String,
                threshold: Double, maxClusterSize: Int = 20000,
                seed: Long = 42L, dim: Int = -1): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0, s"threshold in (0,1]: $threshold")
-    require(maxClusterSize >= 1, s"maxClusterSize must be >= 1: $maxClusterSize")
+    requirePairParams(threshold, maxClusterSize)
     graft.expr.GraftFunctions.ensure(assigned.sparkSession)
     val d = if (dim > 0) dim else {
       // an upstream filter can legitimately empty the corpus — no
@@ -157,14 +173,47 @@ object SemDeDup {
     dropListGated(embeddings, vecCol, idCol, centroids, threshold,
       maxClusterSize, seed, MaxBroadcastDropIds)
 
-  /** [[dropList]] with the broadcast ceiling as a parameter, so specs
-    * reach both sides of the gate on a small fixture. */
+  /** Non-null embeddings at or below which [[dropList]] and
+    * [[fitAndDropList]] run on the driver. The driver then holds at
+    * most 10k ids and vectors as doubles (1.3 MB at dim 16, 82 MB at
+    * dim 1024). The same gate bounds the within-cluster pair loop,
+    * which costs O(Σ cluster² · dim): at most 5·10⁷ cosines when every
+    * vector lands in one cluster, about 5 million at the k = 8 default
+    * when clusters are balanced. */
+  val DriverFitMaxRows: Int = 10000
+
+  /** [[dropList]] with the broadcast ceiling and the driver-path gate
+    * as parameters, so specs reach every side of both on a small
+    * fixture; a negative `driverFitMaxRows` always runs the
+    * distributed drop list, the reference the driver path must
+    * reproduce. */
   private[operators] def dropListGated(embeddings: DataFrame, vecCol: String,
                                        idCol: String,
                                        centroids: Array[Array[Double]],
                                        threshold: Double, maxClusterSize: Int,
-                                       seed: Long, maxBroadcast: Long): DataFrame = {
+                                       seed: Long, maxBroadcast: Long,
+                                       driverFitMaxRows: Int = DriverFitMaxRows): DataFrame = {
     require(centroids.nonEmpty, "centroids must be non-empty")
+    requirePairParams(threshold, maxClusterSize)
+    val idType = embeddings.schema(idCol).dataType
+    val local =
+      if (!DupGroups.integralId(idType)) None
+      else AnnSearch.collectHashed(embeddings, vecCol, Some(idCol), seed, driverFitMaxRows)
+        .flatMap(localDropIds(_, centroids, threshold, maxClusterSize))
+    local.map(dropFrame(embeddings, idType, _, maxBroadcast)).getOrElse(
+      distributedDropList(embeddings, vecCol, idCol, centroids, threshold,
+        maxClusterSize, seed, maxBroadcast))
+  }
+
+  private def requirePairParams(threshold: Double, maxClusterSize: Int): Unit = {
+    require(threshold > 0.0 && threshold <= 1.0, s"threshold in (0,1]: $threshold")
+    require(maxClusterSize >= 1, s"maxClusterSize must be >= 1: $maxClusterSize")
+  }
+
+  private def distributedDropList(embeddings: DataFrame, vecCol: String, idCol: String,
+                                  centroids: Array[Array[Double]], threshold: Double,
+                                  maxClusterSize: Int, seed: Long,
+                                  maxBroadcast: Long): DataFrame = {
     val dim = centroids(0).length
     // The drop-list DAG reads its two hot intermediates MANY times —
     // (id, hash) feeds the rep groupBy and the copies join; the
@@ -179,11 +228,13 @@ object SemDeDup {
     // keeps only the drop ids). Both are built before either is
     // persisted, so a plan that fails analysis leaves nothing cached;
     // `keyed` is persisted first so the plan cached for `assigned`
-    // reads it.
-    val keyed = embeddings.select(col(idCol).as("_sd_id"), xxhash64(col(vecCol)).as("_k"))
+    // reads it. Null embeddings take no part: xxhash64(null) is the
+    // seed, so they would otherwise form one identity group.
+    val embedded = embeddings.where(col(vecCol).isNotNull)
+    val keyed = embedded.select(col(idCol).as("_sd_id"), xxhash64(col(vecCol)).as("_k"))
     val reps = keyed.groupBy(col("_k")).agg(min(col("_sd_id")).as("_rep"))
     val assigned = Clustering.assign(
-      embeddings.join(reps.select(col("_rep")), col(idCol) === col("_rep"), "left_semi"),
+      embedded.join(reps.select(col("_rep")), col(idCol) === col("_rep"), "left_semi"),
       vecCol, centroids)
     keyed.persist(StorageLevel.MEMORY_AND_DISK)
     assigned.persist(StorageLevel.MEMORY_AND_DISK)
@@ -201,6 +252,88 @@ object SemDeDup {
     } finally { keyed.unpersist(); assigned.unpersist(); () }
   }
 
+  /** The distributed drop list computed on the driver from collected
+    * rows, or None when a cluster exceeds `maxClusterSize`. Mirrors
+    * every rule of [[distributedDropList]]: identity groups by `h`
+    * with the min id as representative and every other member an
+    * identity copy; each row whose id is a representative id is
+    * assigned (the semi join's rule); within a cluster, rows pair when
+    * their ids ascend and Spark's HALF_UP `round(cosine, 6)` reaches
+    * `threshold`; groups resolve by union-find, and every member row
+    * except the one with the largest dist2 (lowest id on ties) drops.
+    * Rows without an id take part in nothing, as there. */
+  private def localDropIds(rows: Array[AnnSearch.HashedVec], centroids: Array[Array[Double]],
+                           threshold: Double, maxClusterSize: Int): Option[Array[Long]] = {
+    import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
+    val withId = rows.filter(_.id.isDefined)
+    val rep = scala.collection.mutable.LongMap.empty[Long]
+    withId.foreach { r =>
+      val id = r.id.get
+      if (rep.get(r.h).forall(_ > id)) rep(r.h) = id
+    }
+    val copies = withId.collect { case r if r.id.get != rep(r.h) => r.id.get }
+    val repIds = rep.values.toSet
+    final case class Assigned(id: Long, dist2: Double, vec: ArrayData)
+    val clusters = withId.filter(r => repIds(r.id.get)).map { r =>
+      val (d2, c) = graft.expr.NearestCentroid.closest(r.checked, centroids)
+      c -> Assigned(r.id.get, d2, ArrayData.toArrayData(r.vec))
+    }.groupMap(_._1)(_._2).values.toArray
+    if (clusters.exists(_.length > maxClusterSize)) return None
+
+    val edges = Array.newBuilder[(Long, Long)]
+    clusters.foreach { members =>
+      var i = 0
+      while (i < members.length) {
+        val a = members(i)
+        var j = i + 1
+        while (j < members.length) {
+          val b = members(j)
+          if (a.id != b.id &&
+              keepsPair(graft.expr.CosineSimilarity.cosine(a.vec, false, b.vec, false), threshold))
+            edges += (math.min(a.id, b.id) -> math.max(a.id, b.id))
+          j += 1
+        }
+        i += 1
+      }
+    }
+    val group = DupGroups.unionFindLabels(edges.result())
+    // min(struct(-dist2, id)) per group under Spark's ordering (NaN
+    // greatest, -0.0 == 0.0): the farthest member, lowest id on ties
+    def before(a: Assigned, b: Assigned): Int = {
+      val byDist = SQLOrderingUtil.compareDoubles(-a.dist2, -b.dist2)
+      if (byDist != 0) byDist else java.lang.Long.compare(a.id, b.id)
+    }
+    val members = clusters.iterator.flatten.filter(m => group.contains(m.id)).toArray
+    val best = members.groupBy(m => group(m.id)).map { case (g, ms) =>
+      g -> ms.reduce((a, b) => if (before(a, b) <= 0) a else b)
+    }
+    val semantic = members.collect { case m if before(m, best(group(m.id))) != 0 => m.id }
+    Some((copies ++ semantic).distinct)
+  }
+
+  /** `round(cosine, 6) >= threshold` as Spark evaluates it: HALF_UP
+    * rounding of the double's decimal form, NaN above every double.
+    * Rounding moves a value by at most 5e-7, so only cosines near the
+    * threshold need the exact decimal rounding. */
+  private def keepsPair(cosine: Double, threshold: Double): Boolean =
+    if (cosine.isNaN) true
+    else if (math.abs(cosine - threshold) > 1e-5) cosine > threshold
+    else java.math.BigDecimal.valueOf(cosine)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue() >= threshold
+
+  /** The drop ids as a local relation typed like the id column, hinted
+    * `broadcast` iff its size fits `maxBroadcast`. */
+  private def dropFrame(embeddings: DataFrame, idType: org.apache.spark.sql.types.DataType,
+                        ids: Array[Long], maxBroadcast: Long): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    val rows = ids.toSeq.map(i => if (idType == IntegerType) Row(i.toInt) else Row(i))
+    val drop = embeddings.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*),
+      StructType(Seq(StructField("_drop_id", idType, nullable = false))))
+    if (ids.length <= maxBroadcast) broadcast(drop) else drop
+  }
+
   /** [[dedup]] composed over [[fitAndDropList]]: fit + prune in one
     * call. Identical results to
     * `dedup(emb, …, Clustering.fit(emb, …), …)`. */
@@ -214,12 +347,39 @@ object SemDeDup {
       col(idCol) === col("_drop_id"), "left_anti")
 
   /** [[Clustering.fit]] followed by [[dropList]]: the fitted centroids
-    * and the drop list they produce. */
+    * and the drop list they produce. Below [[DriverFitMaxRows]] the fit
+    * and the drop list share one collect. */
   def fitAndDropList(embeddings: DataFrame, vecCol: String, idCol: String,
                      k: Int, iters: Int = 5, fitSeed: Long = 42L,
                      threshold: Double = 0.95, maxClusterSize: Int = 20000,
-                     seed: Long = 42L): (Array[Array[Double]], DataFrame) = {
-    val cents = Clustering.fit(embeddings, vecCol, k, iters, fitSeed)
-    (cents, dropList(embeddings, vecCol, idCol, cents, threshold, maxClusterSize, seed))
+                     seed: Long = 42L): (Array[Array[Double]], DataFrame) =
+    fitAndDropListGated(embeddings, vecCol, idCol, k, iters, fitSeed, threshold,
+      maxClusterSize, seed, DriverFitMaxRows)
+
+  /** [[fitAndDropList]] with the driver-path gate as an argument; a
+    * negative gate runs the distributed fit and drop list. */
+  private[operators] def fitAndDropListGated(embeddings: DataFrame, vecCol: String,
+                                             idCol: String, k: Int, iters: Int,
+                                             fitSeed: Long, threshold: Double,
+                                             maxClusterSize: Int, seed: Long,
+                                             driverFitMaxRows: Int)
+      : (Array[Array[Double]], DataFrame) = {
+    requirePairParams(threshold, maxClusterSize)
+    val idType = embeddings.schema(idCol).dataType
+    val integral = DupGroups.integralId(idType)
+    val rows =
+      if (!integral) None
+      else AnnSearch.collectHashed(embeddings, vecCol, Some(idCol), fitSeed, driverFitMaxRows)
+    val cents = rows match {
+      case Some(r) => AnnSearch.kmeansLocal(r, k, iters)
+      // an integral-id input that missed the gate would miss the fit's
+      // own gate too (same rows): skip that second oversized collect
+      case None => AnnSearch.kmeansGated(embeddings, vecCol, k, iters, fitSeed,
+        if (integral) -1 else driverFitMaxRows)
+    }
+    val local = rows.flatMap(localDropIds(_, cents, threshold, maxClusterSize))
+    (cents, local.map(dropFrame(embeddings, idType, _, MaxBroadcastDropIds)).getOrElse(
+      dropListGated(embeddings, vecCol, idCol, cents, threshold, maxClusterSize, seed,
+        MaxBroadcastDropIds, driverFitMaxRows = -1)))
   }
 }

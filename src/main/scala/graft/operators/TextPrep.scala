@@ -270,15 +270,16 @@ object TextPrep {
     // primitive collect: the cap is 5M hashes — as Rows that is 5M boxed
     // objects churning the driver heap; the Long encoder materializes a
     // primitive Array[Long] directly
-    val capped = freqDf.limit(maxDriverSet + 1)
-      .as(org.apache.spark.sql.Encoders.scalaLong).collect()
-    if (capped.length > maxDriverSet)
-      return rebuildByJoin(docs, idCol, textCol, segmenter, joiner, freqDf)
-    val keep: Column => Column =
-      if (capped.isEmpty) _ => lit(true)
-      else s => !xxhash64(s).isInCollection(capped)
-    docs.withColumn("text_clean",
-      array_join(filter(segmenter(col(textCol)), keep), joiner))
+    DriverCollect.collectAtMost(
+        freqDf.as(org.apache.spark.sql.Encoders.scalaLong), maxDriverSet) match {
+      case None => rebuildByJoin(docs, idCol, textCol, segmenter, joiner, freqDf)
+      case Some(capped) =>
+        val keep: Column => Column =
+          if (capped.isEmpty) _ => lit(true)
+          else s => !xxhash64(s).isInCollection(capped)
+        docs.withColumn("text_clean",
+          array_join(filter(segmenter(col(textCol)), keep), joiner))
+    }
   }
 
   // ── cross-corpus substring (token-window) dedup ───────────────────

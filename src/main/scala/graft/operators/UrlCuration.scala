@@ -212,11 +212,40 @@ object UrlCuration {
    * broadcast shapes stop being the minority path and the operator
    * falls back to the classic one-window formulation (one full shuffle
    * on domain), which is correct at any hot-set size.
+   *
+   * Step 1 is the only eager query; [[hotDomains]] and [[capToHotSet]]
+   * split it from the lazy cap, so a caller that builds the capped
+   * frame twice over the same rows runs it once.
    */
   def capPerDomain(df: DataFrame, urlCol: String, idCol: String,
                    maxPerDomain: Int,
                    orderKey: Option[Column] = None,
-                   maxHotDomains: Int = 100000): DataFrame = {
+                   maxHotDomains: Int = 100000): DataFrame =
+    capToHotSet(df, urlCol, idCol, maxPerDomain,
+      hotDomains(df, urlCol, maxPerDomain, maxHotDomains), orderKey)
+
+  /** The registered domains of `df` holding more than `maxPerDomain`
+    * rows — [[capPerDomain]]'s one eager query — or None when there
+    * are more than `maxHotDomains` of them (the window fallback). */
+  def hotDomains(df: DataFrame, urlCol: String, maxPerDomain: Int,
+                 maxHotDomains: Int = 100000): Option[Array[String]] = {
+    require(maxPerDomain > 0, s"capPerDomain: cap must be positive, got $maxPerDomain")
+    // null-host rows have no domain to cap; they pass through (the
+    // blocklist's dropUnparseable is the knob that drops them)
+    DriverCollect.collectAtMost(
+      df.select(registeredDomain(urlHost(col(urlCol))).as("_dom"))
+        .where(col("_dom").isNotNull)
+        .groupBy("_dom").agg(count(lit(1)).as("_n"))
+        .where(col("_n") > maxPerDomain)
+        .select("_dom"),
+      maxHotDomains).map(_.map(_.getString(0)))
+  }
+
+  /** [[capPerDomain]] against a precomputed [[hotDomains]] result for
+    * the same rows: builds the cap with no Spark job. */
+  def capToHotSet(df: DataFrame, urlCol: String, idCol: String, maxPerDomain: Int,
+                  hot: Option[Array[String]],
+                  orderKey: Option[Column] = None): DataFrame = {
     require(maxPerDomain > 0, s"capPerDomain: cap must be positive, got $maxPerDomain")
     graft.expr.GraftFunctions.ensure(df.sparkSession)  // top_k_rows
     val dom = registeredDomain(urlHost(col(urlCol)))
@@ -238,49 +267,39 @@ object UrlCuration {
     })
 
     val withDom = df.withColumn("_dom", dom)
-    // null-host rows have no domain to cap; they pass through (the
-    // blocklist's dropUnparseable is the knob that drops them)
-    val hot = withDom.where(col("_dom").isNotNull)
-      .groupBy("_dom").agg(count(lit(1)).as("_n"))
-      .where(col("_n") > maxPerDomain)
-      .select("_dom")
-      .limit(maxHotDomains + 1)
-      .collect().map(_.getString(0))
-
-    if (hot.isEmpty) withDom.drop("_dom")
-    else if (hot.length > maxHotDomains ||
-      hot.length.toLong * maxPerDomain > 2000000L) {
-      // the kept-id set (hot domains × cap) must stay broadcastable;
-      // past ~2M ids the window formulation is the cheaper plan
-      // fallback: one window over every domain — full shuffle, no
-      // driver state; deterministic rank on (key, id). Null-domain
-      // rows are kept UNCONDITIONALLY, so they bypass the window
-      // entirely — partitionBy would otherwise funnel every malformed
-      // URL of a raw crawl into ONE reducer just to rank rows the
-      // filter keeps anyway.
-      val w = Window.partitionBy("_dom").orderBy(key.asc, col(idCol).asc)
-      val nullDom = withDom.where(col("_dom").isNull).drop("_dom")
-      val capped = withDom.where(col("_dom").isNotNull)
-        .withColumn("_rk", row_number().over(w))
-        .where(col("_rk") <= maxPerDomain)
-        .drop("_dom", "_rk")
-      nullDom.unionByName(capped)
-    } else {
-      val hotSeq = hot.toSeq
-      val isHot = col("_dom").isInCollection(hotSeq)
-      val cold = withDom.where(col("_dom").isNull || !isHot)
-      // per-domain bounded heap: score = -key so the heap's
-      // "highest score first" keeps the SMALLEST keys; ties break on
-      // the next struct field (id) ascending — total order
-      val keptIds = withDom.where(isHot)
-        .select(col("_dom"), struct((-key).as("score"), col(idCol)).as("_scored"))
-        .groupBy("_dom")
-        .agg(graft.expr.GraftFunctions.topKRows(col("_scored"), maxPerDomain).as("_tk"))
-        .select(explode(col("_tk")).as("_e"))
-        .select(col("_e").getField(idCol).as("_kid"))
-      val keptHot = withDom.where(isHot)
-        .join(broadcast(keptIds), col(idCol) === col("_kid"), "left_semi")
-      cold.unionByName(keptHot).drop("_dom")
+    hot match {
+      case Some(h) if h.isEmpty => withDom.drop("_dom")
+      case Some(h) if h.length.toLong * maxPerDomain <= 2000000L =>
+        val isHot = col("_dom").isInCollection(h.toSeq)
+        val cold = withDom.where(col("_dom").isNull || !isHot)
+        // per-domain bounded heap: score = -key so the heap's
+        // "highest score first" keeps the SMALLEST keys; ties break on
+        // the next struct field (id) ascending — total order
+        val keptIds = withDom.where(isHot)
+          .select(col("_dom"), struct((-key).as("score"), col(idCol)).as("_scored"))
+          .groupBy("_dom")
+          .agg(graft.expr.GraftFunctions.topKRows(col("_scored"), maxPerDomain).as("_tk"))
+          .select(explode(col("_tk")).as("_e"))
+          .select(col("_e").getField(idCol).as("_kid"))
+        val keptHot = withDom.where(isHot)
+          .join(broadcast(keptIds), col(idCol) === col("_kid"), "left_semi")
+        cold.unionByName(keptHot).drop("_dom")
+      case _ =>
+        // too many hot domains, or a kept-id set (hot domains × cap)
+        // past ~2M ids, which would no longer broadcast: one window
+        // over every domain — full shuffle, no driver state;
+        // deterministic rank on (key, id). Null-domain rows are kept
+        // UNCONDITIONALLY, so they bypass the window entirely —
+        // partitionBy would otherwise funnel every malformed URL of a
+        // raw crawl into ONE reducer just to rank rows the filter keeps
+        // anyway.
+        val w = Window.partitionBy("_dom").orderBy(key.asc, col(idCol).asc)
+        val nullDom = withDom.where(col("_dom").isNull).drop("_dom")
+        val capped = withDom.where(col("_dom").isNotNull)
+          .withColumn("_rk", row_number().over(w))
+          .where(col("_rk") <= maxPerDomain)
+          .drop("_dom", "_rk")
+        nullDom.unionByName(capped)
     }
   }
 }

@@ -143,19 +143,22 @@ object CurationTransformer {
 
     // URL tier first: a domain prune reads zero text bytes, so it runs
     // before anything that touches the (much wider) text column
-    def urlTier(m: Mark): DataFrame = options.get("url.column") match {
-      case None => read
-      case Some(urlCol) =>
-        val blocked = options.get("url.blocklist")
-          .map(_.split(",").map(_.trim.toLowerCase).filter(_.nonEmpty).toSet)
-          .getOrElse(Set.empty[String])
-        val unblocked = graft.operators.UrlCuration.filterBlockedDomains(
-          m("dropped_url_blocklist", read), urlCol, blocked)
-        options.get("url.max.per.domain") match {
-          case None => unblocked
-          case Some(cap) => graft.operators.UrlCuration.capPerDomain(
-            m("dropped_url_domain_cap", unblocked), urlCol, idCol, cap.toInt)
-        }
+    val urlCol = options.get("url.column")
+    val domainCap = options.get("url.max.per.domain").map(_.toInt)
+    val blocked = options.get("url.blocklist")
+      .map(_.split(",").map(_.trim.toLowerCase).filter(_.nonEmpty).toSet)
+      .getOrElse(Set.empty[String])
+    def unblocked(m: Mark): DataFrame = graft.operators.UrlCuration.filterBlockedDomains(
+      m("dropped_url_blocklist", read), urlCol.get, blocked)
+    // the tier is built twice (unmarked as `docs`, marked as the main
+    // chain); the domain cap's one eager query runs once for both
+    lazy val hotDomains =
+      graft.operators.UrlCuration.hotDomains(unblocked((_, df) => df), urlCol.get, domainCap.get)
+    def urlTier(m: Mark): DataFrame = (urlCol, domainCap) match {
+      case (None, _) => read
+      case (Some(_), None) => unblocked(m)
+      case (Some(u), Some(cap)) => graft.operators.UrlCuration.capToHotSet(
+        m("dropped_url_domain_cap", unblocked(m)), u, idCol, cap, hotDomains)
     }
     val docs = urlTier((_, df) => df)
     // ── r20 overlap (guide §2.6 "overlap independent jobs") ─────────
@@ -282,7 +285,8 @@ object CurationTransformer {
       .withColumn("n_tokens", TextFunctions.tokenCountWs(col(textCol)))
       .withColumn("fingerprint", TextFunctions.fingerprint(col(textCol)))
 
-    // perplexity tier: bounded fit (one token-count aggregation +
+    // perplexity tier: bounded fit (LmScore.fitUnigram: a driver-side
+    // count up to its row gate, else one token-count aggregation +
     // capped vocab) on the reference, row-local native scoring (no
     // shuffle); tokenless docs score null and pass the cut. The fit
     // input default is the RAW read, not the curated frame: a trusted

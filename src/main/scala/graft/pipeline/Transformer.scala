@@ -230,17 +230,32 @@ final class ProcessTransformer(command: String, stagingDir: String,
 /**
  * SQL transformer: runs a Spark SQL statement with metastore tables
  * registered as temp views and `@infoDate` substituted.
+ *
+ * Temp views are session-global and named after the input tables, so
+ * two tasks of one job running concurrently (date-parallel backfill)
+ * would resolve each other's date slice. Registering the views and
+ * analyzing the statement therefore happen under one lock, and the
+ * views are dropped before it is released: `spark.sql` analyzes
+ * eagerly, so the returned frame already holds the resolved plans.
  */
 final class SqlTransformer(sql: String, inputTables: Seq[String]) extends Transformer {
   override def run(ms: MetastoreReader, infoDate: LocalDate,
                    options: Map[String, String]): DataFrame = {
-    var spark: org.apache.spark.sql.SparkSession = null
-    inputTables.foreach { t =>
-      val df = ms.getTable(t, Some(infoDate), Some(infoDate))
-      spark = df.sparkSession
-      df.createOrReplaceTempView(t)
+    require(inputTables.nonEmpty, "SqlTransformer needs at least one input table")
+    val inputs = inputTables.map(t => t -> ms.getTable(t, Some(infoDate), Some(infoDate)))
+    val spark = inputs.head._2.sparkSession
+    SqlTransformer.synchronized {
+      try {
+        inputs.foreach { case (t, df) => df.createOrReplaceTempView(t) }
+        spark.sql(sql.replace("@infoDate", s"DATE'$infoDate'"))
+      } finally {
+        // the session catalog's drop: `spark.catalog.dropTempView` also
+        // uncaches the view's plan, which may be a metastore table's
+        // cached frame
+        inputTables.foreach(spark.sessionState.catalog.dropTempView)
+      }
     }
-    require(spark != null, "SqlTransformer needs at least one input table")
-    spark.sql(sql.replace("@infoDate", s"DATE'$infoDate'"))
   }
 }
+
+object SqlTransformer

@@ -80,4 +80,44 @@ class ClusteringSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     assert(EmbedDedup.nearDupPairs(allNull, "embedding", "vec_id").count() == 0)
   }
+
+  // ── driver-side fit vs the distributed reference ──────────────────
+
+  private def close(a: Array[Array[Double]], b: Array[Array[Double]]): Boolean =
+    a.length == b.length && a.zip(b).forall { case (x, y) =>
+      x.length == y.length && x.zip(y).forall { case (u, v) => math.abs(u - v) <= 1e-9 }
+    }
+
+  test("driver k-means equals the distributed fit within 1e-9") {
+    val rnd = new scala.util.Random(5)
+    val doubles = (0 until 60).map(i => (i.toLong,
+      if (i % 20 == 19) null else Array.fill(8)(rnd.nextDouble()))).toDF("id", "embedding")
+    Seq((embeddings, 4, 3), (embeddings, 8, 2), (doubles, 3, 2), (embeddings, 4, 0)).foreach {
+      case (e, k, iters) =>
+        val driver = AnnSearch.kmeansGated(e, "embedding", k, iters, 42L, AnnSearch.DriverFitMaxRows)
+        val reference = AnnSearch.kmeansGated(e, "embedding", k, iters, 42L, -1)
+        assert(driver.length == k && close(driver, reference), s"k=$k iters=$iters")
+    }
+  }
+
+  test("driver k-means: one collect, nothing persisted, far fewer jobs than the reference") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val driverJobs = jobsOf(AnnSearch.kmeansCentroids(embeddings, "embedding", 8, 3))._2.size
+    val referenceJobs = jobsOf(AnnSearch.kmeansGated(embeddings, "embedding", 8, 3, 42L, -1))._2.size
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == before,
+      "neither fit may leave a persisted RDD")
+    assert(driverJobs <= 2 && referenceJobs > driverJobs,
+      s"driver fit $driverJobs jobs, distributed fit $referenceJobs")
+  }
+
+  test("a vector with a null element fails both fits") {
+    val bad = Seq[(Long, Seq[Option[Float]])](1L -> Seq(Some(1f), Some(0f)),
+      2L -> Seq(Some(0f), None), 3L -> Seq(Some(0.5f), Some(0.5f))).toDF("id", "embedding")
+    // the distributed fit fails in nearest_centroid, or earlier when the
+    // vector is drawn as a seed; the driver fit names the element
+    intercept[Exception](AnnSearch.kmeansGated(bad, "embedding", 2, 1, 42L, -1))
+    val ex = intercept[IllegalArgumentException](
+      AnnSearch.kmeansGated(bad, "embedding", 2, 1, 42L, AnnSearch.DriverFitMaxRows))
+    assert(ex.getMessage.contains("null element at 1"), ex)
+  }
 }

@@ -215,4 +215,49 @@ class LmScoreSpec extends SparkSpec {
     assert(math.abs(lm.logProbs("c") - math.log(2.0 / 9)) < 1e-12)
     assert(math.abs(lm.oovLogProb - math.log(1.0 / 9)) < 1e-12)
   }
+
+  // ── driver-side fit vs the distributed reference ──────────────────
+
+  private def bothFits(ref: org.apache.spark.sql.DataFrame, vocabSize: Int = 65536) =
+    (LmScore.fitUnigramGated(ref, "text", vocabSize, LmScore.DriverFitMaxRows),
+      LmScore.fitUnigramGated(ref, "text", vocabSize, -1))
+
+  test("driver and distributed unigram fits give identical models, ties at the cap included") {
+    val real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    // "b", "c", U+FF41 and U+1F600 tie at count 2 behind "a". The
+    // (count desc, token asc) cap keeps "b" at 2 and U+FF41 at 4: it
+    // sorts before U+1F600 in Spark's UTF-8 byte order but after it in
+    // Java's UTF-16 order.
+    val ties = Seq("a a b c d", "a b c", null, "  ", "\uff41 \ud83d\ude00 \uff41 \ud83d\ude00 z")
+      .toDF("text")
+    Seq((real, 65536), (real, 5), (ties, 2), (ties, 3), (ties, 4), (ties, 100)).foreach {
+      case (ref, cap) =>
+        val (driver, reference) = bothFits(ref, cap)
+        assert(driver == reference, s"cap $cap: driver ${driver.logProbs.keys} vs " +
+          s"reference ${reference.logProbs.keys}")
+    }
+    assert(bothFits(ties, 2)._1.logProbs.keySet == Set("a", "b"))
+    assert(bothFits(ties, 4)._1.logProbs.keySet == Set("a", "b", "c", "\uff41"))
+    // a corpus of no tokens fails on both paths
+    val blank = Seq("  ", "").toDF("text")
+    Seq(LmScore.DriverFitMaxRows, -1).foreach { gate =>
+      intercept[IllegalArgumentException](LmScore.fitUnigramGated(blank, "text", 10, gate))
+    }
+  }
+
+  test("driver unigram fit: fewer jobs than the distributed fit, nothing persisted") {
+    val docs = spark.range(2000).select(concat_ws(" ",
+      transform(sequence(lit(0), lit(19)),
+        i => concat(lit("w"), pmod(xxhash64(col("id"), i), lit(500L)).cast("string"))))
+      .as("text"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val (driver, driverJobs) = jobsOf(LmScore.fitUnigram(docs, "text"))
+    val (reference, referenceJobs) =
+      jobsOf(LmScore.fitUnigramGated(docs, "text", 65536, -1))
+    assert(driver == reference)
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == before,
+      "neither fit may leave a persisted RDD")
+    assert(driverJobs.size < referenceJobs.size,
+      s"driver fit ${driverJobs.size} jobs, distributed fit ${referenceJobs.size}")
+  }
 }

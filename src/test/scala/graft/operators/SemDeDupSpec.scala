@@ -214,4 +214,134 @@ class SemDeDupSpec extends SparkSpec {
     val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
     assert(leaked.isEmpty, s"empty centroids leaked persisted RDDs: $leaked")
   }
+
+  // ── driver path vs the distributed reference ──────────────────────
+
+  private def dropSet(df: org.apache.spark.sql.DataFrame): Set[Any] =
+    df.collect().map(_.get(0)).toSet
+
+  private def isLocal(drop: org.apache.spark.sql.DataFrame): Boolean =
+    drop.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l
+    }.isDefined
+
+  private def bothPaths(e: org.apache.spark.sql.DataFrame, idCol: String,
+                        cents: Array[Array[Double]], threshold: Double,
+                        maxClusterSize: Int = 20000) = {
+    def run(gate: Int) = SemDeDup.dropListGated(e, "embedding", idCol, cents, threshold,
+      maxClusterSize, seed = 42L, maxBroadcast = SemDeDup.MaxBroadcastDropIds,
+      driverFitMaxRows = gate)
+    (run(SemDeDup.DriverFitMaxRows), run(-1))
+  }
+
+  /** The curation benchmark's embedding shape: `n` random vectors in
+    * [-1, 1)^dim over 4 partitions; past the first ten, 10% copy an
+    * earlier vector, half exactly and half with ±5e-4 noise. */
+  private def twinCorpus(seed: Long, n: Int = 1000, dim: Int = 16) = {
+    val r = new scala.util.Random(seed)
+    val vecs = new Array[Array[Double]](n)
+    (0 until n).foreach { i =>
+      vecs(i) =
+        if (i > 10 && r.nextDouble() < 0.1) {
+          val src = vecs(r.nextInt(i))
+          if (r.nextBoolean()) src.clone() else src.map(_ + (r.nextDouble() - 0.5) * 1e-3)
+        } else Array.fill(dim)(r.nextDouble() * 2 - 1)
+    }
+    spark.sparkContext.parallelize(vecs.indices.map(i => (i.toLong, vecs(i))), 4)
+      .toDF("vec_id", "embedding")
+  }
+
+  test("null embeddings are kept: never an identity group, on either path") {
+    val e = Seq[(Long, Array[Float])](
+      1L -> Array(1f, 0f, 0f, 0f), 2L -> Array(1f, 0f, 0f, 0f),
+      10L -> null, 11L -> null, 12L -> null).toDF("vec_id", "embedding")
+    val (driver, reference) = bothPaths(e, "vec_id", centroids, threshold = 0.99)
+    assert(dropSet(driver) == Set(2L), s"driver path dropped ${dropSet(driver)}")
+    assert(dropSet(reference) == Set(2L), s"distributed path dropped ${dropSet(reference)}")
+    assert(dropSet(SemDeDup.dropList(e, "embedding", "vec_id", centroids)) == Set(2L))
+  }
+
+  test("driver path: identical drop sets to the distributed reference on the fixtures") {
+    val fixtures = Seq(
+      (emb(1L -> Array(1f, 0f, 0f, 0f), 2L -> Array(2f, 0f, 0f, 0f),
+        3L -> Array(3f, 0f, 0f, 0f), 4L -> Array(0.8f, 0.1f, 0.6f, 0f),
+        5L -> Array(0f, 1f, 0f, 0f)), 0.99),
+      (emb(1L -> Array(0.71f, 0.70f, 0f, 0f), 2L -> Array(0.70f, 0.71f, 0f, 0f),
+        3L -> Array(1f, 0f, 0f, 0f)), 0.9),
+      (emb(1L -> Array(1f, 0f, 0f, 0f), 2L -> Array(1f, 1f, 0f, 0f)), 0.5),
+      (emb((1L to 40L).map(i => i -> Array(1f, 0f, 0f, 0f)): _*), 0.999),
+      (emb(((1L to 5L).map(i => i -> Array(1f, 0f, 0f, 0f)) ++
+        (6L to 10L).map(i => i -> Array(2f, 0f, 0f, 0f))): _*), 0.99),
+      // int ids keep their type through the local drop relation
+      (Seq(1 -> Array(1f, 0f, 0f, 0f), 2 -> Array(1f, 0f, 0f, 0f), 3 -> Array(0f, 1f, 0f, 0f))
+        .toDF("vec_id", "embedding"), 0.99))
+    fixtures.foreach { case (e, thr) =>
+      val (driver, reference) = bothPaths(e, "vec_id", centroids, thr)
+      assert(isLocal(driver) && !isLocal(reference), "each side must take its own path")
+      assert(driver.schema("_drop_id").dataType == reference.schema("_drop_id").dataType)
+      assert(dropSet(driver) == dropSet(reference), s"threshold $thr")
+    }
+  }
+
+  test("driver path: the curation corpus shape gives identical fits and drop sets at 3 seeds") {
+    Seq(7L, 41L, 3L).foreach { s =>
+      val e = twinCorpus(s)
+      def fit(gate: Int) = SemDeDup.fitAndDropListGated(e, "embedding", "vec_id", k = 8,
+        iters = 3, fitSeed = 42L, threshold = 0.95, maxClusterSize = 20000, seed = 42L,
+        driverFitMaxRows = gate)
+      val (dc, dd) = fit(SemDeDup.DriverFitMaxRows)
+      val (rc, rd) = fit(-1)
+      assert(isLocal(dd) && !isLocal(rd))
+      assert(dc.length == rc.length && dc.zip(rc).forall { case (a, b) =>
+        a.length == b.length && a.zip(b).forall { case (x, y) => math.abs(x - y) <= 1e-9 }
+      }, s"seed $s: centroids differ beyond 1e-9")
+      val drops = dropSet(dd)
+      assert(drops.nonEmpty && drops == dropSet(rd), s"seed $s: drop sets differ")
+    }
+  }
+
+  test("driver path falls back to the distributed drop list: oversized cluster, string ids") {
+    // two distinct representatives in cluster 0 exceed maxClusterSize 1
+    val e = emb(1L -> Array(1f, 0f, 0f, 0f), 2L -> Array(2f, 0f, 0f, 0f),
+      3L -> Array(2f, 0f, 0f, 0f))
+    val (over, overRef) = bothPaths(e, "vec_id", centroids, 0.99, maxClusterSize = 1)
+    assert(!isLocal(over), "an oversized cluster must take the distributed sub-bucket split")
+    assert(dropSet(over) == dropSet(overRef))
+    val str = Seq("a" -> Array(1f, 0f, 0f, 0f), "b" -> Array(1f, 0f, 0f, 0f),
+      "c" -> Array(0f, 1f, 0f, 0f)).toDF("doc", "embedding")
+    val (s, sRef) = bothPaths(str, "doc", centroids, 0.99)
+    assert(!isLocal(s), "string ids must take the distributed path")
+    assert(dropSet(s) == Set("b") && dropSet(sRef) == Set("b"))
+  }
+
+  test("driver path: empty and all-null input match the reference") {
+    val empty = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
+    val allNull = Seq[(Long, Array[Float])](1L -> null, 2L -> null).toDF("vec_id", "embedding")
+    Seq(empty, allNull).foreach { e =>
+      val (driver, reference) = bothPaths(e, "vec_id", centroids, 0.95)
+      assert(isLocal(driver) && dropSet(driver).isEmpty && dropSet(reference).isEmpty)
+      // no vector to seed from: both fits fail the same way
+      Seq(SemDeDup.DriverFitMaxRows, -1).foreach { gate =>
+        intercept[IllegalArgumentException](SemDeDup.fitAndDropListGated(e, "embedding",
+          "vec_id", k = 2, iters = 2, fitSeed = 42L, threshold = 0.95,
+          maxClusterSize = 20000, seed = 42L, driverFitMaxRows = gate))
+      }
+    }
+  }
+
+  test("driver path: fit and drop list in at most 3 jobs, leaving no persisted RDD") {
+    val e = twinCorpus(7L)
+    def run(gate: Int) = jobsOf {
+      SemDeDup.fitAndDropListGated(e, "embedding", "vec_id", k = 8, iters = 3,
+        fitSeed = 42L, threshold = 0.95, maxClusterSize = 20000, seed = 42L,
+        driverFitMaxRows = gate)
+    }._2.size
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val driverJobs = run(SemDeDup.DriverFitMaxRows)
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == before,
+      "the driver path must persist nothing")
+    val referenceJobs = run(-1)
+    assert(driverJobs <= 3, s"driver path launched $driverJobs jobs")
+    assert(referenceJobs >= 20, s"the distributed reference launched only $referenceJobs jobs")
+  }
 }

@@ -315,6 +315,24 @@ class CurationSpec extends SparkSpec {
     assert(!ids.contains(6L), "bullet-swarm doc dies on the line rules")
   }
 
+  test("url tier: the domain cap's hot-set query runs once per curation task") {
+    val prose = "The quick brown fox jumps over the lazy dog near the river bank. " * 8
+    val tails = Seq("one", "two", "three", "four", "five", "six", "seven", "eight", "nine",
+      "ten", "eleven", "twelve")
+    val docs = (1L to 12L).map(i => (i, s"$prose extra tail ${tails(i.toInt - 1)}.",
+      if (i <= 8) s"https://big.net/$i" else s"https://ham.com/$i")).toDF("doc_id", "text", "url")
+    val options = Map("input.table" -> "raw", "url.column" -> "url",
+      "url.max.per.domain" -> "4")
+    // building the curated frame runs only the hot-domain query: the
+    // unmarked (`docs`) and marked builds of the tier share its result
+    val (curated, queries) = queriesOf(
+      CurationTransformer.curate(docs, _ => docs, options, (_, df) => df))
+    assert(queries == 1, s"building the curated frame started $queries SQL executions")
+    val kept = curated.select("doc_id").as[Long].collect().toSet
+    assert(kept.count(_ <= 8) == 4 && (9L to 12L).forall(kept),
+      s"the cap keeps 4 big.net docs and every ham.com doc: $kept")
+  }
+
   test("v2 validation: semdedup.enabled without semdedup.table is NotReady") {
     val r = new CurationTransformer().validate(null, d,
       Map("input.table" -> "raw", "semdedup.enabled" -> "true"))

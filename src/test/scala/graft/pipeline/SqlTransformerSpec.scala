@@ -34,6 +34,39 @@ class SqlTransformerSpec extends SparkSpec {
     assert(out.getAs[java.sql.Date]("for_date").toLocalDate == d)
   }
 
+  test("SqlTransformer under dateParallelism = 4: every day holds its own slice") {
+    val ms = new Metastore(spark)
+    val base = tmpDir("sqlt_par_")
+    ms.register(MetaTable("src_day", s"$base/src_day"))
+    ms.register(MetaTable("dst_day", s"$base/dst_day"))
+    val days = (1 to 8).map(i => LocalDate.parse(f"2024-07-0$i%d"))
+    days.foreach(day => ms.saveTable("src_day", day, Seq(day.toString).toDF("v")))
+    val job = JobDef("copy", "dst_day",
+      new SqlTransformer("SELECT v, @infoDate AS for_date FROM src_day", Seq("src_day")),
+      Seq("src_day"))
+    (1 to 3).foreach { _ =>
+      val results = new Orchestrator(ms).runWith(Seq(job),
+        RunParams.Historical(days.head, days.last, RunMode.ForceRun), dateParallelism = 4)
+      assert(results.forall(_.isInstanceOf[TaskResult.Succeeded]), results)
+      days.foreach { day =>
+        val got = ms.getTable("dst_day", Some(day), Some(day)).select("v").as[String].collect()
+        assert(got.toSeq == Seq(day.toString), s"$day holds ${got.mkString(",")}")
+      }
+    }
+  }
+
+  test("SqlTransformer leaves no temp view named after its inputs") {
+    val ms = new Metastore(spark)
+    val base = tmpDir("sqlt_views_")
+    ms.register(MetaTable("view_src", s"$base/view_src"))
+    ms.saveTable("view_src", d, Seq((1L, 2.0)).toDF("id", "amount"))
+    val out = new SqlTransformer("SELECT id, amount * 2 AS twice FROM view_src",
+      Seq("view_src")).run(ms.readerFor(), d, Map.empty)
+    assert(!spark.catalog.tableExists("view_src"), "the input view must be dropped")
+    assert(out.select("twice").as[Double].collect().toSeq == Seq(4.0),
+      "the returned frame must not need the dropped view")
+  }
+
   test("selfSimilarPairs: end-to-end jaccard threshold over a tiny corpus") {
     val docs = Seq(
       (1L, "alpha beta gamma delta epsilon zeta"),
