@@ -170,9 +170,9 @@ case class NearestCentroid(child: Expression, matrixBytes: Array[Byte])
       x(i) = if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
       i += 1
     }
-    val (bestD, bestI) = NearestCentroid.closest(x, centroids)
+    val c = NearestCentroid.closest(x, centroids)
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](bestD, bestI))
+      Array[Any](NearestCentroid.dist2(x, centroids(c)), c))
   }
 
   override protected def nullSafeEval(input: Any): Any =
@@ -203,30 +203,34 @@ case class NearestCentroid(child: Expression, matrixBytes: Array[Byte])
 
 object NearestCentroid {
 
-  /** The centroid nearest to `x` in squared L2, as (distance, index):
+  /** Index of the centroid nearest to `x` in squared L2 ([[dist2]]):
     * the loop behind the expression and the driver-side k-means and
     * SemDeDup paths, so both decide every assignment identically.
-    * Float inputs are promoted to double before the call; each
-    * distance accumulates sequentially over the elements; a strict
-    * `<` under `Double.compare` keeps the lowest index on ties and
-    * orders NaN greatest, matching Spark's `array_min`. */
-  def closest(x: Array[Double], centroids: Array[Array[Double]]): (Double, Int) = {
-    val d = centroids(0).length
-    checkDim(x.length, d)
+    * Float inputs are promoted to double before the call; a strict `<`
+    * under `Double.compare` keeps the lowest index on ties and orders
+    * NaN greatest, matching Spark's `array_min`. */
+  def closest(x: Array[Double], centroids: Array[Array[Double]]): Int = {
+    checkDim(x.length, centroids(0).length)
     var bestD = 0.0
     var bestI = 0
     var c = 0
     while (c < centroids.length) {
-      val row = centroids(c)
-      var acc = 0.0
-      var j = 0
-      while (j < d) { val t = x(j) - row(j); acc += t * t; j += 1 }
+      val acc = dist2(x, centroids(c))
       if (c == 0 || java.lang.Double.compare(acc, bestD) < 0) {
         bestD = acc; bestI = c
       }
       c += 1
     }
-    (bestD, bestI)
+    bestI
+  }
+
+  /** Squared L2 distance, accumulated sequentially over the elements;
+    * `row` sets the length. */
+  def dist2(x: Array[Double], row: Array[Double]): Double = {
+    var acc = 0.0
+    var j = 0
+    while (j < row.length) { val t = x(j) - row(j); acc += t * t; j += 1 }
+    acc
   }
 
   def checkDim(n: Int, d: Int): Unit =

@@ -185,22 +185,19 @@ object AnnSearch {
    * the only driver-side state (k × dim doubles) — assignments stay
    * distributed; each iteration is one map + one groupBy shuffle.
    *
-   * At or below [[DriverFitMaxRows]] non-null vectors the fit runs on
-   * the driver instead: one limit-guarded collect fetches the vectors
-   * with the same Spark-computed seeding hashes, and [[kmeansLocal]]
-   * runs the same seeding and Lloyd rounds there. At curation sizes
-   * the distributed fit is 2 + iters Spark jobs whose per-job latency,
-   * not the data, sets its wall time.
+   * At or below [[DriverCollect.DriverFitMaxRows]] non-null vectors
+   * the fit runs on the driver instead: one limit-guarded collect
+   * fetches the vectors, their seeding hashes come from Spark's own
+   * hash expressions, and [[kmeansLocal]] runs the same seeding and
+   * Lloyd rounds there.
+   * The driver then holds at most 10k vectors as double arrays (1.3 MB
+   * at dim 16, 82 MB at dim 1024) plus k × dim sums per round. At
+   * curation sizes the distributed fit is 2 + iters Spark jobs whose
+   * per-job latency, not the data, sets its wall time.
    */
   def kmeansCentroids(embeddings: DataFrame, vecCol: String,
                       k: Int, iters: Int = 5, seed: Long = 42L): Array[Array[Double]] =
-    kmeansGated(embeddings, vecCol, k, iters, seed, DriverFitMaxRows)
-
-  /** Non-null vectors at or below which [[kmeansCentroids]] fits on the
-    * driver. The driver then holds at most 10k vectors as double
-    * arrays: 1.3 MB at dim 16, 82 MB at dim 1024, plus k × dim sums
-    * per round. */
-  val DriverFitMaxRows: Int = 10000
+    kmeansGated(embeddings, vecCol, k, iters, seed, DriverCollect.DriverFitMaxRows)
 
   /** [[kmeansCentroids]] with the driver-fit gate as an argument; a
     * negative gate always runs the distributed fit, the reference the
@@ -243,21 +240,37 @@ object AnnSearch {
 
   /** The non-null vectors of `embeddings` as [[HashedVec]]s in one
     * limit-guarded collect, or None above `maxRows`. `idCol` must be
-    * integral when given. */
+    * integral when given. The collect fetches ids and vectors only: the
+    * two hashes are Spark's own `xxhash64` and cast expressions, built
+    * as the distributed fit writes them and evaluated on the driver over
+    * the collected arrays, so an input above the gate spends no hashing
+    * on the rows it discards. An input Spark already knows to hold more
+    * than `maxRows` rows, nulls included, skips the collect. */
   private[operators] def collectHashed(embeddings: DataFrame, vecCol: String,
                                        idCol: Option[String], seed: Long,
                                        maxRows: Int): Option[Array[HashedVec]] = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Literal, XxHash64}
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.StringType
     val v = col(vecCol)
-    DriverCollect.collectAtMost(
-      embeddings.where(v.isNotNull).select(
-        idCol.fold(lit(null).cast("long"))(c => col(c).cast("long")).as("id"),
-        transform(v.cast("array<double>"), x => coalesce(x, lit(0.0d))).as("vec"),
-        array_position(transform(v, _.isNull), true).cast("int").as("firstNull"),
-        xxhash64(v).as("h"),
-        xxhash64(v.cast("string"), lit(seed)).as("ord")).as[HashedVec],
-      maxRows)
+    val vec = BoundReference(0, embeddings.schema(vecCol).dataType, nullable = false)
+    // xxhash64(vec) and xxhash64(cast(vec AS string), seed): the
+    // column function's hash seed is 42, and `seed` is a second input
+    val identity = XxHash64(Seq(vec), 42L)
+    val order = XxHash64(Seq(Cast(vec, StringType), Literal(seed)), 42L)
+    if (DriverCollect.knownAbove(embeddings, maxRows)) None
+    else DriverCollect.collectAtMost(
+      embeddings.where(v.isNotNull)
+        .select(idCol.fold(lit(null).cast("long"))(c => col(c).cast("long")), v),
+      maxRows).map(_.map { r =>
+      val elems = r.getSeq[Any](1).toArray
+      val row = InternalRow(new GenericArrayData(elems))
+      HashedVec(if (r.isNullAt(0)) None else Some(r.getLong(0)),
+        elems.map { case x: java.lang.Number => x.doubleValue(); case _ => 0.0 },
+        elems.indexOf(null) + 1,
+        identity.eval(row).asInstanceOf[Long], order.eval(row).asInstanceOf[Long])
+    })
   }
 
   /** The distributed fit computed on the driver from collected rows:
@@ -280,7 +293,7 @@ object AnnSearch {
       val sums = Array.fill(centroids.length)(new Array[Double](d))
       val counts = new Array[Long](centroids.length)
       rows.foreach { r =>
-        val c = graft.expr.NearestCentroid.closest(r.checked, centroids)._2
+        val c = graft.expr.NearestCentroid.closest(r.checked, centroids)
         val s = sums(c)
         var j = 0
         while (j < d) { s(j) += r.vec(j); j += 1 }

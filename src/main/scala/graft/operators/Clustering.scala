@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
  *
  * Scale story: fitting ([[AnnSearch.kmeansCentroids]]) collects the
  * vectors once and runs k-means on the driver when there are at most
- * [[AnnSearch.DriverFitMaxRows]] of them; above that it collects only
+ * [[DriverCollect.DriverFitMaxRows]] of them; above that it collects only
  * k×dim centroid doubles per iteration (one map + one groupBy per
  * round) and never holds rows. Assignment is a single scan with the
  * centroid matrix as ONE literal (no join, no shuffle); per-cluster

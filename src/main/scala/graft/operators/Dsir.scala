@@ -15,11 +15,11 @@ import org.apache.spark.sql.functions._
  * LM on the target sample and one on the raw pool, and a document's
  * LOG weight is Σ_tokens [log p_target(t) − log p_raw(t)].
  *
- * Scale story: the two fits are [[LmScore.fitUnigram]]s — a sample
- * of up to [[LmScore.DriverFitMaxRows]] rows is counted on the driver
- * from one collect, a larger one in bounded jobs (a token-count
- * aggregation, a scalar aggregate and a TakeOrdered top-vocab — never
- * a full vocabulary collect). Scoring folds the two models into ONE
+ * Scale story: the two fits are [[LmScore.fitUnigram]]s — one
+ * token-count aggregation each, its counts collected to the driver
+ * when the vocabulary fits the model's cap, else two more bounded jobs
+ * (a scalar aggregate and a TakeOrdered top-vocab — never a full
+ * vocabulary collect). Scoring folds the two models into ONE
  * difference model (d(t) = lp_target(t) − lp_raw(t), OOV floor =
  * oov_target − oov_raw) probed row-locally by the native codegen'd
  * `unigram_ppl` expression — one hash probe per token, zero extra

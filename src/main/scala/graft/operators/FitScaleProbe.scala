@@ -24,8 +24,7 @@ import org.apache.spark.sql.functions._
  *    shows up as strongly sublinear wall growth. A ratio NEAR the
  *    data ratio would mean per-row driver work crept in. This holds
  *    above each fit's driver-fit gate
- *    ([[AnnSearch.DriverFitMaxRows]] vectors,
- *    [[QualityClassifier.DriverFitMaxRows]] labeled rows); a smaller
+ *    ([[DriverCollect.DriverFitMaxRows]] vectors or labeled rows); a smaller
  *    input is collected and fit on the driver, so only points above
  *    the gate (the defaults are) measure the distributed fit.
  *
@@ -111,10 +110,10 @@ object FitScaleProbe {
     // regression this probe exists to surface). Each warm-up must
     // clear its fit's driver-fit gate, or the first timed distributed
     // fit pays the distributed path's first-use cost.
-    kmeansPoint(math.max(small / 50, AnnSearch.DriverFitMaxRows + 1L))
+    kmeansPoint(math.max(small / 50, DriverCollect.DriverFitMaxRows + 1L))
     val ks = kmeansPoint(small)
     val kb = kmeansPoint(big)
-    clfPoint(math.max(small / 50, QualityClassifier.DriverFitMaxRows + 1L))
+    clfPoint(math.max(small / 50, DriverCollect.DriverFitMaxRows + 1L))
     val cs = clfPoint(small)
     val cb = clfPoint(big)
     Result(k, dim, vocabCap, ks, kb, cs, cb)

@@ -13,11 +13,12 @@ import org.apache.spark.sql.functions._
  * by orders of magnitude, which is what a bucket-into-quality-tiers
  * stage needs.
  *
- * Scale story: a reference of up to [[LmScore.DriverFitMaxRows]] rows
- * is counted on the driver from one collect of its tokens; a larger
- * one is one token-count aggregation followed by two bounded jobs (a
- * scalar total/vocab aggregate and a TakeOrdered top-`vocabSize`
- * count — never a full vocabulary collect). Scoring has three shapes:
+ * Scale story: a fit is one token-count aggregation. When it yields
+ * at most `vocabSize` distinct tokens, one limit-guarded collect brings
+ * them to the driver, which builds the model; a larger vocabulary
+ * takes two bounded jobs over the cached counts (a scalar total/vocab
+ * aggregate and a TakeOrdered top-`vocabSize` count — never a full
+ * vocabulary collect). Scoring has three shapes:
  * [[perplexityCol]] (the production path — r12) scores ROW-LOCALLY
  * through the native `unigram_ppl` expression: the model rides the
  * plan as one binary literal, deserialized per task into a hash map,
@@ -41,63 +42,50 @@ object LmScore {
   /** Fit on a reference corpus: add-one smoothing over
     * (total tokens + distinct vocabulary + 1 OOV pseudo-type), vocab
     * capped at `vocabSize` with a deterministic (count desc, token
-    * asc) boundary. A reference of at most [[DriverFitMaxRows]] rows
-    * is counted on the driver from one collect of its tokens; a larger
-    * one runs the distributed count. Both give the same model. */
+    * asc) boundary. One token-count aggregation, whose (token, n) rows
+    * are fetched in one limit-guarded collect when there are at most
+    * `vocabSize` of them — the model is then built on the driver, and
+    * the driver holds no more than the distributed path's own final
+    * top-`vocabSize` collect. A larger vocabulary runs the two bounded
+    * jobs over the cached counts. Both give the same model. */
   def fitUnigram(reference: DataFrame, textCol: String,
                  vocabSize: Int = 65536): UnigramLm =
-    fitUnigramGated(reference, textCol, vocabSize, DriverFitMaxRows)
+    fitUnigramGated(reference, textCol, vocabSize, vocabSize)
 
-  /** Reference rows at or below which [[fitUnigram]] counts tokens on
-    * the driver. Each row arrives as ONE string, its non-empty tokens
-    * joined by single spaces (tokens never contain one, so the split
-    * back is exact), so the driver holds about the reference's text
-    * size — 10k documents of 5 KB is ~50 MB — plus one count per
-    * distinct token. */
-  val DriverFitMaxRows: Int = 10000
-
-  /** [[fitUnigram]] with the driver-fit gate as an argument; a
-    * negative gate always runs the distributed count, the reference
-    * the driver path must reproduce. */
+  /** [[fitUnigram]] with the driver-side gate, in distinct tokens, as
+    * an argument; a negative gate always runs the distributed jobs,
+    * the reference the driver path must reproduce. */
   private[operators] def fitUnigramGated(reference: DataFrame, textCol: String,
                                          vocabSize: Int,
-                                         driverFitMaxRows: Int): UnigramLm = {
+                                         driverMaxTokens: Int): UnigramLm = {
     require(vocabSize >= 1, s"vocabSize must be >= 1: $vocabSize")
-    val joined = reference.select(
-      concat_ws(" ", filter(TextFunctions.tokens(col(textCol)), t => t =!= "")))
-    DriverCollect.collectAtMost(joined.as(org.apache.spark.sql.Encoders.STRING),
-        driverFitMaxRows) match {
-      case Some(docs) =>
-        val counts = scala.collection.mutable.HashMap.empty[String, Long]
-        docs.foreach(_.split(' ').foreach { t =>
-          if (t.nonEmpty) counts.update(t, counts.getOrElse(t, 0L) + 1L)
-        })
-        unigramFromLocalCounts(counts, vocabSize)
-      case None =>
-        // ONE exploded-token aggregation (r20, guide §2.3 "aggregate
-        // before you shuffle" / §2.4 "do fewer passes"): the former
-        // shape ran TWO full explode+shuffle passes over the reference
-        // — a scalar count/countDistinct agg AND the per-token count —
-        // when total, vocabulary size and the top-K boundary are all
-        // derivable from the (token, n) counts alone. The counts frame
-        // (one row per distinct token, ≤ vocab cardinality) is
-        // persisted for the two cheap follow-up jobs, then released.
-        val counts = tokenCounts(reference, textCol)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try unigramFromCounts(counts, vocabSize)
-        finally { counts.unpersist(); () }
-    }
+    // ONE exploded-token aggregation (r20, guide §2.3 "aggregate
+    // before you shuffle" / §2.4 "do fewer passes"): total, vocabulary
+    // size and the top-K boundary all derive from the (token, n)
+    // counts. The counts frame (one row per distinct token) is
+    // persisted for the follow-up jobs, then released.
+    val counts = tokenCounts(reference, textCol)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val spark = reference.sparkSession
+      import spark.implicits._
+      DriverCollect.collectAtMost(counts.as[(String, Long)],
+          math.min(driverMaxTokens, Int.MaxValue - 1)) match {
+        case Some(local) => unigramFromLocalCounts(local, vocabSize)
+        case None => unigramFromCounts(counts, vocabSize)
+      }
+    } finally { counts.unpersist(); () }
   }
 
   /** [[unigramFromCounts]] over driver-side counts: the same totals,
     * smoothing and (count desc, token asc) cap, with tokens ordered as
     * Spark orders strings (by UTF-8 bytes, not UTF-16 units). */
-  private def unigramFromLocalCounts(counts: scala.collection.Map[String, Long],
+  private def unigramFromLocalCounts(counts: Array[(String, Long)],
                                      vocabSize: Int): UnigramLm = {
-    val total = counts.valuesIterator.sum
+    val total = counts.iterator.map(_._2).sum
     require(total > 0, "cannot fit a unigram model on an empty reference corpus")
-    val denom = (total + counts.size + 1).toDouble
-    val top = counts.toArray
+    val denom = (total + counts.length + 1).toDouble
+    val top = counts
       .map { case (t, n) => (org.apache.spark.unsafe.types.UTF8String.fromString(t), t, n) }
       .sortWith { case ((ua, _, na), (ub, _, nb)) => na > nb || (na == nb && ua.binaryCompare(ub) < 0) }
       .take(vocabSize)

@@ -27,12 +27,17 @@ import org.apache.spark.sql.functions._
  * whole-stage codegen, and the 100 TB corpus never materializes a
  * feature vector.
  *
- * Where the fit runs: a labeled sample of at most [[DriverFitMaxRows]]
- * rows is collected once, featurized, and solved on the driver; a
- * larger one runs MLlib's distributed LBFGS. At curation sizes
- * (thousands of docs) MLlib launches one Spark job per LBFGS
- * iteration, and per-job latency, not the data, sets the fit's wall
- * time. The driver path is not an approximation: it evaluates MLlib's
+ * Where the fit runs: a labeled sample of at most
+ * [[DriverCollect.DriverFitMaxRows]] rows is collected once, featurized,
+ * and solved on the driver; a larger one runs MLlib's distributed
+ * LBFGS. The driver then holds at most 10k sparse (index, count)
+ * vectors over the capped vocabulary: one (int, double) pair per
+ * distinct in-vocabulary token of each doc, about 120 MB for 10k docs
+ * of 1,000 distinct tokens (twice that while the collected rows are
+ * converted), plus a few dense vocabSize-long arrays for the optimizer.
+ * At curation sizes (thousands of docs) MLlib launches one Spark job
+ * per LBFGS iteration, and per-job latency, not the data, sets the
+ * fit's wall time. The driver path is not an approximation: it evaluates MLlib's
  * own binomial objective (features scaled by 1/σ with virtual
  * centering, mean log-loss, the L2 penalty reverse-standardized
  * because `standardization = false`, intercept unpenalized and started
@@ -48,15 +53,6 @@ object QualityClassifier {
     * tokens contribute 0, plus the intercept. */
   final case class LinearTextModel(weights: Map[String, Double], bias: Double)
 
-  /** Labeled-sample rows (positives + negatives) at or below which
-    * [[fit]] solves on the driver. The driver then holds at most 10k
-    * sparse (index, count) vectors over the capped vocabulary: one
-    * (int, double) pair per distinct in-vocabulary token of each doc,
-    * about 120 MB for 10k docs of 1,000 distinct tokens (twice that
-    * while the collected rows are converted), plus a few dense
-    * vocabSize-long arrays for the optimizer. */
-  val DriverFitMaxRows: Int = 10000
-
   /**
    * Train logistic regression on positive/negative text samples.
    * The vocabulary is the top `vocabSize` tokens of the union sample
@@ -66,7 +62,8 @@ object QualityClassifier {
   def fit(positives: DataFrame, negatives: DataFrame, textCol: String,
           vocabSize: Int = 65536, maxIter: Int = 50,
           regParam: Double = 1e-3): LinearTextModel =
-    fitGated(positives, negatives, textCol, vocabSize, maxIter, regParam, DriverFitMaxRows)
+    fitGated(positives, negatives, textCol, vocabSize, maxIter, regParam,
+      DriverCollect.DriverFitMaxRows)
 
   /** [[fit]] with the driver-fit gate as an argument; 0 always runs
     * MLlib's distributed fit, the reference the driver path must

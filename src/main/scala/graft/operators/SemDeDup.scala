@@ -33,19 +33,24 @@ import org.apache.spark.storage.StorageLevel
  * an unconditional broadcast would be a driver-OOM job-killer, not a
  * slowdown.
  *
- * Small inputs skip all of that: at or below [[DriverFitMaxRows]]
- * non-null embeddings with integral ids, [[dropList]] and
- * [[fitAndDropList]] fetch the rows in ONE limit-guarded collect
- * (ids, vectors and the Spark-computed hashes the distributed plan
- * groups and seeds by) and compute the same fit and drop list on the
- * driver, through the same k-means ([[AnnSearch.kmeansLocal]]), the
+ * Small inputs skip all of that: at or below
+ * [[DriverCollect.DriverFitMaxRows]] non-null embeddings with integral
+ * ids, [[dropList]] and [[fitAndDropList]] fetch ids and vectors in ONE
+ * limit-guarded collect, hash them with the Spark expressions the
+ * distributed plan groups and seeds by, and compute the same fit and
+ * drop list on the driver, through the same k-means ([[AnnSearch.kmeansLocal]]), the
  * same nearest-centroid and cosine kernels and the same union-find
  * [[DupGroups]] uses. The distributed path costs dozens of small Spark
  * jobs (k-means rounds, the identity and pair joins, the component
  * collect, the checkpoint) whose latency, not the data, sets its wall
  * time at that size. The driver
  * path falls back to the distributed drop list when a cluster exceeds
- * `maxClusterSize` (the sub-bucket split stays distributed).
+ * `maxClusterSize` (the sub-bucket split stays distributed). At the
+ * gate the driver holds at most 10k ids and vectors as doubles (1.3 MB
+ * at dim 16, 82 MB at dim 1024), and the gate also bounds the
+ * within-cluster pair loop, which costs O(Σ cluster² · dim): at most
+ * 5·10⁷ cosines when every vector lands in one cluster, about 6·10⁶
+ * at the k = 8 default when clusters are balanced.
  *
  * Embeddings that are null are never compared, grouped or dropped:
  * docs without an embedding are kept.
@@ -173,15 +178,6 @@ object SemDeDup {
     dropListGated(embeddings, vecCol, idCol, centroids, threshold,
       maxClusterSize, seed, MaxBroadcastDropIds)
 
-  /** Non-null embeddings at or below which [[dropList]] and
-    * [[fitAndDropList]] run on the driver. The driver then holds at
-    * most 10k ids and vectors as doubles (1.3 MB at dim 16, 82 MB at
-    * dim 1024). The same gate bounds the within-cluster pair loop,
-    * which costs O(Σ cluster² · dim): at most 5·10⁷ cosines when every
-    * vector lands in one cluster, about 5 million at the k = 8 default
-    * when clusters are balanced. */
-  val DriverFitMaxRows: Int = 10000
-
   /** [[dropList]] with the broadcast ceiling and the driver-path gate
     * as parameters, so specs reach every side of both on a small
     * fixture; a negative `driverFitMaxRows` always runs the
@@ -192,7 +188,7 @@ object SemDeDup {
                                        centroids: Array[Array[Double]],
                                        threshold: Double, maxClusterSize: Int,
                                        seed: Long, maxBroadcast: Long,
-                                       driverFitMaxRows: Int = DriverFitMaxRows): DataFrame = {
+                                       driverFitMaxRows: Int = DriverCollect.DriverFitMaxRows): DataFrame = {
     require(centroids.nonEmpty, "centroids must be non-empty")
     requirePairParams(threshold, maxClusterSize)
     val idType = embeddings.schema(idCol).dataType
@@ -275,8 +271,9 @@ object SemDeDup {
     val repIds = rep.values.toSet
     final case class Assigned(id: Long, dist2: Double, vec: ArrayData)
     val clusters = withId.filter(r => repIds(r.id.get)).map { r =>
-      val (d2, c) = graft.expr.NearestCentroid.closest(r.checked, centroids)
-      c -> Assigned(r.id.get, d2, ArrayData.toArrayData(r.vec))
+      val c = graft.expr.NearestCentroid.closest(r.checked, centroids)
+      c -> Assigned(r.id.get, graft.expr.NearestCentroid.dist2(r.vec, centroids(c)),
+        ArrayData.toArrayData(r.vec))
     }.groupMap(_._1)(_._2).values.toArray
     if (clusters.exists(_.length > maxClusterSize)) return None
 
@@ -347,14 +344,14 @@ object SemDeDup {
       col(idCol) === col("_drop_id"), "left_anti")
 
   /** [[Clustering.fit]] followed by [[dropList]]: the fitted centroids
-    * and the drop list they produce. Below [[DriverFitMaxRows]] the fit
+    * and the drop list they produce. Below [[DriverCollect.DriverFitMaxRows]] the fit
     * and the drop list share one collect. */
   def fitAndDropList(embeddings: DataFrame, vecCol: String, idCol: String,
                      k: Int, iters: Int = 5, fitSeed: Long = 42L,
                      threshold: Double = 0.95, maxClusterSize: Int = 20000,
                      seed: Long = 42L): (Array[Array[Double]], DataFrame) =
     fitAndDropListGated(embeddings, vecCol, idCol, k, iters, fitSeed, threshold,
-      maxClusterSize, seed, DriverFitMaxRows)
+      maxClusterSize, seed, DriverCollect.DriverFitMaxRows)
 
   /** [[fitAndDropList]] with the driver-path gate as an argument; a
     * negative gate runs the distributed fit and drop list. */

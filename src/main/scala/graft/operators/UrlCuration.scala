@@ -213,9 +213,9 @@ object UrlCuration {
    * falls back to the classic one-window formulation (one full shuffle
    * on domain), which is correct at any hot-set size.
    *
-   * Step 1 is the only eager query; [[hotDomains]] and [[capToHotSet]]
-   * split it from the lazy cap, so a caller that builds the capped
-   * frame twice over the same rows runs it once.
+   * Step 1 is the only eager query; the internal `hotDomains` and
+   * `capToHotSet` split it from the lazy cap, so curation, which builds
+   * the capped frame twice over the same rows, runs it once.
    */
   def capPerDomain(df: DataFrame, urlCol: String, idCol: String,
                    maxPerDomain: Int,
@@ -227,8 +227,8 @@ object UrlCuration {
   /** The registered domains of `df` holding more than `maxPerDomain`
     * rows — [[capPerDomain]]'s one eager query — or None when there
     * are more than `maxHotDomains` of them (the window fallback). */
-  def hotDomains(df: DataFrame, urlCol: String, maxPerDomain: Int,
-                 maxHotDomains: Int = 100000): Option[Array[String]] = {
+  private[graft] def hotDomains(df: DataFrame, urlCol: String, maxPerDomain: Int,
+                                maxHotDomains: Int = 100000): Option[Array[String]] = {
     require(maxPerDomain > 0, s"capPerDomain: cap must be positive, got $maxPerDomain")
     // null-host rows have no domain to cap; they pass through (the
     // blocklist's dropUnparseable is the knob that drops them)
@@ -241,12 +241,12 @@ object UrlCuration {
       maxHotDomains).map(_.map(_.getString(0)))
   }
 
-  /** [[capPerDomain]] against a precomputed [[hotDomains]] result for
-    * the same rows: builds the cap with no Spark job. */
-  def capToHotSet(df: DataFrame, urlCol: String, idCol: String, maxPerDomain: Int,
-                  hot: Option[Array[String]],
-                  orderKey: Option[Column] = None): DataFrame = {
-    require(maxPerDomain > 0, s"capPerDomain: cap must be positive, got $maxPerDomain")
+  /** [[capPerDomain]] against the [[hotDomains]] result of the SAME
+    * rows and cap (which also checks the cap): builds the cap with no
+    * Spark job. */
+  private[graft] def capToHotSet(df: DataFrame, urlCol: String, idCol: String,
+                                 maxPerDomain: Int, hot: Option[Array[String]],
+                                 orderKey: Option[Column] = None): DataFrame = {
     graft.expr.GraftFunctions.ensure(df.sparkSession)  // top_k_rows
     val dom = registeredDomain(urlHost(col(urlCol)))
     // exact in both engines: ids up to ~3.4e9 stay under Long overflow,

@@ -94,7 +94,7 @@ class ClusteringSpec extends SparkSpec {
       if (i % 20 == 19) null else Array.fill(8)(rnd.nextDouble()))).toDF("id", "embedding")
     Seq((embeddings, 4, 3), (embeddings, 8, 2), (doubles, 3, 2), (embeddings, 4, 0)).foreach {
       case (e, k, iters) =>
-        val driver = AnnSearch.kmeansGated(e, "embedding", k, iters, 42L, AnnSearch.DriverFitMaxRows)
+        val driver = AnnSearch.kmeansGated(e, "embedding", k, iters, 42L, DriverCollect.DriverFitMaxRows)
         val reference = AnnSearch.kmeansGated(e, "embedding", k, iters, 42L, -1)
         assert(driver.length == k && close(driver, reference), s"k=$k iters=$iters")
     }
@@ -117,7 +117,23 @@ class ClusteringSpec extends SparkSpec {
     // vector is drawn as a seed; the driver fit names the element
     intercept[Exception](AnnSearch.kmeansGated(bad, "embedding", 2, 1, 42L, -1))
     val ex = intercept[IllegalArgumentException](
-      AnnSearch.kmeansGated(bad, "embedding", 2, 1, 42L, AnnSearch.DriverFitMaxRows))
+      AnnSearch.kmeansGated(bad, "embedding", 2, 1, 42L, DriverCollect.DriverFitMaxRows))
     assert(ex.getMessage.contains("null element at 1"), ex)
+  }
+
+  test("an input Spark knows to exceed the gate skips the driver probe") {
+    // a materialized cache carries its row count, so a gate below it
+    // goes straight to the distributed fit: the reference's queries,
+    // not one more
+    val cached = embeddings.persist()
+    try {
+      val n = cached.count()
+      val (skipped, skipQueries) = queriesOf(
+        AnnSearch.kmeansGated(cached, "embedding", 4, 2, 42L, (n - 1).toInt))
+      val (reference, refQueries) = queriesOf(
+        AnnSearch.kmeansGated(cached, "embedding", 4, 2, 42L, -1))
+      assert(close(skipped, reference))
+      assert(skipQueries == refQueries, s"gated $skipQueries queries, reference $refQueries")
+    } finally { cached.unpersist(); () }
   }
 }

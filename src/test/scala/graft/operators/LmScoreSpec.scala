@@ -218,8 +218,12 @@ class LmScoreSpec extends SparkSpec {
 
   // ── driver-side fit vs the distributed reference ──────────────────
 
-  private def bothFits(ref: org.apache.spark.sql.DataFrame, vocabSize: Int = 65536) =
-    (LmScore.fitUnigramGated(ref, "text", vocabSize, LmScore.DriverFitMaxRows),
+  /** (driver fit, public fit, distributed reference): the first runs
+    * the driver path whatever the vocabulary, the second takes the
+    * driver path only when the vocabulary fits `vocabSize`. */
+  private def fits(ref: org.apache.spark.sql.DataFrame, vocabSize: Int = 65536) =
+    (LmScore.fitUnigramGated(ref, "text", vocabSize, 1000000),
+      LmScore.fitUnigram(ref, "text", vocabSize),
       LmScore.fitUnigramGated(ref, "text", vocabSize, -1))
 
   test("driver and distributed unigram fits give identical models, ties at the cap included") {
@@ -227,22 +231,70 @@ class LmScoreSpec extends SparkSpec {
     // "b", "c", U+FF41 and U+1F600 tie at count 2 behind "a". The
     // (count desc, token asc) cap keeps "b" at 2 and U+FF41 at 4: it
     // sorts before U+1F600 in Spark's UTF-8 byte order but after it in
-    // Java's UTF-16 order.
+    // Java's UTF-16 order. Every cap below 7 is under the vocabulary,
+    // so the public fit takes the distributed jobs there.
     val ties = Seq("a a b c d", "a b c", null, "  ", "\uff41 \ud83d\ude00 \uff41 \ud83d\ude00 z")
       .toDF("text")
     Seq((real, 65536), (real, 5), (ties, 2), (ties, 3), (ties, 4), (ties, 100)).foreach {
       case (ref, cap) =>
-        val (driver, reference) = bothFits(ref, cap)
+        val (driver, public, reference) = fits(ref, cap)
         assert(driver == reference, s"cap $cap: driver ${driver.logProbs.keys} vs " +
           s"reference ${reference.logProbs.keys}")
+        assert(public == reference, s"cap $cap")
     }
-    assert(bothFits(ties, 2)._1.logProbs.keySet == Set("a", "b"))
-    assert(bothFits(ties, 4)._1.logProbs.keySet == Set("a", "b", "c", "\uff41"))
+    assert(fits(ties, 2)._1.logProbs.keySet == Set("a", "b"))
+    assert(fits(ties, 4)._1.logProbs.keySet == Set("a", "b", "c", "\uff41"))
     // a corpus of no tokens fails on both paths
     val blank = Seq("  ", "").toDF("text")
-    Seq(LmScore.DriverFitMaxRows, -1).foreach { gate =>
+    Seq(1000000, -1).foreach { gate =>
       intercept[IllegalArgumentException](LmScore.fitUnigramGated(blank, "text", 10, gate))
     }
+  }
+
+  test("driver unigram fit fetches the vocabulary, not the text") {
+    // 40 documents of ~200 KB over a 300-word vocabulary: 8 MB of text
+    // whose counts are 300 short rows
+    val long = spark.range(40).select(concat_ws(" ",
+      transform(sequence(lit(0), lit(39999)),
+        i => concat(lit("w"), pmod(xxhash64(col("id"), i), lit(300L)).cast("string"))))
+      .as("text"))
+    val sc = spark.sparkContext
+    val tag = s"lm-long-${java.util.UUID.randomUUID()}"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val resultBytes = new java.util.concurrent.atomic.AtomicLong(0L)
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val p = Option(js.properties)
+        if (p.flatMap(x => Option(x.getProperty("spark.job.tags"))).exists(_.split(",").contains(tag))) {
+          js.stageIds.foreach(stages.add)
+          if (p.flatMap(x => Option(x.getProperty("spark.job.description"))).contains(tag))
+            sentinel.countDown()
+        }
+      }
+      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (stages.contains(te.stageId) && te.taskMetrics != null)
+          resultBytes.addAndGet(te.taskMetrics.resultSize)
+    }
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    val driver = try {
+      val lm = LmScore.fitUnigram(long, "text")
+      // events arrive in order: once the sentinel job's start is seen,
+      // every earlier tagged task's end has been counted
+      sc.setJobDescription(tag)
+      sc.parallelize(Seq(1), 1).count()
+      assert(sentinel.await(10, java.util.concurrent.TimeUnit.SECONDS))
+      lm
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(listener)
+    }
+    assert(driver == LmScore.fitUnigramGated(long, "text", 65536, -1))
+    assert(driver.logProbs.size == 300)
+    assert(resultBytes.get() > 0 && resultBytes.get() < 1000000L,
+      s"the fit's tasks returned ${resultBytes.get()} bytes for 8 MB of text")
   }
 
   test("driver unigram fit: fewer jobs than the distributed fit, nothing persisted") {

@@ -86,7 +86,7 @@ class QualityClassifierSpec extends SparkSpec {
                         vocabSize: Int, maxIter: Int) = {
     def fitWith(gate: Int) = QualityClassifier.fitGated(pos, neg, "text", vocabSize, maxIter,
       regParam = 1e-3, driverFitMaxRows = gate)
-    (fitWith(QualityClassifier.DriverFitMaxRows), fitWith(0))
+    (fitWith(DriverCollect.DriverFitMaxRows), fitWith(0))
   }
 
   private def assertSameModel(driver: QualityClassifier.LinearTextModel,

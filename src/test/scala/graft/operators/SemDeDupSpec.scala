@@ -231,7 +231,7 @@ class SemDeDupSpec extends SparkSpec {
     def run(gate: Int) = SemDeDup.dropListGated(e, "embedding", idCol, cents, threshold,
       maxClusterSize, seed = 42L, maxBroadcast = SemDeDup.MaxBroadcastDropIds,
       driverFitMaxRows = gate)
-    (run(SemDeDup.DriverFitMaxRows), run(-1))
+    (run(DriverCollect.DriverFitMaxRows), run(-1))
   }
 
   /** The curation benchmark's embedding shape: `n` random vectors in
@@ -289,7 +289,7 @@ class SemDeDupSpec extends SparkSpec {
       def fit(gate: Int) = SemDeDup.fitAndDropListGated(e, "embedding", "vec_id", k = 8,
         iters = 3, fitSeed = 42L, threshold = 0.95, maxClusterSize = 20000, seed = 42L,
         driverFitMaxRows = gate)
-      val (dc, dd) = fit(SemDeDup.DriverFitMaxRows)
+      val (dc, dd) = fit(DriverCollect.DriverFitMaxRows)
       val (rc, rd) = fit(-1)
       assert(isLocal(dd) && !isLocal(rd))
       assert(dc.length == rc.length && dc.zip(rc).forall { case (a, b) =>
@@ -321,7 +321,7 @@ class SemDeDupSpec extends SparkSpec {
       val (driver, reference) = bothPaths(e, "vec_id", centroids, 0.95)
       assert(isLocal(driver) && dropSet(driver).isEmpty && dropSet(reference).isEmpty)
       // no vector to seed from: both fits fail the same way
-      Seq(SemDeDup.DriverFitMaxRows, -1).foreach { gate =>
+      Seq(DriverCollect.DriverFitMaxRows, -1).foreach { gate =>
         intercept[IllegalArgumentException](SemDeDup.fitAndDropListGated(e, "embedding",
           "vec_id", k = 2, iters = 2, fitSeed = 42L, threshold = 0.95,
           maxClusterSize = 20000, seed = 42L, driverFitMaxRows = gate))
@@ -337,7 +337,7 @@ class SemDeDupSpec extends SparkSpec {
         driverFitMaxRows = gate)
     }._2.size
     val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val driverJobs = run(SemDeDup.DriverFitMaxRows)
+    val driverJobs = run(DriverCollect.DriverFitMaxRows)
     assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == before,
       "the driver path must persist nothing")
     val referenceJobs = run(-1)
